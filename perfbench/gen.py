@@ -69,43 +69,6 @@ def residualize(x: np.ndarray, covars: np.ndarray, fit_rows: np.ndarray) -> np.n
     return x - design @ betas
 
 
-def write_gold(g: Genotypes, out_dir: str, train_frac: float = 0.8) -> tuple[str, str]:
-    """Train/test gold matrix tables in the layout ``sources.plink.write_matrix``
-    produces: ``<dir>/fact.parquet`` + ``<dir>/cols.parquet``. Features are
-    covariate-adjusted with the least-squares oracle fitted on train."""
-    n, p = g.x.shape
-    is_train = np.random.default_rng([g.seed, 2]).uniform(size=n) < train_frac
-    adj = residualize(g.x, g.covars, is_train).astype(np.float32)
-    lbl = g.label.astype(np.float32)
-    y_adj = residualize(lbl[:, None], g.covars, is_train)[:, 0].astype(np.float32)
-    cols = pa.table({"pos": pa.array(range(p), pa.int32()), "snp": [f"rs{j}_A" for j in range(p)]})
-    paths = []
-    for name, mask in (("gold_train", is_train), ("gold_test", ~is_train)):
-        rows = np.flatnonzero(mask)
-        fact = pa.table(
-            {
-                "row_idx": pa.array(rows, pa.int64()),
-                "fid": [f"F{i}" for i in rows],
-                "iid": [f"I{i}" for i in rows],
-                "pat": ["0"] * len(rows),
-                "mat": ["0"] * len(rows),
-                "sex": pa.array((1 + rows % 2).astype(np.float32)),
-                "phenotype": pa.array(lbl[rows] + 1),
-                "label": pa.array(lbl[rows]),
-                "features": pa.array(list(g.x[rows].astype(np.float32)), pa.list_(pa.float32())),
-                "features_adj": pa.array(list(adj[rows]), pa.list_(pa.float32())),
-                "label_adj": pa.array(y_adj[rows]),
-            }
-        )
-        path = os.path.join(out_dir, name)
-        os.makedirs(f"{path}/fact.parquet", exist_ok=True)
-        os.makedirs(f"{path}/cols.parquet", exist_ok=True)
-        pq.write_table(fact, f"{path}/fact.parquet/part-0.parquet")
-        pq.write_table(cols, f"{path}/cols.parquet/part-0.parquet")
-        paths.append(path)
-    return paths[0], paths[1]
-
-
 # ---------------------------------------------------------------- documents
 
 # The near-dup lanes read every table of a catalog directory, so the

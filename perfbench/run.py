@@ -1,15 +1,16 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload neardup --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload neardup --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout. Generates the workload's inputs from the
 seed, starts a Spark session through ``daxos_spark.session.get_spark``,
-runs the fixed warm-up passes, then the timed passes, checks every
-output, and prints one JSON object as the last line of stdout. With
-``--trace 1`` the metrics are the per-layer ones (see tracing.py); without,
-the end-to-end ones. Everything the run writes goes to a scratch directory
-under ``.bench_work/`` in the checkout, removed on exit; a traced run keeps
-its spans in ``.bench_work/spans-<workload>-<seed>.json``.
+runs one pass of the workload's pipeline in that fresh session (what one
+invocation of the program costs), checks every output, and prints one JSON
+object as the last line of stdout. With ``--trace 1`` the metrics are the
+per-layer ones (see tracing.py); without, the end-to-end ones. Everything
+the run writes goes to a scratch directory under ``.bench_work/`` in the
+checkout, removed on exit; a traced run keeps its spans in
+``.bench_work/spans-<workload>-<seed>.json``.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ import gc  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
-import statistics  # noqa: E402
 import sys  # noqa: E402
 import traceback  # noqa: E402
 from pathlib import Path  # noqa: E402
@@ -33,21 +33,16 @@ from workloads import WORKLOADS  # noqa: E402
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
-WARMUP_PASSES = 1
 DRIVER_MEM = "2g"
-
-
-def timed_passes(seconds: int, nominal_pass_s: float) -> int:
-    """Fixed for a given ``--seconds``: passes of the workload's nominal
-    length that fit in the measuring window, at least one."""
-    return max(1, round(seconds / nominal_pass_s))
 
 
 def pin_environment(work: Path) -> dict:
     """Settings ``daxos_spark.session`` reads at import time, so this runs
-    before it is imported: task slots ≤ nproc, a driver heap well under
-    the box's RAM, and Spark scratch space inside the run's directory."""
-    cpus = len(os.sched_getaffinity(0))
+    before it is imported: task slots one fewer than the process's CPUs, a
+    driver heap well under the box's RAM, and Spark scratch space inside the
+    run's directory. The spare CPU runs the Python driver, the JIT compiler
+    and GC threads, which otherwise queue behind tasks on a cold pass."""
+    cpus = max(1, len(os.sched_getaffinity(0)) - 1)
     env = {
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEM,
@@ -103,7 +98,6 @@ def run(args, work: Path) -> dict:
     cls = WORKLOADS[args.workload]
     tracer = Tracer()
     wl = cls(args.seed, str(work))
-    n_timed = timed_passes(args.seconds, cls.nominal_pass_s)
     conf = {
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": str(work / "warehouse"),
@@ -125,64 +119,53 @@ def run(args, work: Path) -> dict:
             tracer.attach(spark.sparkContext)
             wl.trace(tracer)
         ops = wl.ops()
+        gc.collect()
+        setup_s = time.monotonic() - T_START
+        tracer.phase = "pass"
+        ticks = cpu_ticks()
 
-        attempted = failed = 0
-        pass_s, quality, problems = [], [], []
-        for i in range(WARMUP_PASSES + n_timed):
-            timed = i >= WARMUP_PASSES
-            if i == WARMUP_PASSES:
-                setup_s = time.monotonic() - T_START
-                tracer.phase = "timed"
-                ticks = cpu_ticks()
-            gc.collect()
-            out, elapsed = {}, 0.0
-            for name, layer, op in ops:
-                t0 = time.monotonic()
-                try:
-                    with tracer.span(layer, name):
-                        out[name] = op(spark)
-                except Exception:
-                    traceback.print_exc()
-                    failed += timed
-                elapsed += time.monotonic() - t0
-                attempted += timed
-            if timed:
-                pass_s.append(elapsed)
-            if len(out) < len(ops):
-                problems.append(f"pass {i}: {len(ops) - len(out)} operation(s) failed")
-                continue
-            q, bad = wl.check(out)
-            problems += [f"pass {i}: {p}" for p in bad]
-            if timed:
-                quality.append(q)
+        failed = 0
+        out, op_s = {}, {}
+        for name, layer, op in ops:
+            t0 = time.monotonic()
+            try:
+                with tracer.span(layer, name):
+                    out[name] = op(spark, out)
+            except Exception:
+                traceback.print_exc()
+                failed += 1
+            op_s[name] = time.monotonic() - t0
+        pass_s = sum(op_s.values())
         steal = steal_share(ticks, cpu_ticks())
+        if failed:
+            quality, problems, recorded = 0.0, [f"{failed} of {len(ops)} operations failed"], {}
+        else:
+            quality, problems, recorded = wl.check(out)
     finally:
         shutdown(spark)
 
     for p in problems:
         print(f"check failed: {p}", file=sys.stderr)
-    median_pass = statistics.median(pass_s)
     if args.trace:
         (ROOT / ".bench_work" / f"spans-{args.workload}-{args.seed}.json").write_text(json.dumps(tracer.spans))
         (event_log,) = event_dir.iterdir()
-        values = layer_metrics(tracer.spans, str(event_log), n_timed)
+        values = layer_metrics(tracer.spans, str(event_log))
         metrics = {k: {"value": values[k], "unit": u} for k, u in metric_units().items()}
-        metrics["traced.pass_s"] = {"value": median_pass, "unit": "s"}
+        metrics["traced.pass_s"] = {"value": pass_s, "unit": "s"}
     else:
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
-            "pass_s": {"value": median_pass, "unit": "s"},
-            "items_per_s": {"value": wl.items / median_pass, "unit": "1/s"},
-            "quality": {"value": min(quality) if quality else 0.0, "unit": "score"},
+            "pass_s": {"value": pass_s, "unit": "s"},
+            "items_per_s": {"value": wl.items / pass_s, "unit": "1/s"},
+            "quality": {"value": quality, "unit": "score"},
         }
     print(json.dumps({"env": env | {
-        "workload": args.workload, "seed": args.seed, "warmup_passes": WARMUP_PASSES,
-        "timed_passes": n_timed, "items": wl.items, "item": cls.item, "pass_s": pass_s,
-        "host_cpu_steal_share": steal,
-    }}))
+        "workload": args.workload, "seed": args.seed, "seconds": args.seconds, "passes": 1,
+        "items": wl.items, "item": cls.item, "op_s": op_s, "host_cpu_steal_share": steal,
+    } | recorded}))
     return {
-        "correct": not problems and failed == 0,
-        "attempted": attempted,
+        "correct": not problems,
+        "attempted": len(ops),
         "failed": failed,
         "metrics": metrics,
     }

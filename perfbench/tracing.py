@@ -16,10 +16,11 @@ import time
 from collections import defaultdict
 from contextlib import contextmanager
 
-# Layers whose work happens while the run sets up; their metrics cover the
-# setup phase. Every other layer's metrics are per timed pass.
-SETUP_LAYERS = ("session", "catalog")
+# The layer whose work happens while the run sets up; its metrics cover the
+# setup phase. Every other layer's metrics cover the measured pass.
+SETUP_LAYERS = ("session",)
 PASS_LAYERS = (
+    "catalog",
     "pipeline",
     "sources.plink",
     "sources.tables",
@@ -153,11 +154,11 @@ def _read_event_log(path: str) -> dict[int, dict]:
     return out
 
 
-def layer_metrics(spans: list[dict], event_log: str, timed_passes: int) -> dict[str, float]:
+def layer_metrics(spans: list[dict], event_log: str) -> dict[str, float]:
     """Aggregate spans and their charged jobs into ``<layer>.<metric>``.
 
-    Pass layers: sums over the timed-pass spans divided by the number of
-    timed passes. Setup layers: sums over the setup spans. ``wall_s``
+    Pass layers: sums over the spans of the measured pass. Setup layers:
+    sums over the setup spans. ``wall_s``
     counts a span only when no ancestor has the same layer; ``self_s`` is
     each span's duration minus the time its child spans cover.
     """
@@ -180,15 +181,13 @@ def layer_metrics(spans: list[dict], event_log: str, timed_passes: int) -> dict[
     out = {name: 0.0 for name in units}
     for s in spans:
         layer = s["layer"]
-        in_scope = s["phase"] == ("setup" if layer in SETUP_LAYERS else "timed")
-        if not in_scope:
+        if s["phase"] != ("setup" if layer in SETUP_LAYERS else "pass"):
             continue
-        scale = 1.0 if layer in SETUP_LAYERS else 1.0 / timed_passes
         dur = s["end"] - s["start"]
-        out[f"{layer}.calls"] += scale
+        out[f"{layer}.calls"] += 1
         if outermost(s):
-            out[f"{layer}.wall_s"] += dur * scale
-        out[f"{layer}.self_s"] += (dur - child_time[s["id"]]) * scale
+            out[f"{layer}.wall_s"] += dur
+        out[f"{layer}.self_s"] += dur - child_time[s["id"]]
         for key, v in jobs.get(s["id"], {}).items():
             name = f"{layer}.{key}"
             if name not in out:
@@ -196,5 +195,5 @@ def layer_metrics(spans: list[dict], event_log: str, timed_passes: int) -> dict[
             if key == "peak_exec_mb":
                 out[name] = max(out[name], v)
             else:
-                out[name] += v * scale
+                out[name] += v
     return out
