@@ -20,29 +20,12 @@ from pyspark.sql import functions as F
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 10,
-    n_edges: int | None = None,
+    edges: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 10
 ) -> DataFrame:
     """→ (node, component) where component = min node id reachable.
 
     ``edges`` is undirected input (each pair once is fine). Nodes are
     whatever appears in ``src``/``dst``.
-
-    ``n_edges``: approximate count of INPUT EDGE ROWS — one row per
-    undirected pair, exactly what ``edges.count()`` would return (the
-    function doubles it internally to size the both-directions
-    propagation relation; do NOT pre-double). Pass it when the caller
-    already knows it (e.g. it counted the pair relation while
-    materializing it) — skips the sizing probe's extra count() job,
-    which on one-shot small graphs can outweigh the per-round
-    scheduling savings it buys. ``None`` keeps the self-probing
-    behavior. NOTE: no registered query currently has a free count to
-    pass (their edge relations are persisted but never counted before
-    CC, so the probe doubles as the cache materializer); the knob is
-    for library consumers that maintain edge-count statistics.
     """
     # localCheckpoint (not persist): materializes the propagation
     # relation AND truncates its logical lineage, so every round's plan
@@ -66,10 +49,7 @@ def connected_components(
     # ~10 sequential jobs of ~2k rows each dominated the CC share of
     # t_dedup_best_keep). One up-front count of the cached edge list
     # picks ~100k edges/partition; big graphs keep full parallelism.
-    # (×2: the caller's count is per-pair, the propagation relation is
-    # both directions — same order of magnitude, which is all the
-    # partition heuristic reads.)
-    n_edges = 2 * n_edges if n_edges is not None else both.count()
+    n_edges = both.count()
     parts = max(1, min(both.rdd.getNumPartitions(), n_edges // 100_000 + 1))
     if parts < both.rdd.getNumPartitions():
         # lazy: materialized by the initial label-sum job below

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
-from .registry import QuerySpec, register, sql_trunc6, trunc6
+from .registry import QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
 
 
 def _q(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
@@ -358,9 +358,7 @@ def _trajectory_sql(panel_clause: str) -> str:
     """
 
 
-def _trajectory_knn_lazy(
-    spark: SparkSession, sf_dir: str, fixed_panel: bool, persist: bool = True
-):
+def _trajectory_knn_lazy(spark: SparkSession, sf_dir: str, fixed_panel: bool):
     """Shared trajectory-kNN pipeline; returns (result, tr) so callers
     can release the transition-relation cache once the tiny output is
     materialized. ``fixed_panel`` picks the constant-size hash-ranked
@@ -380,9 +378,8 @@ def _trajectory_knn_lazy(
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if persist:
-        # feeds norms, probe panel, and the inner-product join
-        tr = tr.persist()
+    # feeds norms, probe panel, and the inner-product join
+    tr = tr.persist()
     nrm = tr.groupBy("user_id").agg(F.sum(F.col("cnt") * F.col("cnt")).cast("bigint").alias("nn"))
     if fixed_panel:
         # constant-size panel: _TRAJ_PANEL_N users with the smallest
@@ -447,9 +444,7 @@ def _trajectory_knn_lazy(
 def q_trajectory_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, tr = _trajectory_knn_lazy(spark, sf_dir, fixed_panel=False)
     # output is probes×3 rows — eager-materialize, release the corpus cache
-    out = out.localCheckpoint(eager=True)
-    tr.unpersist()
-    return out
+    return checkpoint_release(out, [tr])
 
 
 @_q(
@@ -468,19 +463,7 @@ def q_trajectory_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_trajectory_knn_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, tr = _trajectory_knn_lazy(spark, sf_dir, fixed_panel=True)
-    out = out.localCheckpoint(eager=True)
-    tr.unpersist()
-    return out
-
-
-from .registry import ALL_SPECS as _SPECS  # noqa: E402
-
-_SPECS["q_trajectory_knn"].lazy_plan = (
-    lambda spark, sf_dir: _trajectory_knn_lazy(spark, sf_dir, False, persist=False)[0]
-)
-_SPECS["q_trajectory_knn_panel"].lazy_plan = (
-    lambda spark, sf_dir: _trajectory_knn_lazy(spark, sf_dir, True, persist=False)[0]
-)
+    return checkpoint_release(out, [tr])
 
 
 # --------------------------------------------------------------------------

@@ -20,7 +20,7 @@ from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
 from ..multimodal.columns import attach_blob, sample_frames
 from .docpipe import _fanout
-from .registry import ALL_SPECS, QuerySpec, checkpoint_release, register
+from .registry import QuerySpec, checkpoint_release, register
 
 _FRAME_BYTES = 256
 _STRIDE = 2
@@ -376,7 +376,7 @@ _NEARDUP_MIN_SHARED = 3
     doc="binary-asset near-dup via shared CDC chunks (>=3): chunk-hash "
     "inverted-index join, the backup-dedup primitive",
 )
-def m_asset_neardup(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def m_asset_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..functions.hashing import md5_long
@@ -422,9 +422,8 @@ def m_asset_neardup(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         .select("doc_id", md5_long(F.col("chunk")).alias("ch_hash"))
         .distinct()
     )
-    if persist:
-        # both sides of the inverted-index join
-        ch = ch.persist()
+    # both sides of the inverted-index join
+    ch = ch.persist()
     a, b = ch.alias("a"), ch.alias("b")
     pairs = (
         a.join(
@@ -442,14 +441,7 @@ def m_asset_neardup(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         F.max("shared").cast("bigint").alias("max_shared"),
         (F.countDistinct("da") + F.countDistinct("db")).alias("n_involved_upper"),
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [ch])
-
-
-ALL_SPECS["m_asset_neardup"].lazy_plan = (
-    lambda spark, sf_dir: m_asset_neardup(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------

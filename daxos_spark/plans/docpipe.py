@@ -28,7 +28,7 @@ from ..functions.hashing import (
     simhash32,
     word_shingles,
 )
-from .registry import checkpoint_release, ALL_SPECS, QuerySpec, register, sql_davg, sql_trunc6, trunc6
+from .registry import checkpoint_release, QuerySpec, register, sql_davg, sql_trunc6, trunc6
 
 _NORM = "lower(trim(text))"
 _TOKS = f"string_split_regex({_NORM}, '\\s+')"
@@ -240,11 +240,10 @@ def d_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked GROUP BY source ORDER BY source
     """,
 )
-def d_incremental_dedup(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir)["documents"]
     f = d.select("doc_id", "source", T.fingerprint(F.col("text")).alias("fp"))
-    if persist:
-        f = f.persist()
+    f = f.persist()
     half = f.agg((F.max("doc_id") / 2).alias("h"))
     corpus = f.join(F.broadcast(half), F.col("doc_id") < F.col("h")).select("fp")
     batch = f.join(F.broadcast(half), F.col("doc_id") >= F.col("h")).select(
@@ -270,14 +269,7 @@ def d_incremental_dedup(spark: SparkSession, sf_dir: str, persist: bool = True) 
         )
         .orderBy("source")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [f])
-
-
-ALL_SPECS["d_incremental_dedup"].lazy_plan = (
-    lambda spark, sf_dir: d_incremental_dedup(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -367,9 +359,7 @@ def _cap_hot_shingles(
 _PAIR_SEG = 2048
 
 
-def _bucket_pairs(
-    bkt: DataFrame, seg: int = _PAIR_SEG, max_members: int | None = None
-) -> DataFrame:
+def _bucket_pairs(bkt: DataFrame, seg: int = _PAIR_SEG) -> DataFrame:
     """i<j member-pair stream (columns pa, pb) of each bucket row's
     sorted member array ``ds`` (members unique within a bucket).
 
@@ -386,13 +376,11 @@ def _bucket_pairs(
     units is precisely the bucket's i<j pair multiset, so downstream
     counts/distincts are unchanged.
 
-    ``max_members``: when a caller KNOWS a bound on bucket size that
-    fits one segment, the guarded unit machinery is provably an
-    identity and the in-place form is returned as the whole pair
-    stream. The production lanes pass None (full guarded plan,
-    unconditional): a 1-row max-size probe was measured and rejected —
-    the extra action splits the cache-build pipeline for more than the
-    skipped empty stages return (see OPTIMIZATION_r12.md).
+    The guarded plan runs unconditionally: a 1-row max-size probe that
+    returned the in-place form when every bucket fits one segment was
+    measured and rejected — the extra action splits the cache-build
+    pipeline for more than the skipped empty stages return (see
+    OPTIMIZATION_r12.md).
 
     Guarded-form structure (all measured, round 12): small buckets
     become ONE diagonal unit of themselves (no exchange) and oversized
@@ -410,8 +398,6 @@ def _bucket_pairs(
     straggler this helper exists to break); a user-specified count is
     exempt. NOTE: the guarded form scans ``bkt`` twice (small +
     oversized filter) — callers persist the bucket relation."""
-    if max_members is not None and max_members <= seg:
-        return _inplace_pairs(bkt)
     small_units = bkt.filter(F.size("ds") <= seg).select(
         F.col("ds").alias("ua"), F.col("ds").alias("ub"), F.lit(True).alias("diag")
     )
@@ -528,7 +514,7 @@ def _capped_stream(
     LIMIT 20
     """,
 )
-def d_jaccard_pairs(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def d_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     # the shingle inverted index feeds four consumers (DF cap, sizes,
     # both sides of the self-join) — persist it instead of recomputing
@@ -540,8 +526,7 @@ def d_jaccard_pairs(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         "source",
         F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s"),
     )
-    if persist:
-        sh0 = sh0.persist()
+    sh0 = sh0.persist()
     sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
@@ -569,14 +554,7 @@ def d_jaccard_pairs(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         .orderBy(F.col("jaccard").desc(), "da", "db")
         .limit(20)
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [sh0])
-
-
-ALL_SPECS["d_jaccard_pairs"].lazy_plan = (
-    lambda spark, sf_dir: d_jaccard_pairs(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -685,7 +663,6 @@ def _lsh_candidates_oracle(bucket_cap: int = _LSH_BUCKET_CAP) -> str:
 def d_lsh_candidates(
     spark: SparkSession,
     sf_dir: str,
-    persist: bool = True,
     bucket_cap: int | None = _LSH_BUCKET_CAP,
 ) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
@@ -697,8 +674,7 @@ def d_lsh_candidates(
     sh0 = d.select(
         "doc_id", F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s")
     )
-    if persist:
-        sh0 = sh0.persist()
+    sh0 = sh0.persist()
     sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
     # ONE doc-keyed aggregate serves FOUR former consumers of the
     # shingle stream (optimization round 11, guide §2.3/§2.4): the
@@ -713,8 +689,7 @@ def d_lsh_candidates(
     # only array_min / size / intersect-size consume it, all
     # order-invariant, so the values are unchanged.
     arr = sh.groupBy("doc_id").agg(F.collect_list("s").alias("tk"))
-    if persist:
-        arr = arr.persist()
+    arr = arr.persist()
     # seed binding: _min_hash wraps the seed in a one-arg closure. A
     # two-arg lambda (even with a defaulted second parameter) is treated
     # by pyspark as (element, index) — the seed would silently bind to
@@ -807,14 +782,7 @@ def d_lsh_candidates(
         .orderBy(F.col("jaccard").desc(), "da", "db")
         .limit(20)
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [sh0, arr])
-
-
-ALL_SPECS["d_lsh_candidates"].lazy_plan = (
-    lambda spark, sf_dir: d_lsh_candidates(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -927,17 +895,15 @@ def d_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JACC_THR = 0.02
 
 
-def _jaccard_edge_pairs(d: DataFrame, persist: bool = True, two_lane: bool = False):
+def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
     """Shared near-dup edge construction: capped shingle self-join →
     Jaccard ≥ _JACC_THR (da, db) pairs. Same hot-shingle DF cap as
     d_jaccard_pairs — the cluster edges come from the identical shingle
     self-join and share its skew risk. Returns (pairs, caches) with
     caches the persisted per-(source, shingle) doc-id BUCKET relation
-    (consumers: per-doc sizes + the i<j pair stream) — callers eagerly
-    materialize their small output and unpersist every handle;
-    ``persist=False`` is the plan-audit path (inspect only, never
-    register a cache the hook cannot release, and never run the 1-row
-    adaptive probe).
+    (consumers: per-doc sizes + the i<j pair stream) plus the hashed
+    shingle stream — callers eagerly materialize their small output
+    and unpersist every handle (registry.checkpoint_release).
 
     ``two_lane=True`` is the 100 TB scale configuration: the shingle
     join keys on BOTH independent 56-bit lanes of one md5 digest
@@ -1024,23 +990,20 @@ def _jaccard_edge_pairs(d: DataFrame, persist: bool = True, two_lane: bool = Fal
     # hashed-shingle stream inside the window costs ~+0.5-1.3 s at
     # sf0.1 across the CC family, vs +0.16 s for this form.
     keys = ["s", "s2"] if two_lane else ["s"]
-    if persist:
-        # two consumers: the DF count pass + the bucket build
-        sh0 = sh0.persist()
+    # two consumers: the DF count pass + the bucket build
+    sh0 = sh0.persist()
     sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF, keys=tuple(keys))
     bkt = (
         sh.groupBy("source", *keys)
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .select(*keys, "ds")
     )
-    mx = None
-    if persist:
-        # feeds sizes + both branches of the i<j pair stream (the
-        # guarded _bucket_pairs enumeration stays in-plan — a 1-row
-        # max-size probe to skip its empty oversized branch was
-        # measured and rejected: the extra action splits the
-        # cache-build pipeline for more than the skipped stages return)
-        bkt = bkt.persist()
+    # feeds sizes + both branches of the i<j pair stream (the
+    # guarded _bucket_pairs enumeration stays in-plan — a 1-row
+    # max-size probe to skip its empty oversized branch was
+    # measured and rejected: the extra action splits the
+    # cache-build pipeline for more than the skipped stages return)
+    bkt = bkt.persist()
     sizes = (
         bkt.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
@@ -1049,10 +1012,8 @@ def _jaccard_edge_pairs(d: DataFrame, persist: bool = True, two_lane: bool = Fal
     # i<j enumeration with oversized-bucket spreading (§2.5 skew):
     # _bucket_pairs emits the identical pair multiset, splitting any
     # bucket > _PAIR_SEG members into repartitioned segment units
-    # (adaptive: skipped when the 1-row max-size probe proves every
-    # bucket fits).
     inter = (
-        _bucket_pairs(bkt, max_members=mx)
+        _bucket_pairs(bkt)
         .groupBy(F.col("pa").alias("da"), F.col("pb").alias("db"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -1068,10 +1029,9 @@ def _jaccard_edge_pairs(d: DataFrame, persist: bool = True, two_lane: bool = Fal
         )
         .select("da", "db")
     )
-    # handles: the hashed shingle stream + the BUCKET relation
-    # (persisted only when persist=True — unpersist is a no-op
-    # otherwise); callers eagerly materialize their small output and
-    # unpersist every handle
+    # handles: the hashed shingle stream + the BUCKET relation;
+    # callers eagerly materialize their small output and unpersist
+    # every handle
     return pairs, [sh0, bkt]
 
 
@@ -1122,10 +1082,7 @@ def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # histogram output is a handful of rows: eager-materialize and
     # release the corpus-mass shingle/bucket caches (t_substring_dedup
     # pattern)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    return checkpoint_release(out, caches)
 
 
 # the 100 TB scale configuration of the same clustering: shingle joins
@@ -1146,19 +1103,14 @@ def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t_dedup_clusters_lane2(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, caches = _dedup_clusters_lazy(spark, sf_dir, two_lane=True)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    return checkpoint_release(out, caches)
 
 
-def _dedup_clusters_lazy(
-    spark: SparkSession, sf_dir: str, persist: bool = True, two_lane: bool = False
-):
+def _dedup_clusters_lazy(spark: SparkSession, sf_dir: str, two_lane: bool = False):
     from ..operators.components import connected_components
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    pairs, caches = _jaccard_edge_pairs(d, persist=persist, two_lane=two_lane)
+    pairs, caches = _jaccard_edge_pairs(d, two_lane=two_lane)
     comp = connected_components(pairs, "da", "db")
     csize = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
     out = (
@@ -1569,7 +1521,6 @@ def _semantic_oracle() -> str:
 def _semantic_pairs(
     spark: SparkSession,
     sf_dir: str,
-    persist: bool = True,
     docs: DataFrame | None = None,
     planes: list | None = None,
 ):
@@ -1610,8 +1561,7 @@ def _semantic_pairs(
     # the docs⋈embeddings scan plus the O(dim) interpreted
     # int_code/lsh_bucket/self-norm HOFs execute once per consumer
     # (the multi-consumer rule the SemDeDup emb cache follows)
-    if persist:
-        b = b.persist()
+    b = b.persist()
     a, b2 = b.alias("a"), b.alias("b2")
     p = a.join(
         b2,
@@ -1641,18 +1591,16 @@ def _semantic_pairs(
         .otherwise(0)
         .alias("sim"),
     )
-    return b, s, ([b] if persist else [])
+    return b, s, [b]
 
 
-def _semantic_keep_lazy(
-    spark: SparkSession, sf_dir: str, persist: bool = True, docs: DataFrame | None = None
-):
+def _semantic_keep_lazy(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None):
     """The LSH-blocked keep-list, shared by v_semantic_keep and the
     linear refinery funnel so the two faces cannot drift: per embedded
     doc (doc_id, lang, bucket, keep), keep-lowest-id within similar
     blocked pairs. Returns (keep, caches). ``docs`` restricts the doc
     set (the HTML-fed funnel passes the extracted corpus)."""
-    b, s, caches = _semantic_pairs(spark, sf_dir, persist=persist, docs=docs)
+    b, s, caches = _semantic_pairs(spark, sf_dir, docs=docs)
     rm = s.filter(F.col("sim") == 1).select("db").distinct()
     keep = b.join(rm, b["doc_id"] == rm["db"], "left").select(
         b["doc_id"],
@@ -1673,8 +1621,8 @@ _SEMANTIC_KEEP_CTE_BODY = """
 
 
 @_q("d_semantic_neardup", _semantic_oracle())
-def d_semantic_neardup(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
-    b, s, caches = _semantic_pairs(spark, sf_dir, persist=persist)
+def d_semantic_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    b, s, caches = _semantic_pairs(spark, sf_dir)
     out = (
         s.groupBy("lang")
         .agg(
@@ -1683,12 +1631,7 @@ def d_semantic_neardup(spark: SparkSession, sf_dir: str, persist: bool = True) -
         )
         .orderBy("lang")
     )
-    return checkpoint_release(out, caches) if persist else out
-
-
-ALL_SPECS["d_semantic_neardup"].lazy_plan = (
-    lambda spark, sf_dir: d_semantic_neardup(spark, sf_dir, persist=False)
-)
+    return checkpoint_release(out, caches)
 
 
 # The consumable, LINEAR face of semantic dedup (the stage a 100 TB
@@ -1710,15 +1653,10 @@ ALL_SPECS["d_semantic_neardup"].lazy_plan = (
     "pairs — the linear production stage the corpus refinery swaps in "
     "for the quadratic exact-Lloyd SemDeDup at scale",
 )
-def v_semantic_keep(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
-    keep, caches = _semantic_keep_lazy(spark, sf_dir, persist=persist)
+def v_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    keep, caches = _semantic_keep_lazy(spark, sf_dir)
     out = keep.orderBy("doc_id")
-    return checkpoint_release(out, caches) if persist else out
-
-
-ALL_SPECS["v_semantic_keep"].lazy_plan = (
-    lambda spark, sf_dir: v_semantic_keep(spark, sf_dir, persist=False)
-)
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -1882,7 +1820,7 @@ def d_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored GROUP BY lang ORDER BY lang
     """,
 )
-def d_oov_bigram_score(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def d_oov_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     raw_bigrams = F.when(
@@ -1896,8 +1834,7 @@ def d_oov_bigram_score(spark: SparkSession, sf_dir: str, persist: bool = True) -
     # the scoring join — without it the full tokenize/explode lineage
     # runs twice (two corpus scans at 100 TB).
     bigrams = d.select("doc_id", "lang", F.explode(raw_bigrams).alias("bg"))
-    if persist:
-        bigrams = bigrams.persist()
+    bigrams = bigrams.persist()
     vocab = (
         bigrams.groupBy("bg")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -1922,27 +1859,7 @@ def d_oov_bigram_score(spark: SparkSession, sf_dir: str, persist: bool = True) -
         )
         .orderBy("lang")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [bigrams])
-
-
-ALL_SPECS["d_oov_bigram_score"].lazy_plan = (
-    lambda spark, sf_dir: d_oov_bigram_score(spark, sf_dir, persist=False)
-)
-
-
-# plan_audit inspects the lazy pipeline (the registered callable
-# checkpoints eagerly); persist=False so the audit never registers a
-# cache it cannot release
-ALL_SPECS["d_dedup_clusters"].lazy_plan = (
-    lambda spark, sf_dir: _dedup_clusters_lazy(spark, sf_dir, persist=False)[0]
-)
-ALL_SPECS["t_dedup_clusters_lane2"].lazy_plan = (
-    lambda spark, sf_dir: _dedup_clusters_lazy(
-        spark, sf_dir, persist=False, two_lane=True
-    )[0]
-)
 
 
 # --------------------------------------------------------------------------
@@ -1961,30 +1878,6 @@ ALL_SPECS["t_dedup_clusters_lane2"].lazy_plan = (
 # doc_id (AQE broadcasts the cluster side while it is small, shuffles
 # at 100 TB). Output is the consumable per-doc weight table a trainer
 # ingests directly.
-def _soft_dedup_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
-    from ..operators.components import connected_components
-
-    d = _fanout(load_tables(spark, sf_dir)["documents"])
-    pairs, caches = _jaccard_edge_pairs(d, persist=persist)
-    comp = connected_components(pairs, "da", "db")
-    csize = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
-    docw = (
-        d.select("doc_id")
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .join(csize, "component", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("sz"), F.lit(1)).cast("bigint").alias("cluster_size"),
-        )
-    )
-    out = docw.select(
-        "doc_id",
-        "cluster_size",
-        trunc6(F.lit(1.0) / F.col("cluster_size")).alias("weight"),
-    ).orderBy("doc_id")
-    return out, caches
-
-
 @_q(
     "d_soft_dedup_weights",
     CC_ORACLE_CTE
@@ -2005,13 +1898,24 @@ def _soft_dedup_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     "weight table a trainer joins on doc_id",
 )
 def d_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _soft_dedup_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    from ..operators.components import connected_components
 
-
-ALL_SPECS["d_soft_dedup_weights"].lazy_plan = (
-    lambda spark, sf_dir: _soft_dedup_lazy(spark, sf_dir, persist=False)[0]
-)
+    d = _fanout(load_tables(spark, sf_dir)["documents"])
+    pairs, caches = _jaccard_edge_pairs(d)
+    comp = connected_components(pairs, "da", "db")
+    csize = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
+    docw = (
+        d.select("doc_id")
+        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+        .join(csize, "component", "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("sz"), F.lit(1)).cast("bigint").alias("cluster_size"),
+        )
+    )
+    out = docw.select(
+        "doc_id",
+        "cluster_size",
+        trunc6(F.lit(1.0) / F.col("cluster_size")).alias("weight"),
+    ).orderBy("doc_id")
+    return checkpoint_release(out, caches)

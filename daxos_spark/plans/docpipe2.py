@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
 from .docpipe import _fanout
-from .registry import ALL_SPECS as _SPECS
 from .registry import QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
 
 _NORM = "lower(trim(text))"
@@ -123,7 +122,7 @@ def d_hot_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="PPJoin-style prefix-filtered Jaccard self-join (τ=0.6) vs brute-force oracle.",
 )
-def d_prefix_filter_jaccard(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def d_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tau = 0.6
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     # explode the token-array EXPRESSION in the same select: naming the
@@ -171,9 +170,8 @@ def d_prefix_filter_jaccard(spark: SparkSession, sf_dir: str, persist: bool = Tr
             F.size("st").alias("n"),
         )
     )
-    if persist:
-        # feeds the prefix explode AND both candidate rejoin sides
-        sorted_tk = sorted_tk.persist()
+    # feeds the prefix explode AND both candidate rejoin sides
+    sorted_tk = sorted_tk.persist()
     # prefix length: |S| − ⌈τ|S|⌉ + 1 (any pair with J ≥ τ shares a
     # prefix token — lossless candidate generation)
     plen = (F.col("n") - F.ceil(F.col("n") * F.lit(tau)) + 1).cast("int")
@@ -255,14 +253,7 @@ def d_prefix_filter_jaccard(spark: SparkSession, sf_dir: str, persist: bool = Tr
         .filter(F.lit(10) * F.col("ni") >= F.lit(6) * union)
         .select("da", "db", trunc6(F.col("ni") / union).alias("jaccard"))
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [sorted_tk])
-
-
-_SPECS["d_prefix_filter_jaccard"].lazy_plan = (
-    lambda spark, sf_dir: d_prefix_filter_jaccard(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -370,7 +361,7 @@ def d_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="deterministic temperature-weighted corpus sampler (admit rate = "
     "per-source micro-weight via portable md5 uniform)",
 )
-def d_temperature_sample(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def d_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
     d = load_tables(spark, sf_dir)["documents"]
@@ -379,9 +370,8 @@ def d_temperature_sample(spark: SparkSession, sf_dir: str, persist: bool = True)
         "source",
         F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("n_tok"),
     )
-    if persist:
-        # feeds the weight agg and the admission scan
-        per_doc = per_doc.persist()
+    # feeds the weight agg and the admission scan
+    per_doc = per_doc.persist()
     sq = (
         per_doc.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tok").alias("n_tokens"))
@@ -403,14 +393,7 @@ def d_temperature_sample(spark: SparkSession, sf_dir: str, persist: bool = True)
         .agg(F.sum("admit").alias("n_admitted"))
         .orderBy("source")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [per_doc])
-
-
-_SPECS["d_temperature_sample"].lazy_plan = (
-    lambda spark, sf_dir: d_temperature_sample(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -581,7 +564,7 @@ def _dsir_oracle() -> str:
     _dsir_oracle(),
     doc="DSIR hashed-unigram importance weights (target-vs-raw LM log-ratio)",
 )
-def d_dsir_weights(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def d_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
     from ..functions.hashing import md5_long
 
@@ -590,9 +573,8 @@ def d_dsir_weights(spark: SparkSession, sf_dir: str, persist: bool = True) -> Da
         d.select("doc_id", "lang", F.explode(T.tokens(F.col("text"))).alias("tk"))
         .select("doc_id", "lang", F.pmod(md5_long(F.col("tk")), F.lit(_DSIR_B)).alias("bk"))
     )
-    if persist:
-        # feeds both count passes and the scoring join
-        tok = tok.persist()
+    # feeds both count passes and the scoring join
+    tok = tok.persist()
 
     raw_cnt = tok.groupBy("bk").agg(F.count(F.lit(1)).alias("cr"))
     tgt_cnt = tok.filter(F.col("lang") == "en").groupBy("bk").agg(
@@ -629,14 +611,7 @@ def d_dsir_weights(spark: SparkSession, sf_dir: str, persist: bool = True) -> Da
         .select("doc_id", "n_tok", trunc6(w).alias("dsir_weight"))
         .orderBy("doc_id")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [tok])
-
-
-_SPECS["d_dsir_weights"].lazy_plan = (
-    lambda spark, sf_dir: d_dsir_weights(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -730,23 +705,10 @@ def _agreement_oracle() -> str:
     "dedup agreement: 2x2 confusion over the union candidate universe",
 )
 def t_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _dedup_agreement_lazy(spark, sf_dir)
-    # 1-row output — eager-materialize, release the stream/bucket caches
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def _dedup_agreement_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     from ..functions.hashing import word_shingles
     from ..functions.similarity import int_code, lsh_bucket, lsh_planes
     from ..functions.vectors import to_double
-    from .docpipe import (
-        _MAX_SHINGLE_DF,
-        _bucket_pairs,
-        _cap_hot_shingles,
-    )
+    from .docpipe import _MAX_SHINGLE_DF, _bucket_pairs, _cap_hot_shingles
 
     t = load_tables(spark, sf_dir)
     d = _fanout(t["documents"])
@@ -781,28 +743,24 @@ def _dedup_agreement_lazy(spark: SparkSession, sf_dir: str, persist: bool = True
     # _jaccard_edge_pairs for the rejected stream-window variant).
     # Pair multiset unchanged (per-doc shingles are distinct, buckets
     # sorted ascending by doc_id); oversized surviving buckets are
-    # spread by _bucket_pairs (§2.5), skipped when the 1-row max-size
-    # probe proves every bucket fits.
-    if persist:
-        # two consumers: the DF count pass + the bucket build
-        sh0 = sh0.persist()
+    # spread by _bucket_pairs (§2.5).
+    # two consumers: the DF count pass + the bucket build
+    sh0 = sh0.persist()
     sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
     bkt = (
         sh.groupBy("source", "s")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .select("ds")
     )
-    mx = None
-    if persist:
-        # feeds sizes + both branches of the i<j intersection stream
-        bkt = bkt.persist()
+    # feeds sizes + both branches of the i<j intersection stream
+    bkt = bkt.persist()
     sizes = (
         bkt.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_sh"))
     )
     inter = (
-        _bucket_pairs(bkt, max_members=mx)
+        _bucket_pairs(bkt)
         .groupBy(F.col("pa").alias("da"), F.col("pb").alias("db"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -883,12 +841,8 @@ def _dedup_agreement_lazy(spark: SparkSession, sf_dir: str, persist: bool = True
         .cast("bigint")
         .alias("n_dup_either"),
     )
-    return out, ([sh0, bkt] if persist else [bkt])
-
-
-_SPECS["t_dedup_agreement"].lazy_plan = (
-    lambda spark, sf_dir: _dedup_agreement_lazy(spark, sf_dir, persist=False)[0]
-)
+    # 1-row output — eager-materialize, release the stream/bucket caches
+    return checkpoint_release(out, [sh0, bkt])
 
 
 # --------------------------------------------------------------------------
@@ -1135,7 +1089,7 @@ def _cap_census_oracle() -> str:
     "rows_dropped > 0 at the real cap is the cap-fired alarm a "
     "production dedup run co-schedules this to raise",
 )
-def t_cap_census(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long, simhash56_sql, simhash_bands, word_shingles
     from ..functions import text as T
     from .docpipe import _LSH_BUCKET_CAP, _MAX_SHINGLE_DF, _N_HASH
@@ -1146,8 +1100,7 @@ def t_cap_census(spark: SparkSession, sf_dir: str, persist: bool = True) -> Data
     sh0 = d.select(
         "doc_id", F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s")
     )
-    if persist:
-        sh0 = sh0.persist()
+    sh0 = sh0.persist()
     shc = sh0.groupBy("s").agg(F.count(F.lit(1)).alias("sz")).select("sz")
     # band buckets mirror the REAL lane exactly: signatures over the
     # DF-capped shingle stream (the census must audit what runs, not a
@@ -1215,14 +1168,7 @@ def t_cap_census(spark: SparkSession, sf_dir: str, persist: bool = True) -> Data
         )
         .orderBy("lane", "cap")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [sh0])
-
-
-_SPECS["t_cap_census"].lazy_plan = lambda spark, sf_dir: t_cap_census(
-    spark, sf_dir, persist=False
-)
 
 
 # --------------------------------------------------------------------------

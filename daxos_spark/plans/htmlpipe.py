@@ -39,7 +39,7 @@ from ..functions.html import (
     sql_keep_cond,
 )
 from .docpipe import _fanout
-from .registry import QuerySpec, register, sql_trunc6, trunc6
+from .registry import QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
 from .textpipe import _TOKS, _gopher_cte
 
 
@@ -361,7 +361,7 @@ def _refinery_html_oracle() -> str:
     )
 
 
-def _refinery_html_parts(spark: SparkSession, sf_dir: str, persist: bool = True):
+def _refinery_html_parts(spark: SparkSession, sf_dir: str):
     """(ext, verdicts, caches) — the composed funnel's extraction frame
     and per-doc verdict relation, exposed so the live-10× lane probe
     (tools/html_lane_probe.py) can digest the survivor SETS, not just
@@ -383,28 +383,36 @@ def _refinery_html_parts(spark: SparkSession, sf_dir: str, persist: bool = True)
         F.expr(f"size(split({_page_text('html')}, ' '))").alias("raw_words"),
         extract_main("stats").alias("text"),
     )
-    if persist:
-        # the gate stages re-consume `text` many times (gopher, unigram
-        # + bigram explodes, the K-gram position stream); checkpoint the
-        # synthesis+extraction regex chain ONCE (t_html_refinery's rule)
-        ext = ext.localCheckpoint(eager=True)
+    # the gate stages re-consume `text` many times (gopher, unigram
+    # + bigram explodes, the K-gram position stream); checkpoint the
+    # synthesis+extraction regex chain ONCE (t_html_refinery's rule)
+    ext = ext.localCheckpoint(eager=True)
     exd = ext.filter(F.length("text") > 0).select("doc_id", "source", "lang", "text")
-    gf, nll, cov, caches = _refinery_gates_from(exd, persist=persist)
+    gf, nll, cov, caches = _refinery_gates_from(exd)
     # production stage order: semantic dedup judges the EXTRACTED
     # corpus (docs=exd) — a doc whose extraction came up empty cannot
     # evict a real survivor from the keep-list
-    keep, sem_caches = _semantic_keep_lazy(
-        spark, sf_dir, persist=persist, docs=exd.select("doc_id", "lang")
-    )
+    keep, sem_caches = _semantic_keep_lazy(spark, sf_dir, docs=exd.select("doc_id", "lang"))
     caches.extend(sem_caches)
     keep = keep.select("doc_id", F.col("keep").alias("sem0"))
     return ext, _refinery_verdicts(gf, nll, cov, keep), caches
 
 
-def _refinery_html_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
+@_q(
+    "t_refinery_html_e2e",
+    _refinery_html_oracle(),
+    doc="the COMPLETE production refinery from raw crawl HTML as one "
+    "plan: extract main content (jusText-lite) -> Gopher rules -> "
+    "bigram-LM fluency -> ExactSubstr majority retention -> LSH-blocked "
+    "linear semantic keep-list; stages 3-6 are t_refinery_linear's "
+    "audited gate machinery run on the EXTRACTED text (shared code + "
+    "shared oracle CTEs, so the funnels cannot drift) — per-stage "
+    "surviving docs + token mass",
+)
+def t_refinery_html_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textpipe import _refinery_stage_agg
 
-    ext, verdicts, caches = _refinery_html_parts(spark, sf_dir, persist=persist)
+    ext, verdicts, caches = _refinery_html_parts(spark, sf_dir)
     head = ext.agg(
         F.count(F.lit(1)).alias("n0"),
         F.sum("raw_words").cast("bigint").alias("t0"),
@@ -424,33 +432,7 @@ def _refinery_html_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         )
         .orderBy("stage")
     )
-    return out, caches
-
-
-@_q(
-    "t_refinery_html_e2e",
-    _refinery_html_oracle(),
-    doc="the COMPLETE production refinery from raw crawl HTML as one "
-    "plan: extract main content (jusText-lite) -> Gopher rules -> "
-    "bigram-LM fluency -> ExactSubstr majority retention -> LSH-blocked "
-    "linear semantic keep-list; stages 3-6 are t_refinery_linear's "
-    "audited gate machinery run on the EXTRACTED text (shared code + "
-    "shared oracle CTEs, so the funnels cannot drift) — per-stage "
-    "surviving docs + token mass",
-)
-def t_refinery_html_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _refinery_html_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-from .registry import ALL_SPECS as _ALL  # noqa: E402
-
-_ALL["t_refinery_html_e2e"].lazy_plan = (
-    lambda spark, sf_dir: _refinery_html_lazy(spark, sf_dir, persist=False)[0]
-)
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -729,7 +711,7 @@ def t_optout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-stage doc + char mass — the ordering a production pipeline "
     "must use so no extraction cost is spent on opted-out content",
 )
-def t_optout_refinery(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_optout_refinery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textpipe import _gopher_flags
 
     v = _optout_verdicts_spark(spark, sf_dir)
@@ -740,10 +722,9 @@ def t_optout_refinery(spark: SparkSession, sf_dir: str, persist: bool = True) ->
         "doc_id", extract_main("stats").alias("text")
     )
     kx = kext.filter(F.length("text") > 0)
-    if persist:
-        # gopher re-consumes `text` several times; checkpoint the
-        # extraction once (the shared multi-consumer rule)
-        kx = kx.localCheckpoint(eager=True)
+    # gopher re-consumes `text` several times; checkpoint the
+    # extraction once (the shared multi-consumer rule)
+    kx = kx.localCheckpoint(eager=True)
     g = _gopher_flags(kx.select("doc_id", F.lit("x").alias("source"), "text")).join(
         kx.select("doc_id", F.length("text").alias("chars")), "doc_id"
     )
@@ -778,11 +759,6 @@ def t_optout_refinery(spark: SparkSession, sf_dir: str, persist: bool = True) ->
         )
         .orderBy("stage")
     )
-
-
-_ALL["t_optout_refinery"].lazy_plan = lambda spark, sf_dir: t_optout_refinery(
-    spark, sf_dir, persist=False
-)
 
 
 # --------------------------------------------------------------------------

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..ml.scoring import score_auc
 from ..ml.train import GBTParams, fit_gbt, predict_gbt
-from .registry import ALL_SPECS, QuerySpec, checkpoint_release, register
+from .registry import QuerySpec, checkpoint_release, register
 
 
 def _q(name: str, doc: str = ""):
@@ -591,7 +591,7 @@ def _kmeans_lloyd_sql(k: int, iters: int) -> str:
     doc="deterministic Lloyd k-means (fixed init/iters, exact-decimal "
     "distances) — iterative clustering under the value-hash gate",
 )
-def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Optimization round 11 (guide §2.3/§2.4, the _semdedup_marks
     # shape): the old form posexploded every vector and joined the
     # centroid table per POSITION — n·dim·K rows through a decimal hash
@@ -609,9 +609,8 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
 
     e = load_tables(spark, sf_dir)["embeddings"]
     emb = _fanout(e).select("vec_id", to_double(F.col("embedding")).alias("xs"))
-    if persist:
-        # feeds every assignment and every centroid update
-        emb = emb.persist()
+    # feeds every assignment and every centroid update
+    emb = emb.persist()
 
     dec = "decimal(25,6)"
     ct = emb.filter(F.col("vec_id") < _KM_K).select(
@@ -676,14 +675,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         )
         .orderBy("cluster")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [emb])
-
-
-ALL_SPECS["ml_kmeans_lloyd"].lazy_plan = (
-    lambda spark, sf_dir: ml_kmeans_lloyd(spark, sf_dir, persist=False)
-)
 
 
 @_q("ml_kmeans_clusters", doc="MLlib KMeans over embeddings (seeded; cluster-size profile)")

@@ -73,11 +73,10 @@ class QuerySpec:
     oracle: str | None  # None → non-SQL-expressible, rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    # For queries whose registered callable EAGERLY materializes (the
-    # localCheckpoint + unpersist cache-lifetime pattern): a builder of
-    # the equivalent LAZY pipeline, so tools/plan_audit.py can inspect
-    # the real physical plan instead of the post-checkpoint RDD scan.
-    lazy_plan: Callable[[SparkSession, str], DataFrame] | None = None
+    # ``spark`` is the query's one lifecycle: a callable that caches
+    # intermediates also materializes and releases them before it
+    # returns (checkpoint_release). tools/plan_audit.py audits that same
+    # callable, recording the plan of every DataFrame it checkpoints.
 
 
 ALL_SPECS: dict[str, QuerySpec] = {}
@@ -180,8 +179,8 @@ def checkpoint_release(out: DataFrame, caches: list) -> DataFrame:
     """The cache-lifetime discipline for registered callables: eagerly
     materialize the (small) output, then release every corpus-sized
     persisted intermediate so non-harness callers never accumulate
-    leaked caches. Queries using this register a ``lazy_plan`` (their
-    ``persist=False`` path) so plan_audit still sees the real plan."""
+    leaked caches. tools/plan_audit.py records the plan of ``out``
+    at this checkpoint, which is how it audits a caching query."""
     out = out.localCheckpoint(eager=True)
     for c in caches:
         c.unpersist()

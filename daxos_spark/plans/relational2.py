@@ -22,7 +22,6 @@ from pyspark.sql.window import Window
 from ..catalog import load_tables
 from ..operators.temporal import asof_join
 from .registry import (
-    ALL_SPECS,
     checkpoint_release,
     DEC,
     QuerySpec,
@@ -1911,7 +1910,7 @@ def _pagerank_oracle() -> str:
     "supplier-customer trade graph; integer nano-ranks hash-checked",
     tags=("relational", "graph"),
 )
-def q_trade_pagerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     e = (
         t["lineitem"]
@@ -1922,8 +1921,7 @@ def q_trade_pagerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> 
         .distinct()
     )
     ee = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if persist:
-        ee = ee.persist()
+    ee = ee.persist()
     deg = ee.groupBy("u").agg(F.count(F.lit(1)).alias("dg"))
     # pre-join the out-degree onto the edge relation ONCE (optimization
     # round 11, guide §2.4: the loop below re-ran an identical ee⋈deg
@@ -1931,9 +1929,8 @@ def q_trade_pagerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> 
     # now rides on the persisted edge row and each iteration joins ONLY
     # the rank vector). Same rows, same per-edge r/dg expression.
     ed = ee.join(deg, "u").select("u", "v", "dg")
-    if persist:
-        deg = deg.persist()
-        ed = ed.persist()
+    deg = deg.persist()
+    ed = ed.persist()
     nn = deg.count()  # node count — a scalar, the honest driver transfer
 
     r = deg.select(F.col("u").alias("node"), (F.lit(1.0) / F.lit(float(nn))).alias("r"))
@@ -1954,14 +1951,7 @@ def q_trade_pagerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> 
         .orderBy(F.col("rank_nano").desc(), "node")
         .limit(_PR_TOPK)
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [ee, deg, ed])
-
-
-ALL_SPECS["q_trade_pagerank"].lazy_plan = (
-    lambda spark, sf_dir: q_trade_pagerank(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2153,11 +2143,10 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     "co-purchase part graph (ordered-wedge equi-join plan)",
     tags=("relational", "graph"),
 )
-def q_copurchase_triangles(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
     e = _copurchase_edges(li)
-    if persist:
-        e = e.persist()
+    e = e.persist()
     deg = (
         e.select(F.col("a").alias("v"))
         .unionByName(e.select(F.col("b").alias("v")))
@@ -2191,14 +2180,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str, persist: bool = Tru
             .alias("clustering_micro"),
         )
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [e])
-
-
-ALL_SPECS["q_copurchase_triangles"].lazy_plan = (
-    lambda spark, sf_dir: q_copurchase_triangles(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2250,12 +2232,11 @@ _LP_MAXDEG = 64
     "neighbors, hub-capped wedge enumeration",
     tags=("relational", "graph"),
 )
-def q_link_prediction(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
     e = _copurchase_edges(li)
-    if persist:
-        # three consumers: und (x2 via aliases), deg, and the anti-join
-        e = e.persist()
+    # three consumers: und (x2 via aliases), deg, and the anti-join
+    e = e.persist()
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -2290,14 +2271,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str, persist: bool = True) ->
             trunc6(F.col("aa")).alias("adamic_adar"),
         )
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [e])
-
-
-ALL_SPECS["q_link_prediction"].lazy_plan = (
-    lambda spark, sf_dir: q_link_prediction(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2344,12 +2318,11 @@ ALL_SPECS["q_link_prediction"].lazy_plan = (
     "== full recompute (n_mismatch emitted, 0), additive DECIMAL measures",
     tags=("relational", "incremental"),
 )
-def q_ivm_merge_proof(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_ivm_merge_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NTZ ts -> exact integer micros (session TZ pinned UTC, value-stable)
     us = lambda c: F.unix_micros(c.cast("timestamp"))
     ev = load_tables(spark, sf_dir)["events"].withColumn("ts_us", us(F.col("ts")))
-    if persist:
-        ev = ev.persist()
+    ev = ev.persist()
     cut = ev.agg(
         (
             F.min("ts_us")
@@ -2389,14 +2362,7 @@ def q_ivm_merge_proof(spark: SparkSession, sf_dir: str, persist: bool = True) ->
         trunc6(F.col("m.sv")).alias("sum_value"),
         mism.cast("bigint").alias("n_mismatch"),
     ).orderBy("user_id")
-    if not persist:
-        return out
     return checkpoint_release(out, [ev])
-
-
-ALL_SPECS["q_ivm_merge_proof"].lazy_plan = (
-    lambda spark, sf_dir: q_ivm_merge_proof(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2445,13 +2411,12 @@ _ATTR_WINDOW_US = 30 * 60 * 1_000_000
     "30-min lookback (user-keyed time-band join, integer micro-credits)",
     tags=("relational", "attribution"),
 )
-def q_touch_attribution(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     us = lambda c: F.unix_micros(c.cast("timestamp"))
     ev = load_tables(spark, sf_dir)["events"].select(
         "user_id", "event_id", "event_type", us(F.col("ts")).alias("us")
     )
-    if persist:
-        ev = ev.persist()
+    ev = ev.persist()
     conv = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("conv_id"), F.col("us").alias("conv_us")
     )
@@ -2488,14 +2453,7 @@ def q_touch_attribution(spark: SparkSession, sf_dir: str, persist: bool = True) 
         )
         .orderBy("channel")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [ev])
-
-
-ALL_SPECS["q_touch_attribution"].lazy_plan = (
-    lambda spark, sf_dir: q_touch_attribution(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2860,7 +2818,7 @@ _EWMA_WIN = 48
     "band self-join with DECIMAL-summed weighted terms",
     tags=("relational", "timeseries"),
 )
-def q_ewma_forecast(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     us = lambda c: F.unix_micros(c.cast("timestamp"))
     ev = load_tables(spark, sf_dir)["events"].select(
         F.floor(us(F.col("ts")) / 3_600_000_000).cast("bigint").alias("hour_idx")
@@ -2872,9 +2830,8 @@ def q_ewma_forecast(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
     series = spine.join(cnt, "hour_idx", "left").select(
         "hour_idx", F.coalesce(F.col("c"), F.lit(0)).alias("c")
     )
-    if persist:
-        # both sides of the band join + the error join
-        series = series.persist()
+    # both sides of the band join + the error join
+    series = series.persist()
     t, s = series.alias("t"), series.alias("s")
     term = (
         F.lit(_EWMA_ALPHA)
@@ -2891,9 +2848,8 @@ def q_ewma_forecast(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         .groupBy(F.col("t.hour_idx").alias("hour_idx"), F.col("t.c").alias("c"))
         .agg(F.sum(term).cast("double").alias("level"))
     )
-    if persist:
-        # feeds last-level, count, and the error join
-        lvl = lvl.persist()
+    # feeds last-level, count, and the error join
+    lvl = lvl.persist()
     err = series.alias("x").join(
         lvl.alias("l"), F.col("l.hour_idx") == F.col("x.hour_idx") - 1
     ).select(F.abs(F.col("x.c") - F.col("l.level")).alias("e"))
@@ -2909,14 +2865,7 @@ def q_ewma_forecast(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         .crossJoin(F.broadcast(last))
         .select("n_levels", "last_level", "mae")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [series, lvl])
-
-
-ALL_SPECS["q_ewma_forecast"].lazy_plan = (
-    lambda spark, sf_dir: q_ewma_forecast(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2956,7 +2905,7 @@ ALL_SPECS["q_ewma_forecast"].lazy_plan = (
     "in exact integer micro units",
     tags=("relational", "basket"),
 )
-def q_basket_rules(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
     # Single-shuffle pairing (optimization round 11, guide §2.3/§2.4 —
     # the _copurchase_edges/q_itemcf_topk layout): one order-keyed
@@ -2968,8 +2917,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str, persist: bool = True) -> Da
     parts = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
-    if persist:
-        parts = parts.persist()
+    parts = parts.persist()
     n_orders = parts.count()
     item = (
         parts.select(F.explode("ps").alias("l_partkey"))
@@ -3011,14 +2959,7 @@ def q_basket_rules(spark: SparkSession, sf_dir: str, persist: bool = True) -> Da
         .orderBy(F.col("lift_micro").desc(), "pa", "pb")
         .limit(20)
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [parts])
-
-
-ALL_SPECS["q_basket_rules"].lazy_plan = (
-    lambda spark, sf_dir: q_basket_rules(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -3252,18 +3193,6 @@ def q_recursive_trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = spark.sql(_REACH_EDGES_SQL).localCheckpoint(eager=True)
     edges.createOrReplaceTempView("reach_edges_mat")
     return spark.sql(_REACH_RECURSE_SQL)
-
-
-def _reach_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-statement form for plan_audit (the registered callable
-    checkpoints the edge relation eagerly, hiding the fact-join plan)."""
-    from ..catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_REACH_SQL)
-
-
-ALL_SPECS["q_recursive_trade_reach"].lazy_plan = _reach_lazy
 
 
 # --------------------------------------------------------------------------
@@ -3997,9 +3926,7 @@ def q_msprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="split-conformal interval (alpha=0.1) around a decimal-exact OLS: "
     "exact calibration order statistic, held-out realized-coverage audit",
 )
-def q_conformal_interval(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
     base = li.select(
         F.col("l_quantity").alias("x"),
@@ -4015,12 +3942,11 @@ def q_conformal_interval(
             % 4
         ).alias("sp"),
     )
-    if persist:
-        # four plan branches (train moments, calibration count,
-        # calibration rank, test coverage) each re-ran the scan + the
-        # per-row md5 split draw — persist so the hash pass happens once
-        # (optimization round 11, guide §5 caching-for-reuse)
-        base = base.persist()
+    # four plan branches (train moments, calibration count,
+    # calibration rank, test coverage) each re-ran the scan + the
+    # per-row md5 split draw — persist so the hash pass happens once
+    # (optimization round 11, guide §5 caching-for-reuse)
+    base = base.persist()
     mom = base.filter(F.col("sp") <= 1).agg(
         F.count(F.lit(1)).alias("n"),
         dsum(F.col("x")).alias("sx"),
@@ -4078,14 +4004,7 @@ def q_conformal_interval(
             trunc6(F.col("n_cov").cast("double") / F.col("n_test")).alias("coverage"),
         )
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [base])
-
-
-ALL_SPECS["q_conformal_interval"].lazy_plan = (
-    lambda spark, sf_dir: q_conformal_interval(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -4976,7 +4895,7 @@ _HDR_QS = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))  # name, num, den
     "p50/p90/p99 extraction + exact-order-statistic audit",
     tags=("events",),
 )
-def q_hdr_latency(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def q_hdr_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir)["events"]
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     lats = (
@@ -4992,8 +4911,7 @@ def q_hdr_latency(spark: SparkSession, sf_dir: str, persist: bool = True) -> Dat
     # count, AND the exact-rank audit — without the cache the events
     # scan + user-keyed lag window executes three times (round-7
     # review fix; released via checkpoint_release below)
-    if persist:
-        lats = lats.persist()
+    lats = lats.persist()
     # exact power of 2: shiftleft on a LONG is integer-exact; lat*16
     # stays far below int64 (lat < 2^40 us). SQL-expression form —
     # pyspark's F.shiftleft only accepts a literal bit count.
@@ -5066,12 +4984,7 @@ def q_hdr_latency(spark: SparkSession, sf_dir: str, persist: bool = True) -> Dat
         )
         .orderBy("quantile")
     )
-    return checkpoint_release(out, [lats]) if persist else out
-
-
-ALL_SPECS["q_hdr_latency"].lazy_plan = lambda spark, sf_dir: q_hdr_latency(
-    spark, sf_dir, persist=False
-)
+    return checkpoint_release(out, [lats])
 
 
 # --------------------------------------------------------------------------
@@ -5254,9 +5167,7 @@ WHERE rk <= 2
     "rounds over a |V|-row dist relation, ties broken by hop count",
     tags=("graph",),
 )
-def q_trade_shortest_path(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def q_trade_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import register_views
 
     register_views(spark, sf_dir)
@@ -5290,16 +5201,15 @@ def q_trade_shortest_path(
             .agg(F.min(F.struct("cost", "hop")).alias("s"))
             .select("nk", F.col("s.cost").alias("cost"), F.col("s.hop").alias("hop"))
         )
-        if persist:
-            # Truncate the per-round lineage (optimization round 11,
-            # guide §3.3/§5): dist appears TWICE per round (union arm +
-            # relax arm), so the lazy chain doubles per hop — the
-            # unrolled plan hit 320 Exchanges / 126 SortMergeJoins
-            # (plans/r11/q_trade_shortest_path_before.txt) and its
-            # planning cost dwarfed the |V| = 25-row data. One eager
-            # localCheckpoint per round is a sub-ms job at any scale
-            # (dist is |V| rows, the algorithm's own invariant).
-            dist = dist.localCheckpoint(eager=True)
+        # Truncate the per-round lineage (optimization round 11,
+        # guide §3.3/§5): dist appears TWICE per round (union arm +
+        # relax arm), so the lazy chain doubles per hop — the
+        # unrolled plan hit 320 Exchanges / 126 SortMergeJoins
+        # (plans/r11/q_trade_shortest_path_before.txt) and its
+        # planning cost dwarfed the |V| = 25-row data. One eager
+        # localCheckpoint per round is a sub-ms job at any scale
+        # (dist is |V| rows, the algorithm's own invariant).
+        dist = dist.localCheckpoint(eager=True)
     return (
         dist.join(nation, dist["nk"] == nation["n_nationkey"])
         .select(
@@ -5309,8 +5219,3 @@ def q_trade_shortest_path(
         )
         .orderBy("min_cost_micro", "n_name")
     )
-
-
-ALL_SPECS["q_trade_shortest_path"].lazy_plan = (
-    lambda spark, sf_dir: q_trade_shortest_path(spark, sf_dir, persist=False)
-)

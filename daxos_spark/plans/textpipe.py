@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_tables
 from ..functions.hashing import md5_long, md5_long_sql, word_shingles
 from .docpipe import _fanout
-from .registry import ALL_SPECS, QuerySpec, checkpoint_release, davg, register, sql_davg, sql_dsum, sql_trunc6, trunc6
+from .registry import QuerySpec, checkpoint_release, davg, register, sql_davg, sql_dsum, sql_trunc6, trunc6
 
 _NORM = "lower(trim(text))"
 _TOKS = f"string_split_regex({_NORM}, '\\s+')"
@@ -204,9 +204,7 @@ def _md5_pos(s: str, seed: int) -> int:
     doc="Bloom-sketch n-gram decontamination (m=8192,k=3 broadcast bitmap, "
     "map-side probe) with realized false-positive audit vs the exact join",
 )
-def t_bloom_decontam(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def t_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Optimization round 11 (guide §4.1): the probe was a pandas UDF
     # looping shingle-by-shingle in Python, re-computing k hashlib.md5
     # digests per shingle — the whole train corpus crossed the Arrow
@@ -230,9 +228,8 @@ def t_bloom_decontam(
         )
         .distinct()
     )
-    if persist:
-        # feeds the bitmap aggregate AND the exact-audit join
-        eval_sh = eval_sh.persist()
+    # feeds the bitmap aggregate AND the exact-audit join
+    eval_sh = eval_sh.persist()
 
     # 8192-bit bloom bitmap as 128 longs, built by ONE aggregate row
     nw = _BLOOM_M // 64
@@ -313,14 +310,7 @@ def t_bloom_decontam(
         )
         .orderBy("source")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [eval_sh])
-
-
-ALL_SPECS["t_bloom_decontam"].lazy_plan = (
-    lambda spark, sf_dir: t_bloom_decontam(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -505,7 +495,7 @@ def _lr_feat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lr_pipeline(spark: SparkSession, sf_dir: str, finish, persist: bool = True):
+def _lr_pipeline(spark: SparkSession, sf_dir: str, finish):
     """Shared IRLS chain for the three classifier queries: build the
     feature table (persisted — it feeds every Newton step plus the
     final scoring pass), fit, and hand (feat, coefficients) to the
@@ -513,8 +503,7 @@ def _lr_pipeline(spark: SparkSession, sf_dir: str, finish, persist: bool = True)
     callable can eager-materialize its tiny output and release the
     corpus-sized feature cache."""
     feat = _lr_feat(spark, sf_dir)
-    if persist:
-        feat = feat.persist()
+    feat = feat.persist()
     b = _lr_fit(spark, feat)
     return finish(feat, b), feat
 
@@ -540,9 +529,7 @@ def _quality_logreg_finish(feat: DataFrame, b: DataFrame) -> DataFrame:
 def t_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, feat = _lr_pipeline(spark, sf_dir, _quality_logreg_finish)
     # 1-row output — eager-materialize, release the feature cache
-    out = out.localCheckpoint(eager=True)
-    feat.unpersist()
-    return out
+    return checkpoint_release(out, [feat])
 
 
 # --------------------------------------------------------------------------
@@ -627,16 +614,15 @@ def _leakage_oracle() -> str:
     "hashed BY CLUSTER so duplicates co-travel; audits cross-split dup "
     "pairs under this split (proven 0) vs a naive per-doc split",
 )
-def t_leakage_split(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
     from .docpipe import _jaccard_edge_pairs
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     # shares the capped-shingle edge builder with t_dedup_best_keep /
     # d_dedup_clusters (previously an inline duplicate of the same code)
-    pairs, shc = _jaccard_edge_pairs(d, persist=persist)
-    if persist:
-        pairs = pairs.persist()  # feeds CC + both leakage audits
+    pairs, shc = _jaccard_edge_pairs(d)
+    pairs = pairs.persist()  # feeds CC + both leakage audits
     comp = connected_components(pairs, "da", "db")
     allc = d.select("doc_id").join(
         comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
@@ -649,10 +635,9 @@ def t_leakage_split(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
     sp = allc.select(
         "doc_id", "cluster", split_of(F.col("cluster")).alias("split")
     )
-    if persist:
-        # the CC chain above is iterative — never recompute it for
-        # the two audit joins + the final agg
-        sp = sp.persist()
+    # the CC chain above is iterative — never recompute it for
+    # the two audit joins + the final agg
+    sp = sp.persist()
 
     spa, spb = sp.alias("spa"), sp.alias("spb")
     xc = (
@@ -677,14 +662,7 @@ def t_leakage_split(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         )
         .orderBy("split")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [*shc, pairs, sp])
-
-
-ALL_SPECS["t_leakage_split"].lazy_plan = (
-    lambda spark, sf_dir: t_leakage_split(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -743,13 +721,12 @@ def _cms_oracle() -> str:
     doc="Count-Min-Sketch heavy hitters (d=4, w=1024): top tokens by CMS "
     "estimate with the exact count + realized overestimate audit",
 )
-def t_cms_heavy_hitters(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     tok = d.select(F.explode(T.tokens(F.col("text"))).alias("tk"))
-    if persist:
-        tok = tok.persist()
+    tok = tok.persist()
 
     # sketch build: one shuffle of <= d*w counter rows (map-side combine
     # makes each task emit at most d*w partials)
@@ -781,14 +758,7 @@ def t_cms_heavy_hitters(spark: SparkSession, sf_dir: str, persist: bool = True) 
         .orderBy(F.col("cms_est").desc(), "token")
         .limit(_CMS_TOPK)
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [tok])
-
-
-ALL_SPECS["t_cms_heavy_hitters"].lazy_plan = (
-    lambda spark, sf_dir: t_cms_heavy_hitters(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -970,15 +940,6 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, apply_last: bool = False):
     "per-source symbol compression, hash-checked",
 )
 def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, words = _bpe_encode_lazy(spark, sf_dir)
-    # tiny per-source result: materialize eagerly and release the
-    # word-type cache _bpe_learn left persisted (see t_substring_spans)
-    out = out.localCheckpoint(eager=True)
-    words.unpersist()
-    return out
-
-
-def _bpe_encode_lazy(spark: SparkSession, sf_dir: str):
     from ..functions import text as T
 
     _merges, words = _bpe_learn(spark, sf_dir, apply_last=True)
@@ -996,12 +957,9 @@ def _bpe_encode_lazy(spark: SparkSession, sf_dir: str):
         )
         .orderBy("source")
     )
-    return out, words
-
-
-ALL_SPECS["t_bpe_encode"].lazy_plan = (
-    lambda spark, sf_dir: _bpe_encode_lazy(spark, sf_dir)[0]
-)
+    # tiny per-source result: materialize eagerly and release the
+    # word-type cache _bpe_learn left persisted (see t_substring_spans)
+    return checkpoint_release(out, [words])
 
 
 # --------------------------------------------------------------------------
@@ -1073,32 +1031,20 @@ def _bm25_oracle() -> str:
     "top-10; term scores DECIMAL-summed so ranking hash-checks",
 )
 def t_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _bm25_lazy(spark, sf_dir)
-    # per-query top-10 output: eager-materialize, release the token and
-    # term-frequency caches (round-5 cache-lifetime discipline)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def _bm25_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     from pyspark.sql.window import Window
 
     from ..functions import text as T
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("t"))
-    if persist:
-        tok = tok.persist()
+    tok = tok.persist()
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dlen"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dlen").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     tf = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-    if persist:
-        tf = tf.persist()
+    tf = tf.persist()
     df_ = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     q = (
         tok.filter((F.col("doc_id") % 97 == 0) & (F.col("doc_id") < 97 * 3))
@@ -1132,12 +1078,9 @@ def _bm25_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .select("qid", "rk", "doc_id", trunc6(F.col("score")).alias("bm25"))
         .orderBy("qid", "rk")
     )
-    return out, [tok, tf]
-
-
-ALL_SPECS["t_bm25_topk"].lazy_plan = (
-    lambda spark, sf_dir: _bm25_lazy(spark, sf_dir, persist=False)[0]
-)
+    # per-query top-10 output: eager-materialize, release the token and
+    # term-frequency caches (round-5 cache-lifetime discipline)
+    return checkpoint_release(out, [tok, tf])
 
 
 # --------------------------------------------------------------------------
@@ -1219,7 +1162,7 @@ def _funnel_oracle() -> str:
     "canonical -> quality gate -> n-gram decontam -> temperature mix "
     "weights, per-source survival counts",
 )
-def t_refinery_funnel(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_refinery_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..functions import text as T
@@ -1235,9 +1178,8 @@ def t_refinery_funnel(spark: SparkSession, sf_dir: str, persist: bool = True) ->
         T.stopword_hits(F.col("text"), sw).alias("stop_hits"),
         word_shingles(F.lower(F.trim(F.col("text"))), 3).alias("shingles"),
     )
-    if persist:
-        # one text scan feeds dedup, quality, decontam, and mix
-        f = f.persist()
+    # one text scan feeds dedup, quality, decontam, and mix
+    f = f.persist()
 
     w = Window.partitionBy("fp").orderBy("doc_id")
     canon = f.withColumn("rn", F.row_number().over(w))
@@ -1303,14 +1245,7 @@ def t_refinery_funnel(spark: SparkSession, sf_dir: str, persist: bool = True) ->
         )
         .orderBy("source")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [f])
-
-
-ALL_SPECS["t_refinery_funnel"].lazy_plan = (
-    lambda spark, sf_dir: t_refinery_funnel(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -1430,7 +1365,7 @@ _CONT_THR_MICRO = 800_000  # containment >= 0.8
     doc="asymmetric containment dedup (Broder): |A∩B|/|A| >= 0.8 flags "
     "excerpts/quotes symmetric Jaccard misses; integer-exact",
 )
-def t_containment_dedup(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .docpipe import _capped_stream
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
@@ -1466,8 +1401,7 @@ def t_containment_dedup(spark: SparkSession, sf_dir: str, persist: bool = True) 
         .agg(F.collect_list("doc_id").alias("ds"))
         .select("ds")
     )
-    if persist:
-        bkt = bkt.persist()
+    bkt = bkt.persist()
     sizes = (
         bkt.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
@@ -1491,14 +1425,7 @@ def t_containment_dedup(spark: SparkSession, sf_dir: str, persist: bool = True) 
         F.countDistinct("da").alias("n_contained_docs"),
         F.max("cont_micro").cast("bigint").alias("max_cont_micro"),
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [bkt])
-
-
-ALL_SPECS["t_containment_dedup"].lazy_plan = (
-    lambda spark, sf_dir: t_containment_dedup(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -1558,7 +1485,7 @@ def _mh_acc_oracle() -> str:
     doc="MinHash estimator accuracy audit: 8-hash Jaccard estimate vs "
     "exact Jaccard on index candidate pairs, integer micro-unit errors",
 )
-def t_minhash_accuracy(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import minhash_signature
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
@@ -1581,8 +1508,7 @@ def t_minhash_accuracy(spark: SparkSession, sf_dir: str, persist: bool = True) -
     # already keys on the bounded candidate relation), so the one saved
     # exchange is offset by the bucket collect_list. The committed
     # self-join form stays. See OPTIMIZATION_r11.md batch 3.
-    if persist:
-        sh = sh.persist()
+    sh = sh.persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1631,14 +1557,7 @@ def t_minhash_accuracy(spark: SparkSession, sf_dir: str, persist: bool = True) -
         F.max(err).cast("bigint").alias("max_abs_err_micro"),
         F.sum((err <= 250_000).cast("int")).cast("bigint").alias("n_within_quarter"),
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [sh])
-
-
-ALL_SPECS["t_minhash_accuracy"].lazy_plan = (
-    lambda spark, sf_dir: t_minhash_accuracy(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -1695,21 +1614,39 @@ _SS_K = 8
     "gaps-and-islands; per-source span stats",
 )
 def t_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, pos = _substring_spans_lazy(spark, sf_dir)
+    from pyspark.sql import Window
+
+    d = _fanout(load_tables(spark, sf_dir)["documents"])
+    k = _SS_K
+    _toks, pos = _ss_position_stream(d, ("source",))
+    dup = pos.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") >= 2)
+    dp = pos.join(dup.select("h"), "h", "left_semi")
+    w = Window.partitionBy("doc_id").orderBy("i")
+    isl = dp.withColumn("g", F.col("i") - F.row_number().over(w))
+    sp = isl.groupBy("doc_id", "source", "g").agg(
+        F.min("i").alias("a"), F.max("i").alias("b")
+    )
+    out = (
+        sp.groupBy("source")
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs_with_dups"),
+            F.count(F.lit(1)).alias("n_spans"),
+            F.sum(F.col("b") - F.col("a") + k).cast("bigint").alias("total_span_tokens"),
+            F.max(F.col("b") - F.col("a") + k).cast("bigint").alias("max_span_tokens"),
+        )
+        .orderBy("source")
+    )
     # Materialize the (tiny, per-source) result eagerly so the persisted
     # position stream can be released NOW — without this, every
     # invocation leaked a cached corpus-sized DataFrame for the rest of
     # the session (round-4 advice). The checkpoint runs the pipeline
     # once (populating and consuming the cache within one job).
-    out = out.localCheckpoint(eager=True)
-    pos.unpersist()
-    return out
+    return checkpoint_release(out, [pos])
 
 
 def _ss_position_stream(
     d: DataFrame,
     extra_cols: tuple = (),
-    persist: bool = True,
     two_lane: bool = False,
 ):
     """Tokenization + persisted K-gram position stream shared by the two
@@ -1777,38 +1714,8 @@ def _ss_position_stream(
             F.conv(F.substring("hx", 1, 14), 16, 10).cast("bigint").alias("h"),
             F.conv(F.substring("hx", 15, 14), 16, 10).cast("bigint").alias("h2"),
         )
-    if persist:
-        pos = pos.persist()
+    pos = pos.persist()
     return toks, pos
-
-
-def _substring_spans_lazy(spark: SparkSession, sf_dir: str):
-    """The lazy span-stats pipeline + its persisted position stream
-    (returned so the eager caller can bound the cache lifetime, and so
-    plan_audit can inspect the real plan via ``lazy_plan``)."""
-    from pyspark.sql import Window
-
-    d = _fanout(load_tables(spark, sf_dir)["documents"])
-    k = _SS_K
-    _toks, pos = _ss_position_stream(d, ("source",))
-    dup = pos.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") >= 2)
-    dp = pos.join(dup.select("h"), "h", "left_semi")
-    w = Window.partitionBy("doc_id").orderBy("i")
-    isl = dp.withColumn("g", F.col("i") - F.row_number().over(w))
-    sp = isl.groupBy("doc_id", "source", "g").agg(
-        F.min("i").alias("a"), F.max("i").alias("b")
-    )
-    out = (
-        sp.groupBy("source")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs_with_dups"),
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(F.col("b") - F.col("a") + k).cast("bigint").alias("total_span_tokens"),
-            F.max(F.col("b") - F.col("a") + k).cast("bigint").alias("max_span_tokens"),
-        )
-        .orderBy("source")
-    )
-    return out, pos
 
 
 # --------------------------------------------------------------------------
@@ -1876,18 +1783,6 @@ def _substring_spans_lazy(spark: SparkSession, sf_dir: str):
     "segments as (doc_id, seg_start, n_toks, md5 of segment text)",
 )
 def t_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, pos = _substring_dedup_lazy(spark, sf_dir)
-    # eager materialization bounds the cache lifetime (see
-    # t_substring_spans); the output IS the cleaned corpus, which a real
-    # pipeline would be writing to a sink at this point anyway
-    out = out.localCheckpoint(eager=True)
-    pos.unpersist()
-    return out
-
-
-def _substring_dedup_lazy(spark: SparkSession, sf_dir: str):
-    """The lazy cleaned-corpus pipeline + its persisted position stream
-    (see ``_substring_spans_lazy`` for the shape rationale)."""
     from pyspark.sql import Window
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
@@ -1932,7 +1827,10 @@ def _substring_dedup_lazy(spark: SparkSession, sf_dir: str):
         .select("doc_id", "seg_start", "n_toks", "seg_h")
         .orderBy("doc_id", "seg_start")
     )
-    return out, pos
+    # eager materialization bounds the cache lifetime (see
+    # t_substring_spans); the output IS the cleaned corpus, which a real
+    # pipeline would be writing to a sink at this point anyway
+    return checkpoint_release(out, [pos])
 
 
 # --------------------------------------------------------------------------
@@ -2095,24 +1993,12 @@ def _source_overlap_oracle() -> str:
     "ahead of doc-level dedup)",
 )
 def t_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, sg = _source_overlap_lazy(spark, sf_dir)
-    # the (source, gram) relation feeds THREE consumers (sizes + both
-    # self-join sides) — without the persist the corpus explode runs 3x.
-    # Output is pair-cardinality (≤190 rows): eager-materialize and
-    # release the cache (t_substring_dedup pattern).
-    out = out.localCheckpoint(eager=True)
-    sg.unpersist()
-    return out
-
-
-def _source_overlap_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     sg = d.select(
         "source",
         F.explode(word_shingles(F.lower(F.col("text")), 3)).alias("g"),
     ).distinct()
-    if persist:
-        sg = sg.persist()
+    sg = sg.persist()
     sizes = sg.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = sg.alias("a")
     b = sg.alias("b")
@@ -2148,7 +2034,11 @@ def _source_overlap_lazy(spark: SparkSession, sf_dir: str, persist: bool = True)
         )
         .orderBy("src_a", "src_b")
     )
-    return out, sg
+    # the (source, gram) relation feeds THREE consumers (sizes + both
+    # self-join sides) — without the persist the corpus explode runs 3x.
+    # Output is pair-cardinality (≤190 rows): eager-materialize and
+    # release the cache (t_substring_dedup pattern).
+    return checkpoint_release(out, [sg])
 
 
 # --------------------------------------------------------------------------
@@ -2194,23 +2084,11 @@ def _best_keep_oracle() -> str:
     "kept doc + removed count per multi-member cluster",
 )
 def t_dedup_best_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _dedup_best_keep_lazy(spark, sf_dir)
-    # survivor list is multi-cluster-cardinality (tiny): materialize and
-    # release the corpus-mass shingle/bucket caches
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def _dedup_best_keep_lazy(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-):
     from ..operators.components import connected_components
     from .docpipe import _jaccard_edge_pairs
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    pairs, caches = _jaccard_edge_pairs(d, persist=persist)
+    pairs, caches = _jaccard_edge_pairs(d)
     comp = connected_components(pairs, "da", "db")
     allc = (
         d.select("doc_id", "n_chars")
@@ -2231,7 +2109,7 @@ def _dedup_best_keep_lazy(
         ).alias("best"),
         F.count(F.lit(1)).alias("csz"),
     )
-    return (
+    out = (
         agg.filter(F.col("csz") >= 2)
         .select(
             "cluster",
@@ -2240,7 +2118,10 @@ def _dedup_best_keep_lazy(
             (F.col("csz") - 1).cast("bigint").alias("n_removed"),
         )
         .orderBy("cluster")
-    ), caches
+    )
+    # survivor list is multi-cluster-cardinality (tiny): materialize and
+    # release the corpus-mass shingle/bucket caches
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -2317,16 +2198,10 @@ def _bigram_ppl_oracle() -> str:
     "gate one order above d_unigram_ppl)",
 )
 def t_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _bigram_ppl_lazy(spark, sf_dir)
-    # per-doc 4-col output: materialize, release the type-count cache
-    return checkpoint_release(out, caches)
-
-
-def _bigram_ppl_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     avg = -(F.col("s").cast("double") / F.col("n_bigrams"))
-    scored, caches = _bigram_scored(d, persist=persist)
-    return (
+    scored, caches = _bigram_scored(d)
+    out = (
         scored.groupBy("doc_id")
         .agg(
             F.sum("cdt").cast("bigint").alias("n_bigrams"),
@@ -2339,15 +2214,12 @@ def _bigram_ppl_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
             (avg > _BG_HI).alias("high_ppl"),
         )
         .orderBy("doc_id")
-    ), caches
+    )
+    # per-doc 4-col output: materialize, release the type-count cache
+    return checkpoint_release(out, caches)
 
 
-ALL_SPECS["t_bigram_ppl"].lazy_plan = lambda spark, sf_dir: _bigram_ppl_lazy(
-    spark, sf_dir, persist=False
-)[0]
-
-
-def _bigram_scored(d: DataFrame, persist: bool = True):
+def _bigram_scored(d: DataFrame):
     """Per-(doc, bigram-TYPE) scored stream of the interpolated LM →
     ((doc_id, cdt, lpc), caches): cdt = the type's position count in
     the doc, lpc = cdt · CAST(lp AS DECIMAL(25,6)). Shared by
@@ -2382,8 +2254,7 @@ def _bigram_scored(d: DataFrame, persist: bool = True):
         .select("doc_id", "bg.w1", "bg.w2")
     )
     dbc = bi.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("cdt"))
-    if persist:
-        dbc = dbc.persist()
+    dbc = dbc.persist()
     c2 = dbc.groupBy("w1", "w2").agg(F.sum("cdt").cast("bigint").alias("c2"))
     ca = c1.select(F.col("w").alias("w1"), F.col("c").alias("ca"))
     cb = c1.select(F.col("w").alias("w2"), F.col("c").alias("cb"))
@@ -2409,7 +2280,7 @@ def _bigram_scored(d: DataFrame, persist: bool = True):
             ).alias("lpc"),
         )
     )
-    return scored, ([dbc] if persist else [])
+    return scored, [dbc]
 
 
 # --------------------------------------------------------------------------
@@ -2526,23 +2397,6 @@ def t_lsh_band_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("b", "s_tenths")
     )
-
-
-# expose the lazy pipelines to tools/plan_audit.py (the registered
-# callables checkpoint eagerly, so their returned plan is just an RDD
-# scan — the audit should see the real pipeline)
-ALL_SPECS["t_substring_spans"].lazy_plan = (
-    lambda spark, sf_dir: _substring_spans_lazy(spark, sf_dir)[0]
-)
-ALL_SPECS["t_substring_dedup"].lazy_plan = (
-    lambda spark, sf_dir: _substring_dedup_lazy(spark, sf_dir)[0]
-)
-ALL_SPECS["t_source_overlap"].lazy_plan = (
-    lambda spark, sf_dir: _source_overlap_lazy(spark, sf_dir, persist=False)[0]
-)
-ALL_SPECS["t_dedup_best_keep"].lazy_plan = (
-    lambda spark, sf_dir: _dedup_best_keep_lazy(spark, sf_dir, persist=False)[0]
-)
 
 
 # --------------------------------------------------------------------------
@@ -2741,9 +2595,7 @@ def _lr_calibration_oracle() -> str:
 def t_logreg_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, feat = _lr_pipeline(spark, sf_dir, _logreg_calibration_finish)
     # decile-bin output — eager-materialize, release the feature cache
-    out = out.localCheckpoint(eager=True)
-    feat.unpersist()
-    return out
+    return checkpoint_release(out, [feat])
 
 
 def _logreg_calibration_finish(feat: DataFrame, b: DataFrame) -> DataFrame:
@@ -2795,9 +2647,7 @@ def _logreg_calibration_finish(feat: DataFrame, b: DataFrame) -> DataFrame:
 def t_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, feat = _lr_pipeline(spark, sf_dir, _uncertainty_sample_finish)
     # top-20 output — eager-materialize, release the feature cache
-    out = out.localCheckpoint(eager=True)
-    feat.unpersist()
-    return out
+    return checkpoint_release(out, [feat])
 
 
 def _uncertainty_sample_finish(feat: DataFrame, b: DataFrame) -> DataFrame:
@@ -2813,18 +2663,6 @@ def _uncertainty_sample_finish(feat: DataFrame, b: DataFrame) -> DataFrame:
         )
         .orderBy("margin", "doc_id")
         .limit(20)
-    )
-
-
-for _lr_q, _lr_fin in (
-    ("t_quality_logreg", _quality_logreg_finish),
-    ("t_logreg_calibration", _logreg_calibration_finish),
-    ("t_uncertainty_sample", _uncertainty_sample_finish),
-):
-    ALL_SPECS[_lr_q].lazy_plan = (
-        lambda spark, sf_dir, _fin=_lr_fin: _lr_pipeline(
-            spark, sf_dir, _fin, persist=False
-        )[0]
     )
 
 
@@ -2947,9 +2785,7 @@ def _refinery_e2e_oracle() -> str:
     )
 
 
-def _refinery_gates(
-    spark: SparkSession, sf_dir: str, persist: bool = True, two_lane: bool = False
-):
+def _refinery_gates(spark: SparkSession, sf_dir: str, two_lane: bool = False):
     """The funnel's three document-side gate relations (gopher flags,
     bigram NLL, ExactSubstr coverage) + the caches the caller must
     release — shared by the gated funnels (they differ only in the
@@ -2958,12 +2794,10 @@ def _refinery_gates(
     trusts hash equality unverified (the semantic stage exact-scores
     every blocked candidate, so its bucket collisions are benign)."""
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    return _refinery_gates_from(d, persist=persist, two_lane=two_lane)
+    return _refinery_gates_from(d, two_lane=two_lane)
 
 
-def _refinery_gates_from(
-    d: DataFrame, persist: bool = True, two_lane: bool = False
-):
+def _refinery_gates_from(d: DataFrame, two_lane: bool = False):
     """_refinery_gates over a PREBUILT (doc_id, source, text) frame —
     the seam the HTML-fed funnel uses to run the identical gate chain
     on EXTRACTED text (htmlpipe.t_refinery_html_e2e)."""
@@ -2977,7 +2811,7 @@ def _refinery_gates_from(
             * F.col("p_stop") * F.col("p_rep")
         ).alias("p_gopher"),
     )
-    scored, bg_caches = _bigram_scored(d, persist=persist)
+    scored, bg_caches = _bigram_scored(d)
     caches.extend(bg_caches)
     nll = (
         scored.groupBy("doc_id")
@@ -2990,7 +2824,7 @@ def _refinery_gates_from(
             ).alias("avg_nll")
         )
     )
-    _toks, pos = _ss_position_stream(d, persist=persist, two_lane=two_lane)
+    _toks, pos = _ss_position_stream(d, two_lane=two_lane)
     caches.append(pos)
     keys = ["h", "h2"] if two_lane else ["h"]
     canon = (
@@ -3013,16 +2847,6 @@ def _refinery_gates_from(
         .agg(F.count(F.lit(1)).alias("n_cov"))
     )
     return gf, nll, cov, caches
-
-
-def _refinery_e2e_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
-    from .vecpipe2 import _semdedup_keep_lazy
-
-    gf, nll, cov, caches = _refinery_gates(spark, sf_dir, persist=persist)
-    keep, sem_caches = _semdedup_keep_lazy(spark, sf_dir, persist=persist)
-    caches.extend(sem_caches)
-    keep = keep.select(F.col("vec_id").alias("doc_id"), F.col("keep").alias("sem0"))
-    return _refinery_funnel(gf, nll, cov, keep), caches
 
 
 def _refinery_verdicts(gf, nll, cov, keep):
@@ -3106,17 +2930,15 @@ def _refinery_funnel(gf, nll, cov, keep):
     "-> SemDeDup keep-list; per-stage surviving docs + token mass",
 )
 def t_refinery_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _refinery_e2e_lazy(spark, sf_dir)
+    from .vecpipe2 import _semdedup_keep_lazy
+
+    gf, nll, cov, caches = _refinery_gates(spark, sf_dir)
+    keep, sem_caches = _semdedup_keep_lazy(spark, sf_dir)
+    caches.extend(sem_caches)
+    keep = keep.select(F.col("vec_id").alias("doc_id"), F.col("keep").alias("sem0"))
+    out = _refinery_funnel(gf, nll, cov, keep)
     # 5-row funnel: materialize, then release every gate-family cache
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-ALL_SPECS["t_refinery_e2e"].lazy_plan = (
-    lambda spark, sf_dir: _refinery_e2e_lazy(spark, sf_dir, persist=False)[0]
-)
+    return checkpoint_release(out, caches)
 
 
 # The 100 TB configuration of the same funnel: stage 5 swaps the exact-
@@ -3142,16 +2964,13 @@ def _refinery_linear_oracle() -> str:
 def _refinery_linear_lazy(
     spark: SparkSession,
     sf_dir: str,
-    persist: bool = True,
     two_lane: bool = False,
     tail=_refinery_funnel,
 ):
     from .docpipe import _semantic_keep_lazy
 
-    gf, nll, cov, caches = _refinery_gates(
-        spark, sf_dir, persist=persist, two_lane=two_lane
-    )
-    keep, sem_caches = _semantic_keep_lazy(spark, sf_dir, persist=persist)
+    gf, nll, cov, caches = _refinery_gates(spark, sf_dir, two_lane=two_lane)
+    keep, sem_caches = _semantic_keep_lazy(spark, sf_dir)
     caches.extend(sem_caches)
     keep = keep.select("doc_id", F.col("keep").alias("sem0"))
     return tail(gf, nll, cov, keep), caches
@@ -3167,15 +2986,7 @@ def _refinery_linear_lazy(
 )
 def t_refinery_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, caches = _refinery_linear_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-ALL_SPECS["t_refinery_linear"].lazy_plan = (
-    lambda spark, sf_dir: _refinery_linear_lazy(spark, sf_dir, persist=False)[0]
-)
+    return checkpoint_release(out, caches)
 
 
 @_q(
@@ -3192,17 +3003,7 @@ ALL_SPECS["t_refinery_linear"].lazy_plan = (
 )
 def t_refinery_lane2(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, caches = _refinery_linear_lazy(spark, sf_dir, two_lane=True)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-ALL_SPECS["t_refinery_lane2"].lazy_plan = (
-    lambda spark, sf_dir: _refinery_linear_lazy(
-        spark, sf_dir, persist=False, two_lane=True
-    )[0]
-)
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -3285,19 +3086,15 @@ def _kn_oracle() -> str:
     "from exact integer count tables",
 )
 def t_kneser_ney_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _kn_ppl_lazy(spark, sf_dir, release=True)
+    return _kn_ppl_lazy(spark, sf_dir)
 
 
-def _kn_ppl_lazy(
-    spark: SparkSession, sf_dir: str, top_v: int | None = None, release: bool = False
-) -> DataFrame:
+def _kn_ppl_lazy(spark: SparkSession, sf_dir: str, top_v: int | None = None) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    knll, caches = _kn_doc_nll(d, top_v=top_v, persist=release)
+    knll, caches = _kn_doc_nll(d, top_v=top_v)
     out = knll.select(
         "doc_id", "n_bigrams", trunc6(F.col("nll")).alias("avg_nll")
     ).orderBy("doc_id")
-    if not release:
-        return out
     # per-doc 3-col output: eager-materialize, release the type-count cache
     return checkpoint_release(out, caches)
 
@@ -3353,20 +3150,10 @@ def _kn_capped_oracle() -> str:
     "regardless of corpus size",
 )
 def t_kneser_ney_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _kn_ppl_lazy(spark, sf_dir, top_v=_KN_V, release=True)
+    return _kn_ppl_lazy(spark, sf_dir, top_v=_KN_V)
 
 
-ALL_SPECS["t_kneser_ney_ppl"].lazy_plan = lambda spark, sf_dir: _kn_ppl_lazy(
-    spark, sf_dir
-)
-ALL_SPECS["t_kneser_ney_capped"].lazy_plan = lambda spark, sf_dir: _kn_ppl_lazy(
-    spark, sf_dir, top_v=_KN_V
-)
-
-
-def _kn_doc_nll(
-    d: DataFrame, top_v: int | None = None, persist: bool = True
-):
+def _kn_doc_nll(d: DataFrame, top_v: int | None = None):
     """Per-doc Kneser-Ney mean NLL → (DataFrame(doc_id, n_bigrams, nll
     untruncated), caches-to-release).
 
@@ -3424,8 +3211,7 @@ def _kn_doc_nll(
     # relation makes the tokenize+explode pass run ONCE (it previously
     # ran twice: once under c2, once under scored).
     dbc = bi.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("cdt"))
-    if persist:
-        dbc = dbc.persist()
+    dbc = dbc.persist()
     c2 = dbc.groupBy("w1", "w2").agg(F.sum("cdt").cast("bigint").alias("c2"))
     c1 = c2.groupBy(F.col("w1")).agg(F.sum("c2").cast("bigint").alias("ca"))
     nfol = c2.groupBy(F.col("w1")).agg(F.count(F.lit(1)).alias("nf"))
@@ -3467,7 +3253,7 @@ def _kn_doc_nll(
             (-(F.col("s").cast("double") / F.col("n_bigrams"))).alias("nll"),
         )
     )
-    return out, ([dbc] if persist else [])
+    return out, [dbc]
 
 
 # --------------------------------------------------------------------------
@@ -3691,20 +3477,13 @@ def _curriculum_oracle() -> str:
     "bucketing — no corpus-wide ntile window)",
 )
 def t_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, caches = _curriculum_lazy(spark, sf_dir)
-    # 10-row stage table: materialize, release the knll + type-count caches
-    return checkpoint_release(out, caches)
-
-
-def _curriculum_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    knll, caches = _kn_doc_nll(d, persist=persist)
-    if persist:
-        # knll feeds BOTH the decile aggregate and the staged bucketing —
-        # unpersisted, the whole KN chain executed twice (optimization
-        # round 11; per-doc 3-scalar rows, corpus-linear but tiny)
-        knll = knll.persist()
-        caches = caches + [knll]
+    knll, caches = _kn_doc_nll(d)
+    # knll feeds BOTH the decile aggregate and the staged bucketing —
+    # unpersisted, the whole KN chain executed twice (optimization
+    # round 11; per-doc 3-scalar rows, corpus-linear but tiny)
+    knll = knll.persist()
+    caches = caches + [knll]
     th = knll.agg(
         *[
             F.percentile(F.col("nll"), F.lit(dd / 10.0)).alias(f"t{dd}")
@@ -3717,7 +3496,7 @@ def _curriculum_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     staged = knll.crossJoin(F.broadcast(th)).select(
         "doc_id", "n_bigrams", "nll", stage.alias("stage")
     )
-    return (
+    out = (
         staged.groupBy("stage")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -3727,12 +3506,9 @@ def _curriculum_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
             trunc6(F.max("nll")).alias("max_nll"),
         )
         .orderBy("stage")
-    ), caches
-
-
-ALL_SPECS["t_curriculum_buckets"].lazy_plan = lambda spark, sf_dir: _curriculum_lazy(
-    spark, sf_dir, persist=False
-)[0]
+    )
+    # 10-row stage table: materialize, release the knll + type-count caches
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -3804,7 +3580,7 @@ _WN_W = 4  # winnowing window; guarantee t = K + W - 1 = 8 tokens
     "density vs the ~2/(W+1) theoretical rate, and cross-doc shared "
     "fingerprints (the near-dup candidate signal)",
 )
-def t_winnowing_fingerprint(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def t_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     k, wdw = _WN_K, _WN_W
@@ -3831,8 +3607,7 @@ def t_winnowing_fingerprint(spark: SparkSession, sf_dir: str, persist: bool = Tr
     # without the cache the tokenize/explode/md5 lineage executes
     # twice (two corpus scans at 100 TB; the d_oov_bigram_score rule).
     # Released via checkpoint_release below.
-    if persist:
-        h = h.persist()
+    h = h.persist()
     wmin = Window.partitionBy("doc_id").orderBy("i").rowsBetween(0, wdw - 1)
     sel = (
         h.select(
@@ -3875,12 +3650,7 @@ def t_winnowing_fingerprint(spark: SparkSession, sf_dir: str, persist: bool = Tr
         )
         .orderBy("source")
     )
-    return checkpoint_release(out, [h]) if persist else out
-
-
-ALL_SPECS["t_winnowing_fingerprint"].lazy_plan = (
-    lambda spark, sf_dir: t_winnowing_fingerprint(spark, sf_dir, persist=False)
-)
+    return checkpoint_release(out, [h])
 
 
 # --------------------------------------------------------------------------

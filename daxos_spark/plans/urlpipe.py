@@ -355,7 +355,7 @@ def _ingest_snap_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ingest_e2e_impl(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def _ingest_e2e_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.html import block_stats, extract_main
     from .htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
     from .htmlpipe import _META_ROBOTS_RE as _META_RE
@@ -363,11 +363,10 @@ def _ingest_e2e_impl(spark: SparkSession, sf_dir: str, persist: bool = True) -> 
     from .textpipe import _gopher_flags
 
     snap = _ingest_snap_df(spark, sf_dir)
-    if persist:
-        # snap feeds the stage-1 census AND the dedup/gate/extract chain;
-        # the synthesis is concat-cheap but the canonicalizer is a regex
-        # chain — one checkpoint bounds it to one pass
-        snap = snap.localCheckpoint(eager=True)
+    # snap feeds the stage-1 census AND the dedup/gate/extract chain;
+    # the synthesis is concat-cheap but the canonicalizer is a regex
+    # chain — one checkpoint bounds it to one pass
+    snap = snap.localCheckpoint(eager=True)
     kept = snap.groupBy("curl").agg(F.expr("max_by(doc_id, ts)").alias("doc_id"))
     surv = snap.join(kept.select("doc_id"), "doc_id", "left_semi")
     robots = f"lower(regexp_extract(page, '{_spark_lit(_META_RE)}', 1))"
@@ -382,8 +381,7 @@ def _ingest_e2e_impl(spark: SparkSession, sf_dir: str, persist: bool = True) -> 
         "doc_id", "source", extract_main("stats").alias("text")
     )
     exd = ext.filter(F.length("text") > 0)
-    if persist:
-        exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
+    exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
     g = _gopher_flags(exd).join(
         exd.select("doc_id", F.length("text").alias("chars")), "doc_id"
     )
@@ -616,17 +614,14 @@ def _frontier_oracle() -> str:
     """
 
 
-def _frontier_e2e_impl(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def _frontier_e2e_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.html import _spark_lit, block_stats, extract_main
     from .htmlpipe import _META_ROBOTS_RE as _META_RE
     from .htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
     from .textpipe import _gopher_flags
 
     snap = _ingest_snap_df(spark, sf_dir)
-    if persist:
-        snap = snap.localCheckpoint(eager=True)
+    snap = snap.localCheckpoint(eager=True)
     robots = _robots_txt_sql(
         "CAST(regexp_extract(regexp_extract(curl, '://([^/]+)', 1),"
         " 'example([0-9]+)', 1) AS BIGINT)"
@@ -638,8 +633,7 @@ def _frontier_e2e_impl(
             " x -> startswith(regexp_extract(curl, '://[^/]+(/.*)', 1), x))"
         )
     )
-    if persist:
-        rok = rok.localCheckpoint(eager=True)  # census + dedup chain
+    rok = rok.localCheckpoint(eager=True)  # census + dedup chain
     kept = rok.groupBy("curl").agg(F.expr("max_by(doc_id, ts)").alias("doc_id"))
     surv = rok.join(kept.select("doc_id"), "doc_id", "left_semi")
     meta = f"lower(regexp_extract(page, '{_spark_lit(_META_RE)}', 1))"
@@ -654,8 +648,7 @@ def _frontier_e2e_impl(
         "doc_id", "source", extract_main("stats").alias("text")
     )
     exd = ext.filter(F.length("text") > 0)
-    if persist:
-        exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
+    exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
     g = _gopher_flags(exd).join(
         exd.select("doc_id", F.length("text").alias("chars")), "doc_id"
     )
@@ -735,15 +728,12 @@ def _crawl_budget_oracle() -> str:
     """
 
 
-def _crawl_budget_impl(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def _crawl_budget_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    y = _host_yield_impl(spark, sf_dir, persist=persist)
+    y = _host_yield_impl(spark, sf_dir)
     w = y.select("host", (F.col("n_gopher") + F.lit(1)).cast("bigint").alias("wt"))
-    if persist:
-        w = w.localCheckpoint(eager=True)  # census reused by 2 aggregates
+    w = w.localCheckpoint(eager=True)  # census reused by 2 aggregates
     tot = w.agg(F.sum("wt").alias("tw"))
     q = w.crossJoin(F.broadcast(tot)).select(
         "host",
@@ -878,7 +868,7 @@ def _delta_chain_sql() -> str:
     )"""
 
 
-def _delta_relations(spark: SparkSession, sf_dir: str, persist: bool = True):
+def _delta_relations(spark: SparkSession, sf_dir: str):
     """Spark twin of `_delta_chain_sql`: (c, committed, batch, cls,
     merged) with the delta family's checkpoint discipline applied."""
     c = _snaps_df(spark, sf_dir).select(
@@ -891,10 +881,9 @@ def _delta_relations(spark: SparkSession, sf_dir: str, persist: bool = True):
             " THEN 1 ELSE 0 END"
         ).alias("in_delta"),
     )
-    if persist:
-        # the canonicalizer regex chain feeds three groupBys (committed,
-        # batch, fullidx) — one checkpoint bounds it to one pass
-        c = c.localCheckpoint(eager=True)
+    # the canonicalizer regex chain feeds three groupBys (committed,
+    # batch, fullidx) — one checkpoint bounds it to one pass
+    c = c.localCheckpoint(eager=True)
     committed = c.filter("in_delta = 0").groupBy("curl").agg(
         F.max("ts").alias("last_ts"),
         F.expr("max_by(doc_id, ts)").alias("doc_id"),
@@ -904,17 +893,15 @@ def _delta_relations(spark: SparkSession, sf_dir: str, persist: bool = True):
         F.expr("max_by(doc_id, ts)").alias("b_doc"),
         F.count(F.lit(1)).alias("b_snaps"),
     )
-    if persist:
-        # the index/batch relations each feed three consumers (classify
-        # join, untouched anti-join, census aggregates); both are bounded
-        # by canonical-URL cardinality here — at production `committed`
-        # IS a stored bucketed table, so the checkpoint stands in for the
-        # table scan, not for an extra corpus pass
-        committed = committed.localCheckpoint(eager=True)
-        batch = batch.localCheckpoint(eager=True)
+    # the index/batch relations each feed three consumers (classify
+    # join, untouched anti-join, census aggregates); both are bounded
+    # by canonical-URL cardinality here — at production `committed`
+    # IS a stored bucketed table, so the checkpoint stands in for the
+    # table scan, not for an extra corpus pass
+    committed = committed.localCheckpoint(eager=True)
+    batch = batch.localCheckpoint(eager=True)
     cls = _classify_batch(committed, batch)
-    if persist:
-        cls = cls.localCheckpoint(eager=True)  # survivors + verdict census
+    cls = cls.localCheckpoint(eager=True)  # survivors + verdict census
     merged = _merge_index(cls, committed, batch)
     return c, committed, batch, cls, merged
 
@@ -1032,12 +1019,10 @@ def _manifest_diff_oracle() -> str:
     """
 
 
-def _manifest_diff_impl(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def _manifest_diff_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
-    _, committed, _, _, merged = _delta_relations(spark, sf_dir, persist)
+    _, committed, _, _, merged = _delta_relations(spark, sf_dir)
 
     def _keyed(df: DataFrame) -> DataFrame:
         h = md5_long(F.col("doc_id").cast("string"))
@@ -1048,11 +1033,10 @@ def _manifest_diff_impl(
         )
 
     av, bv = _keyed(committed), _keyed(merged)
-    if persist:
-        # each keyed keep-set feeds its shard aggregate AND one side of
-        # both anti-joins; index-cardinality-bounded
-        av = av.localCheckpoint(eager=True)
-        bv = bv.localCheckpoint(eager=True)
+    # each keyed keep-set feeds its shard aggregate AND one side of
+    # both anti-joins; index-cardinality-bounded
+    av = av.localCheckpoint(eager=True)
+    bv = bv.localCheckpoint(eager=True)
     added = bv.join(av.select("doc_id"), "doc_id", "left_anti")
     removed = av.join(bv.select("doc_id"), "doc_id", "left_anti")
     aagg = av.groupBy("shard_id").agg(
@@ -1188,9 +1172,7 @@ def _ingest_epochs_oracle() -> str:
     """
 
 
-def _ingest_epochs_impl(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def _ingest_epochs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
     c = _snaps_df(spark, sf_dir).select(
@@ -1199,8 +1181,7 @@ def _ingest_epochs_impl(
         F.expr(_CANON_SPARK).alias("curl"),
         F.expr(_EP_SQL).alias("ep"),
     )
-    if persist:
-        c = c.localCheckpoint(eager=True)  # four groupBy consumers
+    c = c.localCheckpoint(eager=True)  # four groupBy consumers
 
     def _idx(df: DataFrame) -> DataFrame:
         return df.groupBy("curl").agg(
@@ -1219,7 +1200,7 @@ def _ingest_epochs_impl(
         # index/batch/classify relations each feed 2-3 consumers; all
         # are bounded by canonical-URL cardinality (at production the
         # folded index is a stored table between epochs anyway)
-        return df.localCheckpoint(eager=True) if persist else df
+        return df.localCheckpoint(eager=True)
 
     idx0 = _ck(_idx(c.filter("ep = 0")))
     b1 = _ck(_batch(c.filter("ep = 1")))
@@ -1293,12 +1274,10 @@ def _ingest_epochs_impl(
     ).orderBy("step")
 
 
-def _ingest_delta_impl(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def _ingest_delta_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
-    c, committed, batch, cls, merged = _delta_relations(spark, sf_dir, persist)
+    c, committed, batch, cls, merged = _delta_relations(spark, sf_dir)
     fullidx = c.groupBy("curl").agg(
         F.max("ts").alias("last_ts"),
         F.expr("max_by(doc_id, ts)").alias("doc_id"),
@@ -1456,9 +1435,7 @@ def _host_yield_oracle() -> str:
     """
 
 
-def _host_yield_impl(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> DataFrame:
+def _host_yield_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.html import _spark_lit, block_stats, extract_main
     from .htmlpipe import _META_ROBOTS_RE as _META_RE
     from .htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
@@ -1467,8 +1444,7 @@ def _host_yield_impl(
     snap = _ingest_snap_df(spark, sf_dir).withColumn(
         "host", F.regexp_extract("curl", _HOST_RE, 1)
     )
-    if persist:
-        snap = snap.localCheckpoint(eager=True)  # synthesis feeds 3 consumers
+    snap = snap.localCheckpoint(eager=True)  # synthesis feeds 3 consumers
     kept_ids = snap.groupBy("curl").agg(F.expr("max_by(doc_id, ts)").alias("doc_id"))
     surv = snap.join(kept_ids.select("doc_id"), "doc_id", "left_semi")
     robots = f"lower(regexp_extract(page, '{_spark_lit(_META_RE)}', 1))"
@@ -1482,16 +1458,14 @@ def _host_yield_impl(
             & ~F.col("source").isin(*_OPT_SRC)
         ).cast("int"),
     ).select("doc_id", "source", "page", "host", "kept")
-    if persist:
-        gate = gate.localCheckpoint(eager=True)  # extraction + host census
+    gate = gate.localCheckpoint(eager=True)  # extraction + host census
     exd = (
         gate.filter("kept = 1")
         .withColumn("stats", block_stats("page"))
         .select("doc_id", "source", extract_main("stats").alias("text"))
         .filter(F.length("text") > 0)
     )
-    if persist:
-        exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
+    exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
     gf = _gopher_flags(exd).select(
         "doc_id",
         (
@@ -1543,7 +1517,6 @@ def _host_yield_impl(
 def _register_ingest():
     from ..functions.html import _spark_lit  # noqa: F401
     from .htmlpipe import _META_ROBOTS_RE
-    from .registry import ALL_SPECS
 
     global _META_RE_SQL
     _META_RE_SQL = _META_ROBOTS_RE
@@ -1562,9 +1535,6 @@ def _register_ingest():
             tags=("url",),
         )
     )
-    ALL_SPECS["t_ingest_e2e"].lazy_plan = lambda spark, sf_dir: _ingest_e2e_impl(
-        spark, sf_dir, persist=False
-    )
     register(
         QuerySpec(
             name="t_ingest_delta",
@@ -1581,9 +1551,6 @@ def _register_ingest():
             tags=("url",),
         )
     )
-    ALL_SPECS["t_ingest_delta"].lazy_plan = lambda spark, sf_dir: _ingest_delta_impl(
-        spark, sf_dir, persist=False
-    )
     register(
         QuerySpec(
             name="t_ingest_epochs",
@@ -1599,9 +1566,6 @@ def _register_ingest():
             tags=("url",),
         )
     )
-    ALL_SPECS["t_ingest_epochs"].lazy_plan = lambda spark, sf_dir: _ingest_epochs_impl(
-        spark, sf_dir, persist=False
-    )
     register(
         QuerySpec(
             name="t_host_yield",
@@ -1615,9 +1579,6 @@ def _register_ingest():
             "ingest machinery, two host-keyed partial aggregates",
             tags=("url",),
         )
-    )
-    ALL_SPECS["t_host_yield"].lazy_plan = lambda spark, sf_dir: _host_yield_impl(
-        spark, sf_dir, persist=False
     )
     register(
         QuerySpec(
@@ -1635,9 +1596,6 @@ def _register_ingest():
             tags=("url",),
         )
     )
-    ALL_SPECS["t_crawl_budget"].lazy_plan = lambda spark, sf_dir: _crawl_budget_impl(
-        spark, sf_dir, persist=False
-    )
     register(
         QuerySpec(
             name="t_manifest_diff",
@@ -1653,9 +1611,6 @@ def _register_ingest():
             "sum(removed) == refetch_newer",
             tags=("url",),
         )
-    )
-    ALL_SPECS["t_manifest_diff"].lazy_plan = lambda spark, sf_dir: _manifest_diff_impl(
-        spark, sf_dir, persist=False
     )
     register(
         QuerySpec(
@@ -1689,9 +1644,6 @@ def _register_ingest():
             "extraction)",
             tags=("url",),
         )
-    )
-    ALL_SPECS["t_frontier_e2e"].lazy_plan = lambda spark, sf_dir: _frontier_e2e_impl(
-        spark, sf_dir, persist=False
     )
 
 

@@ -42,7 +42,7 @@ from ..functions.hashing import md5_long_sql
 from ..functions.similarity import int_code
 from ..functions.vectors import dot, l2_norm, to_double
 from .docpipe import _fanout
-from .registry import ALL_SPECS, QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
+from .registry import QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
 
 _DIM = 64
 
@@ -233,17 +233,6 @@ def semdedup_summary(e: DataFrame, n_clusters: int) -> DataFrame:
     (LSH-bucket candidate blocking, 1.3× at 10×). This exact-relational
     form — any K — is the hash-checked correctness face; ``e_semdedup``
     pins K=32 (first-K init)."""
-    out, caches = _semdedup_summary_lazy(e, n_clusters)
-    # K-row result: materialize eagerly and release the corpus-exploded
-    # position cache + assignment cache (see t_substring_spans — callers
-    # outside the cache-clearing harnesses must not accumulate these)
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def _semdedup_summary_lazy(e: DataFrame, n_clusters: int):
     af, rm, caches = _semdedup_marks(e, n_clusters)
     out = (
         af.join(rm, (rm["cluster"] == af["cluster"]) & (rm["dup_id"] == af["vec_id"]), "left")
@@ -254,15 +243,16 @@ def _semdedup_summary_lazy(e: DataFrame, n_clusters: int):
         )
         .orderBy("cluster")
     )
-    return out, caches
+    # K-row result: materialize eagerly and release the corpus-exploded
+    # position cache + assignment cache (see t_substring_spans — callers
+    # outside the cache-clearing harnesses must not accumulate these)
+    return checkpoint_release(out, caches)
 
 
-def _semdedup_marks(e: DataFrame, n_clusters: int, persist: bool = True):
+def _semdedup_marks(e: DataFrame, n_clusters: int):
     """Shared SemDeDup core: returns (``af`` assignments, ``rm``
     removed ids, and the persisted intermediates the caller must
-    unpersist after materializing its result). ``persist=False`` is
-    the plan-inspection path — it never registers a cache the caller
-    cannot release."""
+    unpersist after materializing its result)."""
     dec = "decimal(25,6)"
     # fan out FIRST: the local embeddings table is a single-file,
     # single-row-group parquet (1 partition), and everything downstream
@@ -274,8 +264,7 @@ def _semdedup_marks(e: DataFrame, n_clusters: int, persist: bool = True):
     # _fanout is a no-op; values are row-wise, so the plan change
     # cannot move the hash.
     emb = _fanout(e).select("vec_id", to_double(F.col("embedding")).alias("xs"))
-    if persist:
-        emb = emb.persist()
+    emb = emb.persist()
     # exploded view, derived on demand from the cached arrays — only the
     # centroid update needs it
     u = emb.select("vec_id", F.posexplode("xs").alias("pos", "x"))
@@ -330,9 +319,8 @@ def _semdedup_marks(e: DataFrame, n_clusters: int, persist: bool = True):
         "cluster", F.coalesce(F.col("marr"), F.col("carr")).alias("carr")
     )
     af = assign(ct1)
-    if persist:
-        # pair join reads it twice (both sides) + final agg
-        af = af.persist()
+    # pair join reads it twice (both sides) + final agg
+    af = af.persist()
 
     idot = lambda x, y: F.aggregate(
         F.zip_with(x, y, lambda p, q: p * q), F.lit(0).cast("bigint"), lambda acc, v: acc + v
@@ -390,16 +378,11 @@ def v_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, caches = _semdedup_keep_lazy(spark, sf_dir)
     # vector-cardinality keep-list (3 ints/row): checkpoint + release
     # the much larger exploded-position and assignment caches
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    return checkpoint_release(out, caches)
 
 
-def _semdedup_keep_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
-    af, rm, caches = _semdedup_marks(
-        load_tables(spark, sf_dir)["embeddings"], _SD_K, persist=persist
-    )
+def _semdedup_keep_lazy(spark: SparkSession, sf_dir: str):
+    af, rm, caches = _semdedup_marks(load_tables(spark, sf_dir)["embeddings"], _SD_K)
     out = (
         af.join(rm, (rm["cluster"] == af["cluster"]) & (rm["dup_id"] == af["vec_id"]), "left")
         .select(
@@ -410,25 +393,6 @@ def _semdedup_keep_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .orderBy("vec_id")
     )
     return out, caches
-
-
-# plan_audit hooks: the registered callables checkpoint eagerly
-ALL_SPECS["e_semdedup"].lazy_plan = lambda spark, sf_dir: _semdedup_summary_lazy(
-    load_tables(spark, sf_dir)["embeddings"], _SD_K
-)[0]
-ALL_SPECS["v_semdedup_keep"].lazy_plan = (
-    lambda spark, sf_dir: _semdedup_keep_lazy(spark, sf_dir)[0]
-)
-
-
-def _semdedup_scaled_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    e = load_tables(spark, sf_dir)["embeddings"]
-    return _semdedup_summary_lazy(e, math.ceil(e.count() / _SDS_TARGET))[0]
-
-
-ALL_SPECS["v_semdedup_scaled"].lazy_plan = _semdedup_scaled_lazy
 
 
 # --------------------------------------------------------------------------
@@ -511,7 +475,7 @@ def _mmr_oracle() -> str:
     "(λ=0.5); selection order and scores hash-checked vs an unrolled "
     "greedy-layer SQL oracle",
 )
-def v_mmr_rerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir)["embeddings"]
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
@@ -536,9 +500,8 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> Data
         .filter(F.col("rk") <= _MMR_CAND)
         .select("qid", "cid", "rel", "cv", "cn")
     )
-    if persist:
-        # both sides of the pair join
-        cand = cand.persist()
+    # both sides of the pair join
+    cand = cand.persist()
     a, b = cand.alias("a"), cand.alias("b")
     pr = a.join(
         b, (F.col("a.qid") == F.col("b.qid")) & (F.col("a.cid") != F.col("b.cid"))
@@ -579,14 +542,7 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str, persist: bool = True) -> Data
     out = res.select(
         "qid", "step", "selected_id", trunc6(F.col("score")).alias("mmr_score")
     ).orderBy("qid", "step")
-    if not persist:
-        return out
     return checkpoint_release(out, [cand])
-
-
-ALL_SPECS["v_mmr_rerank"].lazy_plan = (
-    lambda spark, sf_dir: v_mmr_rerank(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -975,14 +931,13 @@ def _hybrid_oracle() -> str:
     "then exact embedding rerank of only those candidates; both scores "
     "hash-checked",
 )
-def v_hybrid_search(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def v_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
 
     t = load_tables(spark, sf_dir)
     d = t["documents"]
     tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("t"))
-    if persist:
-        tok = tok.persist()
+    tok = tok.persist()
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dlen"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1040,14 +995,7 @@ def v_hybrid_search(spark: SparkSession, sf_dir: str, persist: bool = True) -> D
         .select("qid", "rk", "doc_id", trunc6(F.col("bm25")).alias("bm25"), "sem_dot")
         .orderBy("qid", "rk")
     )
-    if not persist:
-        return out
     return checkpoint_release(out, [tok])
-
-
-ALL_SPECS["v_hybrid_search"].lazy_plan = (
-    lambda spark, sf_dir: v_hybrid_search(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -1178,7 +1126,7 @@ def _pca_oracle() -> str:
     doc="top principal direction via 3 relational power-iteration rounds "
     "on the distributed Gram (one corpus pass; loadings hash-checked)",
 )
-def v_pca_power(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataFrame:
+def v_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = e_gram_matrix(spark, sf_dir)  # (i, j, gram) upper triangle
     gf = gram.unionByName(
         gram.filter(F.col("i") < F.col("j")).select(
@@ -1186,8 +1134,7 @@ def v_pca_power(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataF
         )
     ).coalesce(1)  # dim^2 rows (~4k): one partition keeps the
     # 3 iteration matvecs out of 64-task shuffle territory
-    if persist:
-        gf = gf.persist()
+    gf = gf.persist()
     v = gf.select(F.col("i").alias("pos")).distinct().withColumn("x", F.lit(1.0))
     dec = "decimal(38,12)"
     for _ in range(_PI_ITERS):
@@ -1203,14 +1150,7 @@ def v_pca_power(spark: SparkSession, sf_dir: str, persist: bool = True) -> DataF
             "pos", (F.col("w") / F.col("z")).alias("x")
         )
     out = v.select("pos", trunc6(F.col("x")).alias("pc1_loading")).orderBy("pos")
-    if not persist:
-        return out
     return checkpoint_release(out, [gf])
-
-
-ALL_SPECS["v_pca_power"].lazy_plan = (
-    lambda spark, sf_dir: v_pca_power(spark, sf_dir, persist=False)
-)
 
 
 # --------------------------------------------------------------------------
@@ -2035,14 +1975,6 @@ def _db_cid_sql(cx: str, cy: str) -> str:
     "8-neighborhood CC clusters, border assignment, noise row",
 )
 def v_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, cells = _grid_dbscan_lazy(spark, sf_dir)
-    # cluster-cardinality output — eager-materialize, release the cell cache
-    out = out.localCheckpoint(eager=True)
-    cells.unpersist()
-    return out
-
-
-def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
     from ..operators.components import connected_components
 
     e = load_tables(spark, sf_dir)["embeddings"]
@@ -2061,9 +1993,8 @@ def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("cid", cid)
     )
-    if persist:
-        # feeds core/border/noise consumers
-        cells = cells.persist()
+    # feeds core/border/noise consumers
+    cells = cells.persist()
     core = cells.filter(F.col("cnt") >= _DB_MINPTS)
     # offset-explode adjacency: each core cell emits its 9 shifted keys,
     # an equi-join on the shifted key finds neighbors — never a distance
@@ -2143,12 +2074,8 @@ def _grid_dbscan_lazy(spark: SparkSession, sf_dir: str, persist: bool = True):
         .unionByName(noise)
         .orderBy("component")
     )
-    return out, cells
-
-
-ALL_SPECS["v_grid_dbscan"].lazy_plan = (
-    lambda spark, sf_dir: _grid_dbscan_lazy(spark, sf_dir, persist=False)[0]
-)
+    # cluster-cardinality output — eager-materialize, release the cell cache
+    return checkpoint_release(out, [cells])
 
 
 # --------------------------------------------------------------------------

@@ -116,13 +116,13 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "plans/textpipe.py:_uncertainty_sample_finish": (1, "1-row coefficient vector"),
     "plans/textpipe.py:t_leakage_split": (2, "per-split doc totals (2 rows) x2"),
     "plans/textpipe.py:t_cms_heavy_hitters": (1, "CMS sketch rows (fixed d x w)"),
-    "plans/textpipe.py:_bm25_lazy": (1, "1-row avgdl aggregate"),
+    "plans/textpipe.py:t_bm25_topk": (1, "1-row avgdl aggregate"),
     "plans/textpipe.py:t_refinery_funnel": (2, "1-row stage totals"),
     "plans/textpipe.py:t_ngram_novelty": (1, "1-row decile bounds"),
-    "plans/textpipe.py:_source_overlap_lazy": (2, "per-source shingle totals (source enum x2)"),
+    "plans/textpipe.py:t_source_overlap": (2, "per-source shingle totals (source enum x2)"),
     "plans/textpipe.py:_bigram_scored": (1, "1-row vocab/token totals"),
     "plans/textpipe.py:_kn_doc_nll": (1, "1-row discount/total aggregate"),
-    "plans/textpipe.py:_curriculum_lazy": (1, "1-row decile-threshold aggregate"),
+    "plans/textpipe.py:t_curriculum_buckets": (1, "1-row decile-threshold aggregate"),
     "plans/mlpipe.py:ml_deconfound_dims": (
         1,
         "per-variant beta table - bounded by the assay panel (~215k x k doubles "
@@ -169,7 +169,7 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "plans/vecpipe2.py:v_ivf_incremental": (1, "K-bounded centroids"),
     "plans/vecpipe2.py:v_trunc_knn": (2, "prefix-dim query panel x2"),
     "plans/vecpipe2.py:_label_noise_score": (1, "fixed probe panel"),
-    "plans/vecpipe2.py:_grid_dbscan_lazy": (
+    "plans/vecpipe2.py:v_grid_dbscan": (
         2,
         "per-core-CELL component labels (grid-cell-bounded, fixed eps grid)",
     ),

@@ -153,25 +153,6 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-def test_connected_components_known_edge_count(spark):
-    """Passing n_edges (the caller already knows the pair count) must
-    skip the sizing probe without changing the labeling."""
-    import pandas as pd
-
-    from daxos_spark.operators.components import connected_components
-
-    edges = pd.DataFrame(
-        {"a": [1, 2, 3, 10, 20, 21], "b": [2, 3, 4, 11, 21, 22]}
-    )
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            spark.createDataFrame(edges), n_edges=6
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
 def test_connected_components_raises_on_nonconvergence(spark):
     import pandas as pd
     import pytest as pt

@@ -127,16 +127,14 @@ def test_refinery_html_composed_equals_staged(spark, tmp_path):
     assert funnel[2] == ("extracted", 3)  # doc 3's extraction is empty
 
     # staged lane: gates fed the materialized extracted text directly
-    ext, verdicts, caches = _refinery_html_parts(spark, sf, persist=False)
+    ext, verdicts, caches = _refinery_html_parts(spark, sf)
     exd = ext.filter(F.length("text") > 0)
     import pandas as pd_  # noqa: F401
 
     mat = exd.select("doc_id", "source", "text").toPandas()
     assert set(mat["doc_id"]) == {0, 1, 2}
     staged = _refinery_verdicts(
-        *_refinery_gates_from(
-            spark.createDataFrame(mat), persist=False
-        )[:3],
+        *_refinery_gates_from(spark.createDataFrame(mat))[:3],
         # semantic stage vacuous here (no embeddings rows for these ids)
         spark.createDataFrame([], "doc_id bigint, sem0 int"),
     )
@@ -146,9 +144,10 @@ def test_refinery_html_composed_equals_staged(spark, tmp_path):
     }
     composed = {
         int(r["doc_id"]): (r["p_gopher"], r["p_ppl"], r["p_sub"], r["p_sem"])
-        for r in _refinery_html_parts(spark, sf, persist=False)[1].collect()
+        for r in _refinery_html_parts(spark, sf)[1].collect()
     }
     assert got == composed and set(got) == {0, 1, 2}
+    spark.catalog.clearCache()
 
 
 def test_url_canonical_adversarial_pairs(spark):

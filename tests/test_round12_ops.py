@@ -40,7 +40,7 @@ def test_bucket_pairs_small_and_big_branches(spark):
     )
     assert got == _naive_pairs(rows)
     # multiset property: a duplicated bucket duplicates its pairs
-    bkt2 = bkt.unionByName(bkt.limit(1))
+    bkt2 = bkt.unionByName(bkt.filter(F.size("ds") == 3))
     got2 = sorted(
         (r["pa"], r["pb"]) for r in _bucket_pairs(bkt2, seg=4).collect()
     )

@@ -151,11 +151,11 @@ def test_kn_capped_equals_uncapped_when_cap_exceeds_vocab(spark):
     d = load_tables(spark, SF_DIR)["documents"]
     base = {
         r["doc_id"]: (r["n_bigrams"], r["nll"])
-        for r in _kn_doc_nll(d, persist=False)[0].collect()
+        for r in _kn_doc_nll(d)[0].collect()
     }
     wide = {
         r["doc_id"]: (r["n_bigrams"], r["nll"])
-        for r in _kn_doc_nll(d, top_v=10**6, persist=False)[0].collect()
+        for r in _kn_doc_nll(d, top_v=10**6)[0].collect()
     }
     assert base == wide
     # at the gated V the OOV bucket must actually appear in the bigram
@@ -173,6 +173,7 @@ def test_kn_capped_equals_uncapped_when_cap_exceeds_vocab(spark):
     n_types = d.select(F.explode(toks).alias("w")).select("w").distinct().count()
     assert n_types > _KN_V, "corpus vocab no longer exceeds _KN_V - cap inert"
     assert _KN_OOV not in vocab
+    spark.catalog.clearCache()
 
 
 def test_two_lane_jaccard_pairs_identical_below_collision_horizon(spark):
@@ -180,13 +181,14 @@ def test_two_lane_jaccard_pairs_identical_below_collision_horizon(spark):
     from daxos_spark.plans.docpipe import _jaccard_edge_pairs
 
     d = load_tables(spark, SF_DIR)["documents"]
-    p1, caches1 = _jaccard_edge_pairs(d, persist=False)
-    p2, caches2 = _jaccard_edge_pairs(d, persist=False, two_lane=True)
+    p1, caches1 = _jaccard_edge_pairs(d)
+    p2, caches2 = _jaccard_edge_pairs(d, two_lane=True)
     one = {(r["da"], r["db"]) for r in p1.collect()}
     two = {(r["da"], r["db"]) for r in p2.collect()}
     assert one == two and len(one) > 0
     # the two-lane stream really carries the second lane
     assert "s2" in caches2[0].columns and "s2" not in caches1[0].columns
+    spark.catalog.clearCache()
 
 
 def test_stratified_sample_matches_python_replay(spark):

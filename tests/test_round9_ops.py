@@ -46,8 +46,8 @@ def test_two_lane_position_stream_carries_both_md5_lanes(spark):
     d = spark.createDataFrame(
         [(1, " ".join(toks))], "doc_id int, text string"
     )
-    _t, pos1 = _ss_position_stream(d, persist=False)
-    _t, pos2 = _ss_position_stream(d, persist=False, two_lane=True)
+    _t, pos1 = _ss_position_stream(d)
+    _t, pos2 = _ss_position_stream(d, two_lane=True)
     assert "h2" not in pos1.columns
     rows = {r["i"]: (r["h"], r["h2"]) for r in pos2.collect()}
     assert len(rows) == 3  # positions 1..n-K+1
@@ -59,6 +59,7 @@ def test_two_lane_position_stream_carries_both_md5_lanes(spark):
     # single-lane h is the same first lane (md5_long convention)
     one = {r["i"]: r["h"] for r in pos1.collect()}
     assert one == {i: h for i, (h, _h2) in rows.items()}
+    spark.catalog.clearCache()
 
 
 def test_shard_manifest_matches_python_replay(spark):

@@ -3,9 +3,11 @@
 
 Usage: python tools/dump_plan.py OUT_DIR SUFFIX [sf_dir] name [name ...]
 
-Writes OUT_DIR/<name>_<SUFFIX>.txt per query. Uses the spec's
-``lazy_plan`` when present (the real pipeline plan, not the
-post-checkpoint RDD scan of eagerly-materializing callables).
+Writes OUT_DIR/<name>_<SUFFIX>.txt per query. The registered callable
+runs as in production; a query that checkpoints (the cache-lifetime
+pattern) gets one section per checkpointed DataFrame before the plan of
+the DataFrame it returns, so the file shows the real pipeline and not
+only the post-checkpoint RDD scan (plan_audit.query_plans).
 Construction-time actions (collect-driven iterative builds) run at the
 given SF, so prefer a small sf_dir.
 """
@@ -14,6 +16,12 @@ from __future__ import annotations
 
 import pathlib
 import sys
+
+
+def formatted_plan(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
 
 
 def main() -> None:
@@ -27,20 +35,19 @@ def main() -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
 
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
+    from plan_audit import query_plans
+
     from daxos_spark.plans.registry import get_specs
     from daxos_spark.session import get_spark
 
     spark = get_spark()
     specs = get_specs()
     for name in names:
-        spec = specs[name]
-        builder = spec.lazy_plan or spec.spark
-        df = builder(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plans = query_plans(specs[name].spark, spark, sf_dir, render=formatted_plan)
+        sections = [
+            f"== checkpoint {i + 1} of {len(plans) - 1} ==\n{p}" for i, p in enumerate(plans[:-1])
+        ]
+        plan = "\n".join(sections + [("== returned ==\n" if sections else "") + plans[-1]])
         p = out_dir / f"{name}_{suffix}.txt"
         p.write_text(plan)
         print(f"wrote {p} ({len(plan.splitlines())} lines)")

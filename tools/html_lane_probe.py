@@ -72,7 +72,7 @@ def main() -> int:
 
     # ---- lane A: the composed plan ------------------------------------
     t0 = time.time()
-    ext, verdicts_a, caches = _refinery_html_parts(spark, sf_dir, persist=True)
+    ext, verdicts_a, caches = _refinery_html_parts(spark, sf_dir)
     sum_a = stage_summary(verdicts_a)
     # materialize lane B's input FROM THE SAME checkpointed extraction
     # frame (the staged deployment writes exactly what its extract job
@@ -102,9 +102,7 @@ def main() -> int:
 
     # ---- lane B: the staged two-job deployment ------------------------
     t0 = time.time()
-    verdicts_b, caches_b = _refinery_linear_lazy(
-        spark, mat_dir, persist=True, tail=_refinery_verdicts
-    )
+    verdicts_b, caches_b = _refinery_linear_lazy(spark, mat_dir, tail=_refinery_verdicts)
     sum_b = stage_summary(verdicts_b)
     for c in caches_b:
         c.unpersist()

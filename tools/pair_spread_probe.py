@@ -63,8 +63,8 @@ def main() -> int:
     # in-place: mega bucket enumerated by ONE task
     run("in-place", _inplace_pairs(bkt))
     # spread: mega bucket split into repartitioned segment units
-    # (the guarded _bucket_pairs form, max_members unknown)
-    run("spread  ", _bucket_pairs(bkt, max_members=None))
+    # (the guarded _bucket_pairs form)
+    run("spread  ", _bucket_pairs(bkt))
     n_units = (
         (n_big + _PAIR_SEG - 1) // _PAIR_SEG
     )

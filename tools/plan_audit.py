@@ -32,16 +32,23 @@ Usage:
     python tools/plan_audit.py --wgl-table [sf_dir]   # classification table
 
 Exit 1 on any violation; prints one line per query otherwise.
-Construction-time actions (codebook collects, Newton steps) run at the
-given SF, so the audit doubles as a construction smoke test.
+The audit runs each registered callable exactly as production does
+(construction-time actions such as codebook collects and Newton steps
+run at the given SF, so it doubles as a construction smoke test). A
+query that caches intermediates returns a checkpoint
+(registry.checkpoint_release), whose own plan is only
+``Scan ExistingRDD``; the audit therefore also records the plan of
+every DataFrame the query checkpoints (``query_plans``) and checks
+the recorded plans together.
 """
 
 from __future__ import annotations
 
+import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
 # rank-filter sites where the rank is re-derived over an input a
@@ -124,6 +131,33 @@ def _wgl_sites(plan: str):
     return out
 
 
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def query_plans(fn, spark, sf_dir: str, render=executed_plan) -> list[str]:
+    """Build one query through its registered callable and return
+    ``render(df)`` for every DataFrame it localCheckpoints, then for the
+    DataFrame it returns. pyspark's DataFrame.localCheckpoint is wrapped
+    from outside the package for the length of the build, so the
+    library carries no audit-only code path."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(render(self))
+        return checkpoint(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        DataFrame.localCheckpoint = checkpoint
+    return plans + [render(df)]
+
+
 def audit_plan(plan: str, name: str = "") -> list[str]:
     problems = []
     if "CartesianProduct" in plan:
@@ -154,30 +188,22 @@ def main() -> int:
     only = set(argv[1:])
 
     import __spark_entry__ as E
-    from daxos_spark.plans import get_specs
     from daxos_spark.session import get_spark
 
     spark = get_spark()
     qs = E.queries()
-    specs = get_specs()
     bad = 0
     for name in sorted(qs):
         if only and name not in only:
             continue
-        # eager (checkpoint-pattern) queries expose their real pipeline
-        # via lazy_plan — auditing the registered callable would only
-        # see the post-checkpoint RDD scan
-        spec = specs.get(name)
-        fn = spec.lazy_plan if spec is not None and spec.lazy_plan else qs[name]
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = "\n".join(query_plans(qs[name], spark, sf_dir))
         except Exception as e:  # construction failure is itself a finding
             print(f"ERROR {name}: {type(e).__name__}: {str(e)[:140]}")
             bad += 1
             continue
         finally:
-            spark.catalog.clearCache()  # lazy builders may mark persists
+            spark.catalog.clearCache()  # a failed build may leave persists
         if wgl_table:
             sites = _wgl_sites(plan)
             if sites:

@@ -89,9 +89,7 @@ def main() -> int:
     summaries = {}
     for label, two_lane in (("linear", False), ("lane2", True)):
         t0 = time.time()
-        v, caches = _refinery_linear_lazy(
-            spark, sf_dir, persist=True, two_lane=two_lane, tail=_refinery_verdicts
-        )
+        v, caches = _refinery_linear_lazy(spark, sf_dir, two_lane=two_lane, tail=_refinery_verdicts)
         summaries[label] = stage_summary(v)
         for c in caches:
             c.unpersist()

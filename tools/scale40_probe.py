@@ -66,7 +66,7 @@ def semantic_pair_census(
     from daxos_spark.plans.docpipe import _semantic_pairs
 
     planes = None if bits is None else lsh_planes(bits=bits)
-    b, s, caches = _semantic_pairs(spark, sf_dir, persist=True, planes=planes)
+    b, s, caches = _semantic_pairs(spark, sf_dir, planes=planes)
     n_docs = b.count()
     agg = s.agg(
         F.count(F.lit(1)).alias("n"), F.sum("sim").alias("ns")
