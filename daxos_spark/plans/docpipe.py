@@ -28,6 +28,13 @@ from ..functions.hashing import (
     simhash32,
     word_shingles,
 )
+from ..operators.neardup import (
+    BUCKET_CAP,
+    cap_hot_keys,
+    capped_stream,
+    inplace_pairs,
+    shingle_overlap,
+)
 from .registry import checkpoint_release, QuerySpec, register, sql_davg, sql_trunc6, trunc6
 
 _NORM = "lower(trim(text))"
@@ -315,180 +322,8 @@ def d_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # n-gram Jaccard near-dup pairs within each source bucket — the shingle
-# inverted-index join (the scale path: join on shingle, never all-pairs).
-#
-# Hot-key cap: a stop-phrase shingle ("terms of service") at corpus
-# scale puts millions of docs on ONE join key — quadratic blowup no AQE
-# skew split can bound. Standard MinHash-LSH practice drops shingles
-# whose document frequency exceeds a cap BEFORE the self-join; such
-# shingles carry no near-dup signal (they match everything). The cap is
-# mirrored in the duckdb oracle, and is far above any test-corpus DF
-# (≤5000 docs at sf0.1) so small-SF hashes are unaffected; the pytest
-# proves the drop semantics with a tiny cap.
-_MAX_SHINGLE_DF = 50_000
-
-
-def _cap_hot_shingles(
-    sh: DataFrame, max_df: int, keys: tuple[str, ...] = ("s",)
-) -> DataFrame:
-    """Drop shingles with document frequency > max_df. ``sh`` must be
-    one row per (doc_id, shingle). The hot set is tiny at test scale
-    (only ultra-common shingles) but it is a DF-THRESHOLD filter, not a
-    top-N cap — its cardinality scales with the corpus (bounded only by
-    shingle_rows/max_df, millions at 100 TB), so no forced broadcast:
-    AQE broadcasts the anti-join side while it fits and shuffles past
-    that (the round-8 bounded-broadcast rule; its own guard test
-    caught this site's old hint).
-    ``keys`` is the shingle identity — two-lane callers pass
-    ("s", "s2") so a lane-1 birthday collision past ~2^28 distinct
-    shingles cannot pool two shingles' document frequencies and drop
-    both below-cap shingles (the same collision class the 112-bit join
-    key exists to eliminate)."""
-    hot = sh.groupBy(*keys).agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") > max_df
-    )
-    return sh.join(hot.select(*keys), list(keys), "left_anti")
-
-
-# Segment size for oversized-bucket pair enumeration (_bucket_pairs).
-# Buckets at the 50k caps can emit ~1.25e9 i<j pairs; enumerated from
-# one bucket row they all land on ONE task (guide §2.5 skew). Segments
-# bound per-unit work at seg² ≈ 4.2M pairs and per-unit payload at
-# 2·seg elements, so a full-cap bucket becomes ⌈50k/2048⌉²/2 ≈ 325
-# spreadable units of ~16 KB each.
-_PAIR_SEG = 2048
-
-
-def _bucket_pairs(bkt: DataFrame, seg: int = _PAIR_SEG) -> DataFrame:
-    """i<j member-pair stream (columns pa, pb) of each bucket row's
-    sorted member array ``ds`` (members unique within a bucket).
-
-    Small buckets (≤ seg members) enumerate in place — posexplode +
-    slice, zero extra exchange, the round-11 form. Oversized buckets
-    would otherwise emit their whole quadratic pair mass from a single
-    task (guide §2.5): they are cut into ≤seg-element segments, the
-    upper-triangular (segᵢ, segⱼ) unit grid is exploded and
-    hash-repartitioned (deterministic key — xxhash64 of the unit
-    payload, not rand(): guide §2.5 retry safety) so each unit lands on
-    its own task. ``ds`` sorted ascending + unique members ⇒ an
-    off-diagonal unit's cross product already satisfies pa < pb, and a
-    diagonal unit keeps exactly its pa < pb half — the union over all
-    units is precisely the bucket's i<j pair multiset, so downstream
-    counts/distincts are unchanged.
-
-    The guarded plan runs unconditionally: a 1-row max-size probe that
-    returned the in-place form when every bucket fits one segment was
-    measured and rejected — the extra action splits the cache-build
-    pipeline for more than the skipped empty stages return (see
-    OPTIMIZATION_r12.md).
-
-    Guarded-form structure (all measured, round 12): small buckets
-    become ONE diagonal unit of themselves (no exchange) and oversized
-    buckets explode into the repartitioned unit grid; the two unit
-    streams UNION BELOW one shared enumeration chain. Unioning the
-    enumerated PAIR streams instead runs the generates interpreted
-    (whole-stage codegen does not form under that union — measured
-    30× per pair, 1.1 s → 32 s on a 450M-pair probe), and the unified
-    chain enumerates a diagonal unit with the exact i<j slice (no 2×
-    cross-then-halve work). The spread exchange pins an EXPLICIT
-    partition count (defaultParallelism — cluster-sized, not a local
-    constant): units are byte-tiny but work-QUADRATIC, so AQE's
-    byte-based coalescing would merge them back onto one task
-    (measured: 120 units ≡ 4 MB → one partition, recreating the exact
-    straggler this helper exists to break); a user-specified count is
-    exempt. NOTE: the guarded form scans ``bkt`` twice (small +
-    oversized filter) — callers persist the bucket relation."""
-    small_units = bkt.filter(F.size("ds") <= seg).select(
-        F.col("ds").alias("ua"), F.col("ds").alias("ub"), F.lit(True).alias("diag")
-    )
-    k = F.ceil(F.size("ds") / F.lit(seg)).cast("int")
-    big_units = (
-        bkt.filter(F.size("ds") > seg)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), k - F.lit(1)),
-                        lambda i: F.transform(
-                            F.sequence(i, k - F.lit(1)),
-                            lambda j: F.struct(
-                                F.slice(
-                                    F.col("ds"), i * F.lit(seg) + F.lit(1), F.lit(seg)
-                                ).alias("ua"),
-                                F.slice(
-                                    F.col("ds"), j * F.lit(seg) + F.lit(1), F.lit(seg)
-                                ).alias("ub"),
-                                (i == j).alias("diag"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("u")
-        )
-        .select("u.*")
-        .repartition(
-            bkt.sparkSession.sparkContext.defaultParallelism,
-            F.xxhash64("ua", "ub"),
-        )
-    )
-    units = small_units.unionByName(big_units)
-    # diag unit: slice from i+2 ⇒ exactly the i<j half (ua ≡ ub);
-    # off-diag unit: whole ub ⇒ the full cross, pa < pb already true
-    # (segments are ordered slices of the sorted, unique-member ds)
-    return units.select(F.posexplode("ua").alias("i", "pa"), "ub", "diag").select(
-        "pa",
-        F.explode(
-            F.slice(
-                F.col("ub"),
-                F.when(F.col("diag"), F.col("i") + F.lit(2)).otherwise(F.lit(1)),
-                F.size("ub"),
-            )
-        ).alias("pb"),
-    )
-
-
-def _inplace_pairs(bkt: DataFrame) -> DataFrame:
-    """i<j pairs of each sorted ``ds`` array, enumerated on the task
-    holding the bucket row (posexplode + slice — the round-11 form)."""
-    return bkt.select(F.posexplode("ds").alias("i", "pa"), "ds").select(
-        "pa",
-        F.explode(F.slice(F.col("ds"), F.col("i") + F.lit(2), F.size("ds"))).alias("pb"),
-    )
-
-
-def _capped_stream(
-    stream: DataFrame, cap: int, keys: tuple[str, ...] = ("s",)
-) -> DataFrame:
-    """Memory-safe hot-key cap, applied on the STREAM between its one
-    hash exchange and the bucket collect (§5). A windowed per-key
-    count — evaluated on the exchanged stream, spill-backed
-    (WindowExec buffers one key group at a time in an external
-    spillable array) — filters every row of an over-cap key BEFORE any
-    collect_list can materialize its member array, so the downstream
-    aggregation buffer is provably bounded by ``cap`` members (the
-    round-11 forms filtered AFTER the array was built — a
-    single-buffer OOM on a degenerate 10⁸-member key at 100 TB).
-    Zero extra passes or exchanges: the window's hash partitioning on
-    ``keys`` satisfies the following groupBy's clustering requirement
-    (keys ⊆ grouping keys), so the plan keeps exactly one full-stream
-    exchange — and for the global-DF lanes this REPLACES the round-11
-    window over the bucket arrays, deleting that second full-mass
-    exchange+sort. Degenerate-corpus residual: the over-cap key's rows
-    still transit one spilling window task before being dropped —
-    disk-bounded and completing, monitored by t_cap_census; the
-    drop-map-side alternative (count + anti-join, _cap_hot_shingles)
-    costs a full extra pass over the stream on EVERY healthy run and
-    is the wrong default for caps that by design never fire."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*keys)
-    return (
-        stream.withColumn("__df", F.count(F.lit(1)).over(w))
-        .filter(F.col("__df") <= cap)
-        .drop("__df")
-    )
-
-
+# inverted-index join (the scale path: join on shingle, never all-pairs),
+# with hot shingles capped (operators/neardup.py).
 @_q(
     "d_jaccard_pairs",
     f"""
@@ -498,7 +333,7 @@ def _capped_stream(
       SELECT DISTINCT doc_id, source, {_SHINGLE} AS s
       FROM (SELECT doc_id, source, tk, unnest(range(1, GREATEST(len(tk) - 2, 1) + 1)) AS i FROM toks)
     ), sh AS (
-      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {_MAX_SHINGLE_DF}
+      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {BUCKET_CAP}
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), inter AS (
@@ -516,45 +351,18 @@ def _capped_stream(
 )
 def d_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    # the shingle inverted index feeds four consumers (DF cap, sizes,
-    # both sides of the self-join) — persist it instead of recomputing
-    # the tokenize/explode (at cluster scale this is a checkpointed
-    # table). The DF-capped view re-derives from the cached table with
-    # a broadcast anti-join (no extra scan, no shuffle).
     sh0 = d.select(
         "doc_id",
         "source",
         F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s"),
     )
-    sh0 = sh0.persist()
-    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
+    overlap, caches = shingle_overlap(sh0)
     out = (
-        inter.join(sa, F.col("da") == F.col("sa.doc_id"))
-        .join(sb, F.col("db") == F.col("sb.doc_id"))
-        .select(
-            "da",
-            "db",
-            trunc6(F.col("n_inter") / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter"))).alias("jaccard"),
-        )
+        overlap.select("da", "db", trunc6(F.col("j")).alias("jaccard"))
         .orderBy(F.col("jaccard").desc(), "da", "db")
         .limit(20)
     )
-    return checkpoint_release(out, [sh0])
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -607,20 +415,9 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on candidates only.
 _N_HASH = 8
 _BANDS = [(0, 1), (2, 3), (4, 5), (6, 7)]
-# band-bucket membership cap — see the bcap CTE note + the SimHash twin
-# (docpipe2._SIMHASH_BUCKET_CAP); measured on the adversarial dup-heavy
-# corpus (tools/adversarial_dup_probe.py corpus): a planted family of
-# 3,000 exact dups pushed d_lsh_candidates from ~4 s to 56 s through one
-# hot (band, bkt) class, while the shingle DF cap never fired (family
-# shingle DF = 3,000 << 50k). Upstream exact-dedup (0.1 s) remains the
-# family REMEDY; the cap is the engine-level bound when that contract
-# is violated. The cap never fires SILENTLY: t_cap_census
-# (docpipe2.py) is the co-scheduled monitor — rows_dropped > 0 at this
-# cap is the fired alarm, naming the un-flagged pair mass.
-_LSH_BUCKET_CAP = 50_000
 
 
-def _lsh_candidates_oracle(bucket_cap: int = _LSH_BUCKET_CAP) -> str:
+def _lsh_candidates_oracle(bucket_cap: int = BUCKET_CAP) -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id, {_TOKS} AS tk FROM documents
@@ -628,7 +425,7 @@ def _lsh_candidates_oracle(bucket_cap: int = _LSH_BUCKET_CAP) -> str:
       SELECT DISTINCT doc_id, {_SHINGLE} AS s
       FROM (SELECT doc_id, tk, unnest(range(1, GREATEST(len(tk) - 2, 1) + 1)) AS i FROM toks)
     ), sh AS (
-      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {_MAX_SHINGLE_DF}
+      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {BUCKET_CAP}
     ), sig AS (
       SELECT doc_id,
              {', '.join(f"MIN({md5_long_sql('s', seed=i)}) AS m{i}" for i in range(_N_HASH))}
@@ -636,11 +433,9 @@ def _lsh_candidates_oracle(bucket_cap: int = _LSH_BUCKET_CAP) -> str:
     ), buckets AS (
       {' UNION ALL '.join(f"SELECT doc_id, {bi} AS band, concat(m{a}, ':', m{b}) AS bkt FROM sig" for bi, (a, b) in enumerate(_BANDS))}
     ), bcap AS (
-      -- hot-bucket cap, the SimHash lane's twin (docpipe2._SIMHASH_BUCKET_CAP
-      -- rationale): a duplicate family shares ALL band signatures, so one
-      -- (band, bkt) class goes quadratic in family size; family shingle DF
-      -- stays far below _MAX_SHINGLE_DF, so the shingle cap cannot help.
-      -- Cap >= corpus size at every gate scale -> committed hashes unchanged.
+      -- hot-bucket cap (operators/neardup.py): a duplicate family shares
+      -- ALL band signatures, so one (band, bkt) class goes quadratic in
+      -- family size while its shingle DF stays far below the shingle cap.
       SELECT * FROM buckets QUALIFY COUNT(*) OVER (PARTITION BY band, bkt) <= {bucket_cap}
     ), cand AS (
       SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
@@ -659,23 +454,39 @@ def _lsh_candidates_oracle(bucket_cap: int = _LSH_BUCKET_CAP) -> str:
     """
 
 
+def _lsh_band_buckets(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bkt) band-bucket memberships of a signature table
+    (doc_id, m0..m7) — one explode pass instead of a 4-way union (a
+    union re-reads sig once per band)."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.concat(
+                    F.col(f"m{ai}").cast("string"), F.lit(":"), F.col(f"m{b}").cast("string")
+                ).alias("bkt"),
+            )
+            for bi, (ai, b) in enumerate(_BANDS)
+        ]
+    )
+    return sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
+        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bkt").alias("bkt")
+    )
+
+
 @_q("d_lsh_candidates", _lsh_candidates_oracle())
 def d_lsh_candidates(
     spark: SparkSession,
     sf_dir: str,
-    bucket_cap: int | None = _LSH_BUCKET_CAP,
+    bucket_cap: int | None = BUCKET_CAP,
 ) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    # persist: sh feeds the DF cap, sig, sizes, and both sides of the
-    # candidate verification join (6 consumers). The capped view is a
-    # broadcast anti-join over the cached table — hot shingles (see
-    # _MAX_SHINGLE_DF above) are excluded from signatures AND the
-    # verification join, bounding the per-key join fan-out.
+    # persist: sh feeds the DF cap and the per-doc shingle arrays
     sh0 = d.select(
         "doc_id", F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s")
     )
     sh0 = sh0.persist()
-    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
+    sh = cap_hot_keys(sh0, BUCKET_CAP)
     # ONE doc-keyed aggregate serves FOUR former consumers of the
     # shingle stream (optimization round 11, guide §2.3/§2.4): the
     # signatures (map-side HOF min over the array — same 8 md5
@@ -699,57 +510,17 @@ def d_lsh_candidates(
         "doc_id",
         *[_min_hash(F.col("tk"), i).alias(f"m{i}") for i in range(_N_HASH)],
     )
-    # one explode pass instead of a 4-way union (a union re-reads sig
-    # once per band; the exploded struct array is a single narrow pass)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat(
-                    F.col(f"m{ai}").cast("string"), F.lit(":"), F.col(f"m{b}").cast("string")
-                ).alias("bkt"),
-            )
-            for bi, (ai, b) in enumerate(_BANDS)
-        ]
-    )
-    buckets = sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bkt").alias("bkt")
-    )
-    # Bucket-based candidate generation (optimization round 11, guide
-    # §2.3/§2.4 — the _jaccard_edge_pairs rewrite): ONE groupBy of the
-    # bucket-membership stream into per-(band, bkt) sorted doc-id lists
-    # replaces the count window + self-join, which together exchanged
-    # the stream three times on the SAME (band, bkt) key. Round 12
-    # (§5 memory safety): the hot-bucket cap moves UPSTREAM of the
-    # collect — a windowed membership count on the exchanged stream
-    # (_capped_stream) drops every row of an over-cap bucket (a
-    # degenerate band value with 10⁸⁺ members at 100 TB) before its
-    # member array can materialize in one aggregation buffer. Kept ⟺
-    # membership count ≤ cap — the identical predicate the old
-    # size(ds) filter applied after the fact (doc_ids are unique
-    # within a (band, bkt) group: one bucket per doc per band), and
-    # the window's hash partitioning is the same one the groupBy
-    # needs, so the plan still has exactly one full-stream exchange.
+    buckets = _lsh_band_buckets(sig)
+    # fused lane: window cap + in-place enumeration (operators/neardup.py).
+    # Doc ids are unique within a (band, bkt) group (one bucket per doc
+    # per band), so the i<j stream is exactly the band self-join's pairs.
     if bucket_cap is not None:
-        buckets = _capped_stream(buckets, bucket_cap, keys=("band", "bkt"))
+        buckets = capped_stream(buckets, bucket_cap, keys=("band", "bkt"))
     bkt = buckets.groupBy("band", "bkt").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ds")
     )
-    # In-place i<j enumeration (emits exactly the join's (same bucket ∧
-    # da<db) pair multiset). DELIBERATE (§2.5 trade, measured round
-    # 12): this lane is a fused single pipeline (collect→enumerate→
-    # verify in one stage chain, no persisted bucket relation), and
-    # every guarded-enumeration variant broke that fusion for ~+0.3-0.6
-    # s of a ~1.7 s query — persist+probe (+0.33), lazy two-branch
-    # (+0.9, exchange reuse does not fire across the union), streamed
-    # disjoint branches (+0.9). Worst-case residual: one full-cap
-    # bucket generates ≤ cap²/2 pairs pipelined from a single task into
-    # the distinct's shuffle write — a bounded, COMPLETING straggler
-    # (the §5 window cap above already removed the OOM), monitored by
-    # t_cap_census; the spread guard (_bucket_pairs segment units)
-    # protects the persisted dedup lanes where it costs nothing.
     cand = (
-        _inplace_pairs(bkt)
+        inplace_pairs(bkt)
         .select(F.col("pa").alias("da"), F.col("pb").alias("db"))
         .distinct()
     )
@@ -896,14 +667,11 @@ _JACC_THR = 0.02
 
 
 def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
-    """Shared near-dup edge construction: capped shingle self-join →
-    Jaccard ≥ _JACC_THR (da, db) pairs. Same hot-shingle DF cap as
-    d_jaccard_pairs — the cluster edges come from the identical shingle
-    self-join and share its skew risk. Returns (pairs, caches) with
-    caches the persisted per-(source, shingle) doc-id BUCKET relation
-    (consumers: per-doc sizes + the i<j pair stream) plus the hashed
-    shingle stream — callers eagerly materialize their small output
-    and unpersist every handle (registry.checkpoint_release).
+    """Shared near-dup edge construction: same-source (da, db) pairs
+    whose capped shingle Jaccard is ≥ _JACC_THR
+    (operators.neardup.shingle_overlap). Returns (pairs, caches); callers
+    eagerly materialize their small output and unpersist every handle
+    (registry.checkpoint_release).
 
     ``two_lane=True`` is the 100 TB scale configuration: the shingle
     join keys on BOTH independent 56-bit lanes of one md5 digest
@@ -915,24 +683,16 @@ def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
     cardinalities both configurations produce identical pair sets, so
     the gated two-lane query shares the single-lane raw-string oracle
     (t_dedup_clusters_lane2)."""
-    from ..functions.hashing import md5_long
-
     # shingles are hashed to 56-bit ids INSIDE the explode select (one
     # projection): the persisted stream carries (int, small-str, long)
     # instead of a 20-40 B shingle string — ~half the cache bytes, and
     # every downstream shuffle/sort compares fixed-width longs instead
     # of strings (round-6 profile: the edge build dominated
     # t_dedup_best_keep at 7.8 of 10 s; this + the broadcast size
-    # joins below took the query to ~6 s). The pair set is unchanged:
+    # joins took the query to ~6 s). The pair set is unchanged:
     # md5_long is collision-free at these cardinalities (56-bit over
     # ~2e5 distinct shingles; the duckdb oracle keeps joining the raw
     # strings, so the hash gate would expose any collision).
-    # CARDINALITY BOUND: one 56-bit lane is safe to ~2^28 distinct
-    # shingles (birthday). A 100 TB corpus exceeds that — production
-    # runs pass two_lane=True (below), which keys the join on both
-    # md5 lanes (112 bits, safe past 2^50). The flag is exercised
-    # end-to-end by the registered t_dedup_clusters_lane2, hash-checked
-    # against the same raw-string oracle as d_dedup_clusters.
     if two_lane:
         sh0 = d.select(
             "doc_id",
@@ -960,79 +720,8 @@ def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
                 )
             ).alias("s"),
         )
-    # Bucket-based candidate generation (optimization round 11, guide
-    # §2.3/§2.4): ONE groupBy of the exploded shingle stream into
-    # per-(source, shingle) sorted doc-id buckets replaces the previous
-    # self-join — which shuffled the same cached stream TWICE (both join
-    # sides hash-exchange on the shingle key) — and the hot-shingle DF
-    # cap becomes a window sum over the BUCKET relation (shingle-type
-    # cardinality) instead of a third full-stream aggregate plus an
-    # anti-join. Pair semantics are unchanged: per-doc shingles are
-    # distinct (word_shingles array_distinct), sort_array is ascending,
-    # so the i<j stream enumerates exactly the join's
-    # (same shingle ∧ same source ∧ da<db) pair multiset, and the
-    # per-pair counts — hence the Jaccard values — are identical (the
-    # duckdb oracle keeps the raw-string self-join formulation; the
-    # hash gate proves equality).
-    #
-    # Round 12 (§5 memory safety): the GLOBAL-per-shingle DF cap moves
-    # UPSTREAM of the collect — _cap_hot_shingles counts per shingle
-    # map-side (one long per key in any aggregation buffer, safe on
-    # any corpus) and anti-joins the tiny over-cap set, so a
-    # stop-shingle with 10⁸⁺ members at 100 TB is dropped BEFORE its
-    # doc-id array can materialize in one collect_list buffer, and
-    # the round-11 window sum over the bucket relation — a second
-    # full-member-mass Exchange(s)+Sort — disappears. The count pass
-    # re-reads the persisted stream (same kept-set: the stream has one
-    # row per (doc, source, shingle), so the per-key count IS the
-    # global DF). The stream-window variant (_capped_stream) was
-    # measured on this lane and rejected: sorting the full
-    # hashed-shingle stream inside the window costs ~+0.5-1.3 s at
-    # sf0.1 across the CC family, vs +0.16 s for this form.
-    keys = ["s", "s2"] if two_lane else ["s"]
-    # two consumers: the DF count pass + the bucket build
-    sh0 = sh0.persist()
-    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF, keys=tuple(keys))
-    bkt = (
-        sh.groupBy("source", *keys)
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .select(*keys, "ds")
-    )
-    # feeds sizes + both branches of the i<j pair stream (the
-    # guarded _bucket_pairs enumeration stays in-plan — a 1-row
-    # max-size probe to skip its empty oversized branch was
-    # measured and rejected: the extra action splits the
-    # cache-build pipeline for more than the skipped stages return)
-    bkt = bkt.persist()
-    sizes = (
-        bkt.select(F.explode("ds").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-    # i<j enumeration with oversized-bucket spreading (§2.5 skew):
-    # _bucket_pairs emits the identical pair multiset, splitting any
-    # bucket > _PAIR_SEG members into repartitioned segment units
-    inter = (
-        _bucket_pairs(bkt)
-        .groupBy(F.col("pa").alias("da"), F.col("pb").alias("db"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    # doc-cardinality size lookups scale with the corpus — no forced
-    # broadcast; AQE picks broadcast at test scale, shuffle at 100 TB
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    pairs = (
-        inter.join(sa, F.col("da") == F.col("sa.doc_id"))
-        .join(sb, F.col("db") == F.col("sb.doc_id"))
-        .filter(
-            F.col("n_inter") / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter"))
-            >= _JACC_THR
-        )
-        .select("da", "db")
-    )
-    # handles: the hashed shingle stream + the BUCKET relation;
-    # callers eagerly materialize their small output and unpersist
-    # every handle
-    return pairs, [sh0, bkt]
+    overlap, caches = shingle_overlap(sh0, ("s", "s2") if two_lane else ("s",))
+    return overlap.filter(F.col("j") >= _JACC_THR).select("da", "db"), caches
 
 
 # the recursive-CTE connected-components oracle chain (through `comp`),
@@ -1044,7 +733,7 @@ CC_ORACLE_CTE = f"""
       SELECT DISTINCT doc_id, source, {_SHINGLE} AS s
       FROM (SELECT doc_id, source, tk, unnest(range(1, GREATEST(len(tk) - 2, 1) + 1)) AS i FROM toks)
     ), sh AS (
-      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {_MAX_SHINGLE_DF}
+      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {BUCKET_CAP}
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), inter AS (

@@ -31,6 +31,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.hashing import md5_long_sql
+from ..operators.neardup import (
+    BUCKET_CAP,
+    cap_hot_keys,
+    capped_stream,
+    inplace_pairs,
+    shingle_overlap,
+)
 from .docpipe import _fanout
 from .registry import QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
 
@@ -637,7 +644,6 @@ _AGREE_TAU_J = 0.05  # lexical near-dup threshold (1 planted pair @0.97; next is
 
 def _agreement_oracle() -> str:
     from ..functions.similarity import lsh_planes
-    from .docpipe import _MAX_SHINGLE_DF
     from .vecpipe import _lsh_sql_bucket
 
     code = "list_transform(e.embedding::DOUBLE[], x -> CAST(FLOOR(x * 1000.0) AS BIGINT))"
@@ -648,7 +654,7 @@ def _agreement_oracle() -> str:
       SELECT DISTINCT doc_id, source, {_AGREE_SHINGLE} AS s
       FROM (SELECT doc_id, source, tk, unnest(range(1, GREATEST(len(tk) - 2, 1) + 1)) AS i FROM toks)
     ), sh AS (
-      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {_MAX_SHINGLE_DF}
+      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {BUCKET_CAP}
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), inter AS (
@@ -708,71 +714,22 @@ def t_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import word_shingles
     from ..functions.similarity import int_code, lsh_bucket, lsh_planes
     from ..functions.vectors import to_double
-    from .docpipe import _MAX_SHINGLE_DF, _bucket_pairs, _cap_hot_shingles
 
     t = load_tables(spark, sf_dir)
     d = _fanout(t["documents"])
     # shingles hashed to 64-bit longs inside the explode select (the
-    # _jaccard_edge_pairs convention, round 12): the persisted stream,
-    # the DF count pass, the anti-join key, the bucket groupBy and the
-    # collected member arrays all carry fixed-width longs instead of
-    # 20-40 B shingle strings — ~half the cache bytes, long-keyed
-    # shuffles/aggregations. Counts (n_sh, n_inter) are unchanged:
+    # _jaccard_edge_pairs convention): the persisted stream, the cap's
+    # count pass and the collected member arrays carry fixed-width
+    # longs instead of 20-40 B shingle strings. Counts are unchanged:
     # xxhash64 is collision-free at these cardinalities (~2×10⁵
-    # distinct shingles at sf0.1; 64-bit birthday bound ~2³², one
-    # decade past the single-md5-lane convention the CC family
-    # documents), and the raw-string duckdb oracle would expose any
-    # collision through the hash gate.
+    # distinct shingles at sf0.1; 64-bit birthday bound ~2³²), and the
+    # raw-string duckdb oracle would expose any collision.
     sh0 = d.select(
         "doc_id",
         "source",
         F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s0"),
     ).select("doc_id", "source", F.xxhash64("s0").alias("s"))
-    # Bucket-based intersection counting (optimization round 11, guide
-    # §2.3/§2.4 — the _jaccard_edge_pairs batch-1 rewrite, same lexical
-    # core): ONE groupBy of the shingle stream into per-(source, s)
-    # sorted doc-id buckets replaces the capped self-join that
-    # exchanged the persisted stream twice. Round 12 (§5 memory
-    # safety): the GLOBAL-per-shingle DF cap moves UPSTREAM of the
-    # collect — _cap_hot_shingles counts per shingle map-side and
-    # anti-joins the tiny over-cap set, so an over-cap shingle is
-    # dropped BEFORE its doc-id array can materialize in one
-    # collect_list buffer, and the round-11 window sum over the bucket
-    # relation (a second full-member-mass Exchange+Sort) disappears.
-    # Same kept-set (the stream's per-key count IS the global DF; see
-    # _jaccard_edge_pairs for the rejected stream-window variant).
-    # Pair multiset unchanged (per-doc shingles are distinct, buckets
-    # sorted ascending by doc_id); oversized surviving buckets are
-    # spread by _bucket_pairs (§2.5).
-    # two consumers: the DF count pass + the bucket build
-    sh0 = sh0.persist()
-    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
-    bkt = (
-        sh.groupBy("source", "s")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .select("ds")
-    )
-    # feeds sizes + both branches of the i<j intersection stream
-    bkt = bkt.persist()
-    sizes = (
-        bkt.select(F.explode("ds").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-    inter = (
-        _bucket_pairs(bkt)
-        .groupBy(F.col("pa").alias("da"), F.col("pb").alias("db"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    lex = (
-        inter.join(sizes.select(F.col("doc_id").alias("da"), F.col("n_sh").alias("nsa")), "da")
-        .join(sizes.select(F.col("doc_id").alias("db"), F.col("n_sh").alias("nsb")), "db")
-        .select(
-            "da",
-            "db",
-            (F.col("n_inter") / (F.col("nsa") + F.col("nsb") - F.col("n_inter"))).alias("j"),
-        )
-    )
+    lex, caches = shingle_overlap(sh0)
     idot = lambda x, y: F.aggregate(
         F.zip_with(x, y, lambda u, v: u * v), F.lit(0).cast("bigint"), lambda acc, v: acc + v
     )
@@ -842,7 +799,7 @@ def t_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_dup_either"),
     )
     # 1-row output — eager-materialize, release the stream/bucket caches
-    return checkpoint_release(out, [sh0, bkt])
+    return checkpoint_release(out, caches)
 
 
 # --------------------------------------------------------------------------
@@ -883,30 +840,7 @@ _SIMHASH56_SQL = f"""
 """
 
 
-# Hot-bucket cap for the band join — the SimHash twin of the MinHash
-# lane's hot-shingle DF cap (_MAX_SHINGLE_DF, same constant scale): a
-# dup-heavy corpus puts an entire duplicate family into ONE
-# (band, 14-bit value) bucket and the candidate set goes quadratic in
-# family size (m docs → m²/2 verify pairs per intact band). A bucket
-# holding more docs than the cap is template/exact-dup mass — the
-# upstream exact-dedup lane's job, carrying no per-pair signal this
-# stage needs — so it is dropped from candidate generation in BOTH
-# engines (Manku et al.'s production remedy is equivalent in effect:
-# widen prints / narrow bands until no class is hot). The cap (>= the
-# 10× probe's whole corpus size) provably cannot fire at any committed
-# gate scale — no bucket outgrows its corpus — so all committed hashes
-# are cap-invariant (measured max bucket: 36 at sf0.01, 382 at sf0.1,
-# 815/716 at the 10× suffix/rotate probe corpora);
-# the drop semantics are pytest-proven with a tiny cap and hash-proven
-# cross-engine on the adversarial dup-heavy probe corpus, where one
-# planted family of 3,000 alone carries 4.5M candidate pairs uncapped
-# (tools/adversarial_dup_probe.py, SCALE.md round-10). The cap never
-# fires SILENTLY: t_cap_census (below) is the co-scheduled monitor —
-# rows_dropped > 0 at this cap is the fired alarm.
-_SIMHASH_BUCKET_CAP = 50_000
-
-
-def _simhash_neardup_oracle(bucket_cap: int = _SIMHASH_BUCKET_CAP) -> str:
+def _simhash_neardup_oracle(bucket_cap: int = BUCKET_CAP) -> str:
     return f"""
     WITH {_SIMHASH56_SQL},
     bands AS (
@@ -940,11 +874,10 @@ def _simhash_neardup_oracle(bucket_cap: int = _SIMHASH_BUCKET_CAP) -> str:
     "set-overlap lane",
 )
 def d_simhash_neardup(
-    spark: SparkSession, sf_dir: str, bucket_cap: int | None = _SIMHASH_BUCKET_CAP
+    spark: SparkSession, sf_dir: str, bucket_cap: int | None = BUCKET_CAP
 ) -> DataFrame:
     from ..functions import text as T
     from ..functions.hashing import simhash56_sql
-    from .docpipe import _capped_stream, _inplace_pairs
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     # per-row single-pass fingerprint (simhash56_sql): one md5 per
@@ -960,33 +893,17 @@ def d_simhash_neardup(
     bands = prints.select(
         "doc_id", "sh", F.posexplode(simhash_bands(F.col("sh"))).alias("b", "bv")
     )
-    # Bucket-based candidate generation (optimization round 11, guide
-    # §2.3/§2.4 — the _jaccard_edge_pairs rewrite): ONE groupBy of the
-    # band stream into per-(band, value) sorted (doc_id, sh) buckets
-    # replaces the band self-join that exchanged the stream twice more
-    # on the same key. Round 12 (§5 memory safety): the hot-bucket cap
-    # moves UPSTREAM of the collect — a windowed membership count on
-    # the exchanged band stream (_capped_stream) drops every row of an
-    # over-cap bucket before its member array can materialize in one
-    # aggregation buffer; the identical membership-count predicate
-    # (kept ⟺ count ≤ cap) the old size(ds) filter applied after the
-    # array was already built, on the same single exchange. The i<j
-    # enumeration emits exactly the join's (same bucket ∧ da<db) pair
-    # multiset (doc_ids are unique within a (b, bv) group: one value
-    # per doc per band; sh rides along as a function of the doc, so
-    # the 4-column distinct is unchanged).
+    # fused lane: window cap + in-place enumeration (operators/neardup.py).
+    # Doc ids are unique within a (b, bv) group (one value per doc per
+    # band) and sh is a function of the doc, so the i<j stream's
+    # 4-column distinct is exactly the band self-join's.
     if bucket_cap is not None:
-        bands = _capped_stream(bands, bucket_cap, keys=("b", "bv"))
+        bands = capped_stream(bands, bucket_cap, keys=("b", "bv"))
     bkt = bands.groupBy("b", "bv").agg(
         F.sort_array(F.collect_list(F.struct("doc_id", "sh"))).alias("ds")
     )
-    # In-place i<j enumeration — same deliberate §2.5 trade as
-    # d_lsh_candidates (measured: every guarded variant broke this
-    # lane's fused collect→enumerate pipeline for +0.4-0.5 s of a
-    # ~0.7 s query); the §5 window cap above removes the OOM, the
-    # bounded single-task worst case completes, t_cap_census monitors.
     cand = (
-        _inplace_pairs(bkt)
+        inplace_pairs(bkt)
         .select(
             F.col("pa.doc_id").alias("da"),
             F.col("pb.doc_id").alias("db"),
@@ -1012,27 +929,26 @@ def d_simhash_neardup(
 # observed-metric uniqueness contract (measured: Observation.get
 # asserts). So the signal is this CO-SCHEDULED census — one aggregate
 # pass over each lane's bucket-size relation, reporting for a threshold
-# ladder (small probes + each lane's REAL cap) how many buckets exceed
-# the threshold, the member-row mass the cap would drop, and the max
-# bucket. A production dedup run schedules it alongside the dedup job
+# ladder (small probes + the REAL cap, neardup.BUCKET_CAP) how many
+# buckets exceed the threshold, the member-row mass the cap would drop,
+# and the max bucket. A production dedup run schedules it alongside the dedup job
 # (bucket-size relations are the same first shuffle the lanes already
-# pay, aggregated once more); rows_dropped > 0 at a lane's real cap IS
+# pay, aggregated once more); rows_dropped > 0 at the real cap IS
 # the cap-fired alarm, and names the mass that went un-flagged — the
 # operator's cue to route the hot families through the exact-dedup
 # remedy. The small ladder steps exist so the census is exercised
 # non-vacuously at every gate scale (the real caps, by design, never
 # fire on healthy corpora).
-_CAP_LADDER = (2, 8, 64)
+_CAP_LADDER = (2, 8, 64, BUCKET_CAP)
 
 
 def _cap_census_oracle() -> str:
-    from .docpipe import _LSH_BUCKET_CAP, _MAX_SHINGLE_DF, _N_HASH, _SHINGLE
     from .docpipe import _BANDS as _LSH_BANDS
+    from .docpipe import _N_HASH, _SHINGLE
 
-    def caps_sql(lane: str, real: int) -> str:
-        ladder = list(_CAP_LADDER) + [real]
+    def caps_sql(lane: str) -> str:
         return (
-            f"SELECT '{lane}' AS lane, unnest([{', '.join(str(c) for c in ladder)}]) AS cap"
+            f"SELECT '{lane}' AS lane, unnest([{', '.join(str(c) for c in _CAP_LADDER)}]) AS cap"
         )
 
     return f"""
@@ -1044,7 +960,7 @@ def _cap_census_oracle() -> str:
     ), shc AS (
       SELECT COUNT(*) AS sz FROM sh0 GROUP BY s
     ), sh AS (
-      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {_MAX_SHINGLE_DF}
+      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {BUCKET_CAP}
     ), sig AS (
       SELECT doc_id,
              {', '.join(f"MIN({md5_long_sql('s', seed=i)}) AS m{i}" for i in range(_N_HASH))}
@@ -1064,9 +980,9 @@ def _cap_census_oracle() -> str:
       UNION ALL SELECT 'lsh_shingle', sz FROM shc
       UNION ALL SELECT 'simhash_band', sz FROM svc
     ), caps AS (
-      {caps_sql('lsh_band', _LSH_BUCKET_CAP)}
-      UNION ALL {caps_sql('lsh_shingle', _MAX_SHINGLE_DF)}
-      UNION ALL {caps_sql('simhash_band', _SIMHASH_BUCKET_CAP)}
+      {caps_sql('lsh_band')}
+      UNION ALL {caps_sql('lsh_shingle')}
+      UNION ALL {caps_sql('simhash_band')}
     )
     SELECT a.lane, c.cap,
            CAST(COUNT(*) AS BIGINT) AS n_buckets,
@@ -1084,7 +1000,7 @@ def _cap_census_oracle() -> str:
     doc="cap-fire census (no-silent-caps monitor): for each dedup "
     "degeneracy cap — MinHash hot-shingle DF cap, LSH band-bucket cap, "
     "SimHash band-bucket cap — the bucket-occupancy spectrum at a "
-    "threshold ladder ending in the lane's REAL cap: buckets over "
+    "threshold ladder ending in the REAL cap: buckets over "
     "threshold, member-row mass the cap would drop, max bucket; "
     "rows_dropped > 0 at the real cap is the cap-fired alarm a "
     "production dedup run co-schedules this to raise",
@@ -1092,9 +1008,7 @@ def _cap_census_oracle() -> str:
 def t_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long, simhash56_sql, simhash_bands, word_shingles
     from ..functions import text as T
-    from .docpipe import _LSH_BUCKET_CAP, _MAX_SHINGLE_DF, _N_HASH
-    from .docpipe import _BANDS as _LSH_BANDS
-    from .docpipe import _cap_hot_shingles
+    from .docpipe import _N_HASH, _lsh_band_buckets
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     sh0 = d.select(
@@ -1105,24 +1019,13 @@ def t_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band buckets mirror the REAL lane exactly: signatures over the
     # DF-capped shingle stream (the census must audit what runs, not a
     # variant of it)
-    sh = _cap_hot_shingles(sh0, _MAX_SHINGLE_DF)
+    sh = cap_hot_keys(sh0, BUCKET_CAP)
     sig = sh.groupBy("doc_id").agg(
         *[F.min(md5_long(F.col("s"), seed=i)).alias(f"m{i}") for i in range(_N_HASH)]
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat(
-                    F.col(f"m{ai}").cast("string"), F.lit(":"), F.col(f"m{b}").cast("string")
-                ).alias("bkt"),
-            )
-            for bi, (ai, b) in enumerate(_LSH_BANDS)
-        ]
-    )
     bkc = (
-        sig.select(F.explode(band_structs).alias("bb"))
-        .groupBy("bb.band", "bb.bkt")
+        _lsh_band_buckets(sig)
+        .groupBy("band", "bkt")
         .agg(F.count(F.lit(1)).alias("sz"))
         .select("sz")
     )
@@ -1136,18 +1039,17 @@ def t_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("sz")
     )
 
-    def lane(df: DataFrame, name: str, real_cap: int) -> DataFrame:
-        ladder = list(_CAP_LADDER) + [real_cap]
+    def lane(df: DataFrame, name: str) -> DataFrame:
         return df.select(
             F.lit(name).alias("lane"),
-            F.explode(F.array(*[F.lit(c).cast("bigint") for c in ladder])).alias("cap"),
+            F.explode(F.array(*[F.lit(c).cast("bigint") for c in _CAP_LADDER])).alias("cap"),
             "sz",
         )
 
     all_sz = (
-        lane(bkc, "lsh_band", _LSH_BUCKET_CAP)
-        .unionByName(lane(shc, "lsh_shingle", _MAX_SHINGLE_DF))
-        .unionByName(lane(svc, "simhash_band", _SIMHASH_BUCKET_CAP))
+        lane(bkc, "lsh_band")
+        .unionByName(lane(shc, "lsh_shingle"))
+        .unionByName(lane(svc, "simhash_band"))
     )
     over = F.col("sz") > F.col("cap")
     out = (

@@ -552,7 +552,7 @@ _SPLIT_PCT_TRAIN = 8  # md5(cluster) % 10 < 8 -> train
 
 
 def _leakage_oracle() -> str:
-    from .docpipe import _MAX_SHINGLE_DF
+    from ..operators.neardup import BUCKET_CAP
 
     shingle = "concat_ws(' ', tk[i], tk[i+1], tk[i+2])"
     jacc_thr = 0.02  # _JACC_THR, mirrored from docpipe
@@ -565,7 +565,7 @@ def _leakage_oracle() -> str:
       SELECT DISTINCT doc_id, source, {shingle} AS s
       FROM (SELECT doc_id, source, tk, unnest(range(1, GREATEST(len(tk) - 2, 1) + 1)) AS i FROM toks)
     ), sh AS (
-      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {_MAX_SHINGLE_DF}
+      SELECT * FROM sh0 QUALIFY COUNT(*) OVER (PARTITION BY s) <= {BUCKET_CAP}
     ), sizes AS (
       SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), inter AS (
@@ -1366,7 +1366,7 @@ _CONT_THR_MICRO = 800_000  # containment >= 0.8
     "excerpts/quotes symmetric Jaccard misses; integer-exact",
 )
 def t_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .docpipe import _capped_stream
+    from ..operators.neardup import capped_stream
 
     d = _fanout(load_tables(spark, sf_dir)["documents"])
     # shingles hashed to 64-bit longs (the _jaccard_edge_pairs
@@ -1379,24 +1379,14 @@ def t_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("s0"),
     ).select("doc_id", "source", F.xxhash64("s0").alias("s"))
-    # Bucket-based containment counting (optimization round 11, guide
-    # §2.3/§2.4 — the t_dedup_agreement rewrite with ORDERED pairs):
-    # ONE groupBy into per-(source, shingle) doc-id buckets replaces
-    # the count window + self-join (three exchanges of the persisted
-    # stream on the same keys). Round 12 (§5 memory safety): the
-    # global DF cap (≤ 200 per shingle across sources) moves UPSTREAM
-    # of the collect — a windowed per-shingle count on the exchanged
-    # stream (_capped_stream) drops every row of an over-cap shingle
-    # before its doc-id array can materialize in one aggregation
-    # buffer; identical kept-set to the old window sum over bucket
-    # sizes, whose second full-mass Exchange(s)+Sort disappears. The
-    # da ≠ db double-explode emits exactly the join's ordered-pair
-    # multiset; with the 200 cap a surviving bucket emits
-    # ≤ 200·199 ≈ 40k ordered pairs — far below the _bucket_pairs
-    # spreading threshold, so the in-place enumeration stays (no §2.5
-    # skew exposure at this cap).
+    # ONE groupBy into per-(source, shingle) doc-id buckets, capped at
+    # 200 docs per shingle across sources by the window form (the
+    # stream is not persisted, operators/neardup.py); the da ≠ db
+    # double-explode emits the self-join's ORDERED-pair multiset,
+    # ≤ 200·199 pairs per bucket — far below the bucket_pairs spreading
+    # threshold.
     bkt = (
-        _capped_stream(sh, 200)
+        capped_stream(sh, 200)
         .groupBy("source", "s")
         .agg(F.collect_list("doc_id").alias("ds"))
         .select("ds")

@@ -1080,8 +1080,8 @@ def simhash_corpus_index(
     bucket without a corpus-side shuffle.
 
     ``bucket_cap`` drops (band, value) buckets holding more than that
-    many corpus docs from the index — the same hot-bucket DF cap as the
-    batch lane (plans/docpipe2._SIMHASH_BUCKET_CAP): a dup-heavy corpus
+    many corpus docs from the index — the same hot-bucket cap as the
+    batch lane (operators/neardup.BUCKET_CAP): a dup-heavy corpus
     packs an entire duplicate family into one 14-bit collision class
     and every arriving probe of that class fans out to the whole
     family. Defaults to None (index everything) because the index build
@@ -1097,9 +1097,9 @@ def simhash_corpus_index(
         "match_id", "msh", F.posexplode(simhash_bands(F.col("msh"))).alias("b", "bv")
     )
     if bucket_cap is not None:
-        from ..plans.docpipe import _cap_hot_shingles
+        from ..operators.neardup import cap_hot_keys
 
-        idx = _cap_hot_shingles(idx, bucket_cap, keys=("b", "bv"))
+        idx = cap_hot_keys(idx, bucket_cap, keys=("b", "bv"))
     return idx
 
 

@@ -24,6 +24,28 @@ def spark():
     yield s
 
 
+def mini_sf_dir(spark, tmp_path, docs_rows, base_dir):
+    """A tmp sf_dir whose documents table is the given (doc_id, source,
+    text) rows and whose other tables are symlinks into ``base_dir``
+    (load_tables opens all)."""
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    from daxos_spark.catalog import TABLES
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{base_dir}/{t}.parquet", d / f"{t}.parquet")
+    spark.createDataFrame(
+        pd.DataFrame(docs_rows, columns=["doc_id", "source", "text"])
+    ).withColumn("n_chars", F.length("text")).withColumn(
+        "lang", F.lit("en")
+    ).write.parquet(str(d / "documents.parquet"))
+    return str(d)
+
+
 N_ROWS, N_SNPS = 240, 12
 SIGNAL_SNPS = (10, 11)  # last two carry signal (FIXTURES.md §2 style)
 

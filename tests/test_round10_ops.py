@@ -5,30 +5,12 @@ the driver SFs; these prove the SEMANTICS on planted corpora."""
 
 from __future__ import annotations
 
-import os
+import math
 
-import pandas as pd
 import pyspark.sql.functions as F
+from conftest import mini_sf_dir
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _mini_sf_dir(spark, tmp_path, docs_rows):
-    """A tmp sf_dir whose documents table is the given rows and whose
-    other tables are symlinks into sf0.001 (load_tables opens all)."""
-    from daxos_spark.catalog import TABLES
-
-    d = tmp_path / "sf"
-    d.mkdir()
-    for t in TABLES:
-        if t != "documents":
-            os.symlink(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
-    spark.createDataFrame(
-        pd.DataFrame(docs_rows, columns=["doc_id", "source", "text"])
-    ).withColumn("n_chars", F.length("text")).write.parquet(
-        str(d / "documents.parquet")
-    )
-    return str(d)
 
 
 def test_simhash_bucket_cap_drops_hot_family(spark, tmp_path):
@@ -46,7 +28,7 @@ def test_simhash_bucket_cap_drops_hot_family(spark, tmp_path):
         + [(10, "web", pair), (11, "web", pair)]  # pair of 2 <= cap
         + [(20, "web", "lorem ipsum dolor sit amet consectetur adipiscing")]
     )
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
 
     capped = {
         (r["da"], r["db"], r["hamming"])
@@ -76,9 +58,9 @@ def test_simhash_production_cap_exceeds_gate_corpora():
     """No bucket can outgrow the corpus, so cap >= 50k guarantees the
     committed sf0.001/0.01/0.1 AND 10x-probe hashes are cap-invariant
     (measured max bucket: 36 / 36 / 382 at the driver SFs)."""
-    from daxos_spark.plans.docpipe2 import _SIMHASH_BUCKET_CAP
+    from daxos_spark.operators.neardup import BUCKET_CAP
 
-    assert _SIMHASH_BUCKET_CAP >= 50_000
+    assert BUCKET_CAP >= 50_000
 
 
 def test_simhash_corpus_index_bucket_cap(spark):
@@ -251,9 +233,10 @@ def test_lsh_bucket_cap_drops_hot_family(spark, tmp_path):
     SimHash lane: a duplicate family larger than the cap shares all
     band signatures and is dropped from candidate generation; the
     production cap is structurally gate-invariant (>= corpus size)."""
-    from daxos_spark.plans.docpipe import _LSH_BUCKET_CAP, d_lsh_candidates
+    from daxos_spark.operators.neardup import BUCKET_CAP
+    from daxos_spark.plans.docpipe import d_lsh_candidates
 
-    assert _LSH_BUCKET_CAP >= 50_000
+    assert BUCKET_CAP >= 50_000
     fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
     pair = (
         "one two three four five six seven eight nine ten eleven twelve"
@@ -263,7 +246,7 @@ def test_lsh_bucket_cap_drops_hot_family(spark, tmp_path):
         + [(10, "web", pair), (11, "web", pair)]
         + [(20, "web", "lorem ipsum dolor sit amet consectetur adipiscing elit")]
     )
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
     capped = {
         (r["da"], r["db"]) for r in d_lsh_candidates(spark, sf, bucket_cap=3).collect()
     }
@@ -273,6 +256,44 @@ def test_lsh_bucket_cap_drops_hot_family(spark, tmp_path):
         for r in d_lsh_candidates(spark, sf, bucket_cap=None).collect()
     }
     assert (10, 11) in uncapped and len(uncapped) == 11  # C(5,2) + the pair
+
+
+def _shingles(text: str) -> set[str]:
+    tk = text.lower().split()
+    return {" ".join(tk[i : i + 3]) for i in range(max(len(tk) - 2, 1))}
+
+
+def test_jaccard_pairs_same_source_exact(spark, tmp_path):
+    """d_jaccard_pairs through the shared shingle-overlap operator
+    (operators.neardup.shingle_overlap): pairs stay within a source, and
+    every reported Jaccard is the exact truncated set ratio."""
+    from daxos_spark.plans.docpipe import d_jaccard_pairs
+
+    twin = "the quick brown fox jumps over the lazy dog today"
+    rows = [
+        # identical text in two sources: never a pair
+        (1, "web", twin),
+        (2, "news", twin),
+        # same-source near-dup: one word changed at the end
+        (10, "web", "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (11, "web", "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+        # same-source pair sharing exactly one shingle ("red green blue")
+        (20, "books", "red green blue one two three four"),
+        (21, "books", "five six seven red green blue"),
+        (30, "books", "nothing shared with anyone here at all"),
+    ]
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
+    got = {(r["da"], r["db"]): r["jaccard"] for r in d_jaccard_pairs(spark, sf).collect()}
+    spark.catalog.clearCache()
+
+    assert (1, 2) not in got
+    assert set(got) == {(10, 11), (20, 21)}
+    text = {d: t for d, _, t in rows}
+    for (a, b), j in got.items():
+        sa, sb = _shingles(text[a]), _shingles(text[b])
+        inter = len(sa & sb)
+        assert j == math.floor(inter / len(sa | sb) * 1e6) / 1e6, (a, b)
+    assert len(_shingles(text[20]) & _shingles(text[21])) == 1
 
 
 def test_html_entity_decode(spark):

@@ -4,30 +4,11 @@ opt-out gate, HTML end-to-end refinery composition."""
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pyspark.sql.functions as F
+from conftest import mini_sf_dir
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _mini_sf_dir(spark, tmp_path, docs_rows):
-    """A tmp sf_dir whose documents table is the given rows and whose
-    other tables are symlinks into sf0.001 (load_tables opens all)."""
-    from daxos_spark.catalog import TABLES
-
-    d = tmp_path / "sf"
-    d.mkdir()
-    for t in TABLES:
-        if t != "documents":
-            os.symlink(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
-    spark.createDataFrame(
-        pd.DataFrame(docs_rows, columns=["doc_id", "source", "text"])
-    ).withColumn("n_chars", F.length("text")).withColumn(
-        "lang", F.lit("en")
-    ).write.parquet(str(d / "documents.parquet"))
-    return str(d)
 
 
 def test_cap_census_fires_on_planted_family(spark, tmp_path):
@@ -52,7 +33,7 @@ def test_cap_census_fires_on_planted_family(spark, tmp_path):
         + [(10, "web", pair), (11, "web", pair)]
         + [(20, "web", "lorem ipsum dolor sit amet consectetur adipiscing")]
     )
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
 
     got = {
         (r["lane"], r["cap"]): (
@@ -82,15 +63,10 @@ def test_cap_census_fires_on_planted_family(spark, tmp_path):
         assert mx >= 5, lane  # the family is the max bucket
 
     # (c) quiet at the real caps — no bucket outgrows this corpus
-    from daxos_spark.plans.docpipe import _LSH_BUCKET_CAP, _MAX_SHINGLE_DF
-    from daxos_spark.plans.docpipe2 import _SIMHASH_BUCKET_CAP
+    from daxos_spark.operators.neardup import BUCKET_CAP
 
-    for lane, real in (
-        ("lsh_shingle", _MAX_SHINGLE_DF),
-        ("lsh_band", _LSH_BUCKET_CAP),
-        ("simhash_band", _SIMHASH_BUCKET_CAP),
-    ):
-        assert got[(lane, real)][2:] == (0, 0), lane
+    for lane in ("lsh_shingle", "lsh_band", "simhash_band"):
+        assert got[(lane, BUCKET_CAP)][2:] == (0, 0), lane
 
     # (d) the pairing that makes the cap non-silent: a dedup run capped
     # at 2 flags ZERO family pairs — and the census at that threshold
@@ -120,7 +96,7 @@ def test_refinery_html_composed_equals_staged(spark, tmp_path):
         )
         for i in range(3)
     ] + [(3, "web", "tiny")]  # 1 token -> every block under MIN_WORDS
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
 
     funnel = {r["stage"]: (r["stage_name"], r["n_docs"]) for r in t_refinery_html_e2e(spark, sf).collect()}
     assert funnel[1] == ("raw_html", 4)
@@ -201,7 +177,7 @@ def test_optout_gate_planted_semantics(spark, tmp_path):
         (25, _OPTOUT_SOURCES[0], "source level opt out drops this"),
         (221, _OPTOUT_SOURCES[1], "both meta (13 wins) AND source opt-out"),
     ]
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
     got = {
         r["doc_id"]: (r["meta_noai"], r["meta_noindex"], r["src_optout"], r["kept"])
         for r in _optout_verdicts_spark(spark, sf).collect()
@@ -312,7 +288,7 @@ def test_ingest_e2e_funnel_ground_truth(spark, tmp_path):
         (423, "src0", body + "more trailing content"),  # latest snapshot
         (2, "src0", body),
     ]
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
     funnel = {
         r["stage"]: (r["stage_name"], r["n_docs"])
         for r in _ingest_e2e_impl(spark, sf).collect()
@@ -372,7 +348,7 @@ def test_ingest_delta_planted_verdicts(spark, tmp_path):
 
     body = "planted snapshot body with enough words to exist"
     rows = [(i, "src0", body) for i in (4, 215, 426, 6, 217, 428, 0, 211, 422)]
-    sf = _mini_sf_dir(spark, tmp_path, rows)
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
     vals = {r["metric"]: r["value"] for r in _ingest_delta_impl(spark, sf).collect()}
     assert vals["committed_urls"] == 2  # articles 4 and 6
     assert vals["batch_snapshots"] == 5  # {4}, {428}, {0, 211, 422}

@@ -1,7 +1,8 @@
 """Round-12 optimization-round internals: memory-safe bucket caps
 (pre-count before collect_list) and oversized-bucket pair spreading
-(_bucket_pairs segment units) — the five dedup bucket lanes must emit
-the identical pair multisets through both enumeration branches."""
+(operators.neardup.bucket_pairs segment units) — the five dedup bucket
+lanes must emit the identical pair multisets through both enumeration
+branches."""
 
 from __future__ import annotations
 
@@ -19,8 +20,8 @@ def _naive_pairs(rows):
     return sorted(out)
 
 
-def test_bucket_pairs_small_and_big_branches(spark):
-    from daxos_spark.plans.docpipe import _bucket_pairs
+def test_pair_enumeration_small_and_big_branches(spark):
+    from daxos_spark.operators.neardup import bucket_pairs
 
     # bucket sizes straddle the seg threshold (seg=4 forces the
     # repartitioned unit-grid branch): 3 (small), 4 (boundary-small),
@@ -36,20 +37,20 @@ def test_bucket_pairs_small_and_big_branches(spark):
         [(F_row,) for F_row in [sorted(r) for r in rows]], "ds array<bigint>"
     )
     got = sorted(
-        (r["pa"], r["pb"]) for r in _bucket_pairs(bkt, seg=4).collect()
+        (r["pa"], r["pb"]) for r in bucket_pairs(bkt, seg=4).collect()
     )
     assert got == _naive_pairs(rows)
     # multiset property: a duplicated bucket duplicates its pairs
     bkt2 = bkt.unionByName(bkt.filter(F.size("ds") == 3))
     got2 = sorted(
-        (r["pa"], r["pb"]) for r in _bucket_pairs(bkt2, seg=4).collect()
+        (r["pa"], r["pb"]) for r in bucket_pairs(bkt2, seg=4).collect()
     )
     assert len(got2) == len(got) + 3  # the 3-member bucket's 3 pairs
 
 
-def test_bucket_pairs_struct_elements(spark):
+def test_pair_enumeration_struct_elements(spark):
     # the simhash lane enumerates struct(doc_id, sh) members
-    from daxos_spark.plans.docpipe import _bucket_pairs
+    from daxos_spark.operators.neardup import bucket_pairs
 
     rows = [[(i, 1000 + i) for i in range(9)]]
     bkt = spark.createDataFrame(
@@ -57,17 +58,17 @@ def test_bucket_pairs_struct_elements(spark):
     )
     got = sorted(
         (r["pa"]["doc_id"], r["pb"]["doc_id"])
-        for r in _bucket_pairs(bkt, seg=3).collect()
+        for r in bucket_pairs(bkt, seg=3).collect()
     )
     assert got == _naive_pairs([[i for i in range(9)]])
 
 
-def test_capped_stream_prefilters_before_collect(spark):
+def test_window_cap_prefilters_before_collect(spark):
     # the over-cap key must be pruned upstream of the collect_list
     # aggregate (plan-level guarantee of the §5 memory-safety fix),
     # and the windowed count must see the GLOBAL per-key total even
     # when the collect groups by (source, key)
-    from daxos_spark.plans.docpipe import _capped_stream
+    from daxos_spark.operators.neardup import capped_stream
 
     sh = spark.createDataFrame(
         # "hot" spans two sources (3 + 2 = 5 rows > cap 4): the global
@@ -77,7 +78,7 @@ def test_capped_stream_prefilters_before_collect(spark):
         + [(9, "w", "cold")],
         "doc_id bigint, source string, s string",
     )
-    capped = _capped_stream(sh, 4)
+    capped = capped_stream(sh, 4)
     bkt = capped.groupBy("source", "s").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ds")
     )
@@ -97,13 +98,13 @@ def test_capped_stream_prefilters_before_collect(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_cap_hot_shingles_unchanged(spark):
+def test_count_anti_cap_unchanged(spark):
     # the count+anti-join form still guards the self-join lanes
-    from daxos_spark.plans.docpipe import _cap_hot_shingles
+    from daxos_spark.operators.neardup import cap_hot_keys
 
     sh = spark.createDataFrame(
         [(d, "w", "hot") for d in range(5)] + [(9, "w", "cold")],
         "doc_id bigint, source string, s string",
     )
-    got = {(r["doc_id"], r["s"]) for r in _cap_hot_shingles(sh, 4).collect()}
+    got = {(r["doc_id"], r["s"]) for r in cap_hot_keys(sh, 4).collect()}
     assert got == {(9, "cold")}

@@ -650,7 +650,8 @@ def test_dedup_best_keep_matches_python_replay(spark):
     clusters via union-find, keep-longest survivor per cluster."""
     from collections import Counter
 
-    from daxos_spark.plans.docpipe import _JACC_THR, _MAX_SHINGLE_DF
+    from daxos_spark.operators.neardup import BUCKET_CAP
+    from daxos_spark.plans.docpipe import _JACC_THR
     from daxos_spark.plans.textpipe import t_dedup_best_keep
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
@@ -664,7 +665,7 @@ def test_dedup_best_keep_matches_python_replay(spark):
     df_count: Counter = Counter()
     for _, _, _, s in rows:
         df_count.update(s)
-    hot = {g for g, c in df_count.items() if c > _MAX_SHINGLE_DF}
+    hot = {g for g, c in df_count.items() if c > BUCKET_CAP}
     capped = [(did, src, nch, s - hot) for did, src, nch, s in rows]
 
     parent = {did: did for did, *_ in capped}

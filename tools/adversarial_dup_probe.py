@@ -34,16 +34,18 @@ near-identical rather than exact — either way one 14-bit collision
 class may not cost m² candidate work.
 
 Usage: python tools/adversarial_dup_probe.py [out_dir]
-       (default /root/repo/tmp_dup; synthesis skipped if present)
+       (default tmp_dup/ in the checkout; synthesis skipped if present)
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -88,7 +90,7 @@ def synthesize(spark, out_dir: str) -> None:
 
 
 def main() -> int:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/tmp_dup"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/tmp_dup"
     from daxos_spark.session import get_spark
 
     spark = get_spark()

@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 NOISE_FLOOR_SEC = 0.3
 

@@ -24,10 +24,11 @@ row, budgeted at ≈640 GB cluster RAM at 28k×215k).
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import pathlib
 import sys
 import time
 
@@ -64,7 +65,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
     import __spark_entry__ as entry_mod
 
     if vanilla:

@@ -20,10 +20,11 @@ seconds, MB/s. Run: python tools/continue_probe.py
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 import numpy as np
 from pyspark.sql import functions as F

@@ -39,10 +39,12 @@ Usage: python tools/html_lane_probe.py [sf_dir]
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -50,7 +52,7 @@ from tools.refinery_lane_probe import stage_summary
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/tmp_sf1_live"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/tmp_sf1_live"
     from daxos_spark.session import get_spark
 
     spark = get_spark()
@@ -82,7 +84,7 @@ def main() -> int:
     # per-corpus dir, recreated from scratch: stale symlinks from a
     # previous run against a DIFFERENT corpus would silently feed lane B
     # the wrong embeddings (measured: the semantic stage goes vacuous)
-    mat_dir = f"/root/repo/tmp_html_lane_{os.path.basename(os.path.normpath(sf_dir))}"
+    mat_dir = f"{REPO}/tmp_html_lane_{os.path.basename(os.path.normpath(sf_dir))}"
     shutil.rmtree(mat_dir, ignore_errors=True)
     os.makedirs(mat_dir)
     for t in TABLES:

@@ -23,16 +23,18 @@ K∝n SemDeDup analysis: measure, don't assert — and say which regime
 the variant is for.
 
 Usage: python tools/kn_vocab_probe.py [out_dir]  (default
-       /root/repo/tmp_kn_adv; synthesis skipped when present)
+       tmp_kn_adv/ in the checkout; synthesis skipped when present)
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -40,7 +42,7 @@ BASE = "/root/testdata/sf0.1"
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/tmp_kn_adv"
+    out = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/tmp_kn_adv"
     from daxos_spark.catalog import TABLES, load_tables
     from daxos_spark.session import get_spark
 

@@ -8,7 +8,7 @@ buckets and times the i<j pair enumeration into a count aggregate:
               round-11 form): the mega-bucket's C(N_BIG,2) pairs are
               generated by a single task while every other core idles
               (guide §2.5 straggler).
-  spread    — _bucket_pairs' guarded segment-grid form: the
+  spread    — neardup.bucket_pairs' guarded segment-grid form: the
               mega-bucket becomes ⌈N/seg⌉(⌈N/seg⌉+1)/2 ~16 KB units
               hash-repartitioned across tasks, each emitting ≤ seg²
               pairs; small buckets ride the same unified enumeration
@@ -23,10 +23,11 @@ Usage: python tools/pair_spread_probe.py [N_BIG] [reps]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
@@ -36,7 +37,7 @@ N_SMALL, SMALL_M = 2_000, 16
 def main() -> int:
     n_big = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    from daxos_spark.plans.docpipe import _PAIR_SEG, _bucket_pairs, _inplace_pairs
+    from daxos_spark.operators.neardup import PAIR_SEG, bucket_pairs, inplace_pairs
     from daxos_spark.session import get_spark
 
     spark = get_spark("pair_spread_probe")
@@ -61,16 +62,16 @@ def main() -> int:
             print(f"{flag} {name} rep{r}: {got} pairs in {dt:.1f}s")
 
     # in-place: mega bucket enumerated by ONE task
-    run("in-place", _inplace_pairs(bkt))
+    run("in-place", inplace_pairs(bkt))
     # spread: mega bucket split into repartitioned segment units
-    # (the guarded _bucket_pairs form)
-    run("spread  ", _bucket_pairs(bkt))
+    # (the guarded bucket_pairs form)
+    run("spread  ", bucket_pairs(bkt))
     n_units = (
-        (n_big + _PAIR_SEG - 1) // _PAIR_SEG
+        (n_big + PAIR_SEG - 1) // PAIR_SEG
     )
     print(
         f"mega bucket {n_big} members → {n_units * (n_units + 1) // 2} units "
-        f"of ≤{_PAIR_SEG}² pairs (seg={_PAIR_SEG})"
+        f"of ≤{PAIR_SEG}² pairs (seg={PAIR_SEG})"
     )
     bkt.unpersist()
     return 0

@@ -30,10 +30,12 @@ Usage: python tools/prefix_digest_probe.py [sf_dir]   (default tmp_sf1)
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -80,7 +82,7 @@ FROM pairs
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/tmp_sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/tmp_sf1"
 
     from daxos_spark.session import get_spark
 

@@ -33,10 +33,12 @@ Usage: python tools/refinery_lane_probe.py [sf_dir]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -64,7 +66,7 @@ def stage_summary(verdicts):
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/tmp_sf1_live"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/tmp_sf1_live"
     from daxos_spark.session import get_spark
 
     spark = get_spark()

@@ -17,14 +17,16 @@ Synthesis reuses tools/sf1_probe.py's replica machinery (token-bijected
 documents, offset keys) at N_REP=10 (tmp_sf1) and N_REP=30 (tmp_sf3).
 
 Usage: python tools/scale3_probe.py [--skip-30x]
-Clean up with: rm -rf /root/repo/tmp_sf1 /root/repo/tmp_sf3
+Clean up with: rm -rf tmp_sf1 tmp_sf3 (in the checkout)
 """
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import tools.sf1_probe as sp  # noqa: E402
 
@@ -55,20 +57,20 @@ def main() -> None:
     qs = E.queries()
 
     sp.N_REP = 10
-    sp.synthesize(spark, "/root/repo/tmp_sf1")
+    sp.synthesize(spark, f"{REPO}/tmp_sf1")
     if not skip30:
         sp.N_REP = 30
-        sp.synthesize(spark, "/root/repo/tmp_sf3")
+        sp.synthesize(spark, f"{REPO}/tmp_sf3")
 
     names = PANEL_PROBES + THIRD_POINT
     print("== 1x (sf0.1)")
     t1 = sp.bench(spark, qs, BASE, names)
     print("== 10x (tmp_sf1)")
-    t10 = sp.bench(spark, qs, "/root/repo/tmp_sf1", names)
+    t10 = sp.bench(spark, qs, f"{REPO}/tmp_sf1", names)
     t30 = {}
     if not skip30:
         print("== 30x (tmp_sf3)")
-        t30 = sp.bench(spark, qs, "/root/repo/tmp_sf3", THIRD_POINT)
+        t30 = sp.bench(spark, qs, f"{REPO}/tmp_sf3", THIRD_POINT)
 
     print("\nname, t1x, t10x, ratio10, t30x, ratio30/10")
     for n in names:

@@ -21,21 +21,23 @@ remedy (scale the plane count with the corpus so occupancy stays
 bounded). A lane ratio ≲ 4 for 10×→40× is linear-or-better.
 
 Usage: python tools/scale40_probe.py [--census-only]
-Clean up with: rm -rf /root/repo/tmp_sf4_live
+Clean up with: rm -rf tmp_sf4_live (in the checkout)
 """
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import tools.sf1_probe as sp  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-DIR10 = "/root/repo/tmp_sf1_live"
-DIR40 = "/root/repo/tmp_sf4_live"
+DIR10 = f"{REPO}/tmp_sf1_live"
+DIR40 = f"{REPO}/tmp_sf4_live"
 LANES = [
     "d_prefix_filter_jaccard",
     "t_dedup_best_keep",

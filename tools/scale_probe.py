@@ -16,7 +16,7 @@ sf0.1.)
 Usage:
     python tools/scale_probe.py [N] [base_sf_dir]
 
-Writes the synthetic corpus under /root/repo/tmp_scale_probe/ (removed
+Writes the synthetic corpus under tmp_scale_probe/ in the checkout (removed
 afterwards), prints per-query wall times at 1x and Nx, and flags any
 query whose time grows faster than N^2 (pair-producing ops are allowed
 up to ~N^2 because the planted dup structure is itself quadratic).
@@ -24,11 +24,13 @@ up to ~N^2 because the planted dup structure is itself quadratic).
 
 from __future__ import annotations
 
+import pathlib
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 PROBES = [
     "d_exact_dedup",
@@ -50,7 +52,7 @@ PROBES = [
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     base = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-    out = "/root/repo/tmp_scale_probe"
+    out = f"{REPO}/tmp_scale_probe"
 
     import __spark_entry__ as E
     from daxos_spark.session import get_spark

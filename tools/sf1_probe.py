@@ -17,7 +17,7 @@ dir; prints per-query wall ratios. A ratio ≲ 10 is linear-or-better
 (more parallelism amortizes fixed cost); anything well above 10 is a
 super-linear outlier to investigate. Results are recorded in SCALE.md.
 
-Usage: python tools/sf1_probe.py [out_dir]   (default /root/repo/tmp_sf1;
+Usage: python tools/sf1_probe.py [out_dir]   (default tmp_sf1/ in the checkout;
        synthesis is skipped when out_dir already has all tables)
 """
 
@@ -25,10 +25,12 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -291,7 +293,7 @@ def bench_semdedup_scaled(spark, out_dir: str) -> dict:
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    out_dir = args[0] if args else "/root/repo/tmp_sf1"
+    out_dir = args[0] if args else f"{REPO}/tmp_sf1"
     from daxos_spark.session import get_spark
 
     spark = get_spark()

@@ -22,12 +22,13 @@ Usage: python tools/stream_rate_probe.py [pipeline] [n_slices]
 
 from __future__ import annotations
 
+import pathlib
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
