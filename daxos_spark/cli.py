@@ -257,7 +257,10 @@ def cmd_train(spark: SparkSession, args) -> None:
     """One-shot training workflow (workflows/training/Snakefile:17-29
     refit → predict DAG): CV search → prune-refit → test predictions →
     Platt calibration, writing every reference artifact under one
-    prefix."""
+    prefix (the refit model at ``{prefix}/model`` and its
+    ``{prefix}_used_cols.csv`` are what ``predict`` reads)."""
+    import pandas as pd
+
     from .training import run_training
 
     res = run_training(
@@ -275,6 +278,7 @@ def cmd_train(spark: SparkSession, args) -> None:
         seed=args.seed,
     )
     _write_small_csv(res.cv_results, f"{args.out_prefix}_cv_scores.csv")
+    pd.DataFrame({"snp": res.used_cols}).to_csv(f"{args.out_prefix}_used_cols.csv", index=False)
     _write_small_csv(
         res.importances.orderBy(F.col("gain").desc()), f"{args.out_prefix}_importances.csv"
     )

@@ -53,10 +53,7 @@ def newton_logistic_grouped(g: DataFrame, iters: int = 8) -> DataFrame:
     nothing collected. Start: a=0, b=logit(base rate). Quadratic
     convergence puts the iterate at machine precision well before 8
     steps for any non-separable grouped table. This is the relational
-    core behind both ``fit_platt_relational`` and the hash-checked
-    ``a2_platt_identity`` driver query."""
-    from pyspark.sql import functions as F
-
+    core of the hash-checked ``a2_platt_identity`` driver query."""
     tot = g.agg(F.sum("n").alias("nn"), F.sum("k").alias("kk"))
     ab = tot.select(
         F.lit(0.0).alias("a"),
@@ -81,39 +78,3 @@ def newton_logistic_grouped(g: DataFrame, iters: int = 8) -> DataFrame:
             (b - (F.col("h11") * F.col("g2") - F.col("h12") * F.col("g1")) / det).alias("b"),
         )
     return ab
-
-
-def fit_platt_relational(
-    oof: DataFrame,
-    label_col: str = "label",
-    pred_col: str = "y_pred",
-    iters: int = 8,
-) -> tuple[float, float]:
-    """M6 without MLlib: the same unpenalized logistic fit as
-    ``fit_platt`` (reference scale.py:8-30, sklearn penalty=None), but
-    as a pure relational Newton — group by distinct score value (the
-    likelihood depends on data only through per-score counts), then
-    fixed Newton steps of crossJoin+agg. No LBFGS, no MLlib vectors, no
-    per-row collect; the only driver transfer is the final (coef,
-    intercept) pair. Agrees with ``fit_platt`` coefficients to optimizer
-    tolerance (tests/test_platt_identity.py)."""
-    g = oof.groupBy(F.col(pred_col).cast("double").alias("x")).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col(label_col).cast("double")).alias("k"),
-    )
-    row = newton_logistic_grouped(g, iters=iters).collect()[0]
-    return float(row["a"]), float(row["b"])
-
-
-def apply_platt_relational(
-    scored: DataFrame,
-    coef: float,
-    intercept: float,
-    pred_col: str = "y_pred",
-    out_col: str = "y_pred_platt_scaled",
-) -> DataFrame:
-    """M7 twin of ``apply_platt`` for the relational fit: calibrated
-    probability as a plain column expression (whole-stage codegen, no
-    model object)."""
-    z = F.lit(coef) * F.col(pred_col).cast("double") + F.lit(intercept)
-    return scored.withColumn(out_col, 1.0 / (1.0 + F.exp(-z)))

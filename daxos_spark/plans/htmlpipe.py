@@ -30,13 +30,20 @@ from ..functions.html import page_text as _page_text
 from ..functions.html import sql_page_text as _sql_page_text_fn
 from ..functions.html import (
     MIN_WORDS,
-    TAG_RE,
     block_stats,
-    extract_main,
     keep_cond,
     sql_block_stats,
     sql_extract_main,
     sql_keep_cond,
+)
+from ..operators.refinery import (
+    _META_ROBOTS_RE,
+    _OPTOUT_SOURCES,
+    extract_text,
+    gopher_flags,
+    gopher_pass,
+    optout_gate,
+    stage_census,
 )
 from .docpipe import _fanout
 from .registry import QuerySpec, checkpoint_release, register, sql_trunc6, trunc6
@@ -119,6 +126,20 @@ def _html_sql(template=_TEMPLATE) -> str:
     return " || ".join(parts)
 
 
+def _html_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, lang, tk, html): every document rendered through
+    _TEMPLATE (columns a caller does not read are pruned from its plan)."""
+    from ..functions import text as T
+
+    d = _fanout(load_tables(spark, sf_dir)["documents"])
+    return d.select("doc_id", "source", "lang", T.tokens(F.col("text")).alias("tk")).withColumn(
+        "html", _html_spark()
+    )
+
+
+# whole-page word count: the raw-html stage's token mass
+_RAW_WORDS = f"size(split({_page_text('html')}, ' '))"
+
 _HTML_BASE_SQL = f"""base AS (
       SELECT doc_id, source, {_TOKS} AS tk FROM documents
     ), h AS (
@@ -126,17 +147,6 @@ _HTML_BASE_SQL = f"""base AS (
     ), st AS (
       SELECT doc_id, source, html, {sql_block_stats('html')} AS stats FROM h
     )"""
-
-
-def _html_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import text as T
-
-    d = _fanout(load_tables(spark, sf_dir)["documents"])
-    return (
-        d.select("doc_id", "source", T.tokens(F.col("text")).alias("tk"))
-        .withColumn("html", _html_spark())
-        .withColumn("stats", block_stats("html"))
-    )
 
 
 @_q(
@@ -174,7 +184,7 @@ def _html_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text gate assumes; zero pre-aggregate shuffles",
 )
 def t_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = _html_stats_df(spark, sf_dir)
+    st = _html_pages(spark, sf_dir).withColumn("stats", block_stats("html"))
     b = st.select("doc_id", "source", F.explode("stats").alias("s")).filter(
         F.expr("length(s.txt) > 0")
     )
@@ -218,9 +228,7 @@ def t_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..functions.html import sql_page_text as _sql_page_text  # noqa: E402
-
-_STRIP_SQL = _sql_page_text("html")
+_STRIP_SQL = _sql_page_text_fn("html")
 
 
 @_q(
@@ -255,54 +263,37 @@ _STRIP_SQL = _sql_page_text("html")
     """,
     doc="the refinery head STARTING FROM RAW HTML: synthesize -> "
     "extract main content (jusText-lite) -> Gopher quality gate on the "
-    "EXTRACTED text (the shared _gopher_cte/_gopher_flags verdicts, so "
+    "EXTRACTED text (the shared _gopher_cte/gopher_flags verdicts, so "
     "this funnel and t_refinery_e2e can never drift) — per-stage "
     "surviving docs + token mass; the stage every text funnel in this "
     "engine previously assumed had already happened",
 )
 def t_html_refinery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textpipe import _gopher_flags
-
-    st = _html_stats_df(spark, sf_dir)
-    ext = st.select(
-        "doc_id",
-        "source",
-        F.expr(f"size(split({_page_text('html')}, ' '))").alias("raw_words"),
-        extract_main("stats").alias("text"),
-    ).localCheckpoint(eager=True)
-    # ^ the gopher stage re-tokenizes `text` several times; checkpoint
-    # the per-doc extraction ONCE so the synthesis+extraction regex
-    # chain is not re-evaluated per downstream consumer (the r9
-    # Arrow-node-materialization lesson, JVM-expression edition).
-    ex2 = ext.filter(F.length("text") > 0)
-    g = _gopher_flags(ex2)
-    p_all = (
-        F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha") * F.col("p_stop") * F.col("p_rep")
+    pages = _html_pages(spark, sf_dir)
+    # the gopher stage re-tokenizes `text` several times; checkpoint the
+    # per-doc extraction ONCE so the synthesis+extraction regex chain is
+    # not re-evaluated per downstream consumer (the r9
+    # Arrow-node-materialization lesson, JVM-expression edition)
+    ex2 = extract_text(pages, "html", "doc_id", "source").localCheckpoint(eager=True)
+    p = gopher_pass()
+    return stage_census(
+        [
+            ("raw_html", pages, F.count(F.lit(1)), F.sum(F.expr(_RAW_WORDS)).cast("bigint")),
+            (
+                "extracted",
+                ex2,
+                F.count(F.lit(1)),
+                F.sum(F.expr("size(split(text, ' '))")).cast("bigint"),
+            ),
+            (
+                "gopher_rules",
+                gopher_flags(ex2),
+                F.sum(p).cast("bigint"),
+                F.sum(p * F.col("n_tok")).cast("bigint"),
+            ),
+        ],
+        "n_tokens",
     )
-    s1 = ext.agg(
-        F.count(F.lit(1)).alias("n1"), F.sum("raw_words").cast("bigint").alias("t1")
-    )
-    s2 = ex2.agg(
-        F.count(F.lit(1)).alias("n2"),
-        F.sum(F.expr("size(split(text, ' '))")).cast("bigint").alias("t2"),
-    )
-    s3 = g.agg(
-        F.sum(p_all).cast("bigint").alias("n3"),
-        F.sum(p_all * F.col("n_tok")).cast("bigint").alias("t3"),
-    )
-    out = (
-        s1.crossJoin(s2)
-        .crossJoin(s3)
-        .selectExpr(
-            "stack(3,"
-            " CAST(1 AS BIGINT), 'raw_html', CAST(n1 AS BIGINT), t1,"
-            " CAST(2 AS BIGINT), 'extracted', CAST(n2 AS BIGINT), t2,"
-            " CAST(3 AS BIGINT), 'gopher_rules', n3, t3"
-            ") AS (stage, stage_name, n_docs, n_tokens)"
-        )
-        .orderBy("stage")
-    )
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -362,37 +353,24 @@ def _refinery_html_oracle() -> str:
 
 
 def _refinery_html_parts(spark: SparkSession, sf_dir: str):
-    """(ext, verdicts, caches) — the composed funnel's extraction frame
-    and per-doc verdict relation, exposed so the live-10× lane probe
+    """(ext, verdicts, caches) — the composed funnel's non-empty
+    extraction frame (doc_id, source, lang, text) and per-doc verdict
+    relation, exposed so the live-10× lane probe
     (tools/html_lane_probe.py) can digest the survivor SETS, not just
     the stage counts."""
-    from ..functions import text as T
     from .docpipe import _semantic_keep_lazy
     from .textpipe import _refinery_gates_from, _refinery_verdicts
 
-    d = _fanout(load_tables(spark, sf_dir)["documents"])
-    st = (
-        d.select("doc_id", "source", "lang", T.tokens(F.col("text")).alias("tk"))
-        .withColumn("html", _html_spark())
-        .withColumn("stats", block_stats("html"))
-    )
-    ext = st.select(
-        "doc_id",
-        "source",
-        "lang",
-        F.expr(f"size(split({_page_text('html')}, ' '))").alias("raw_words"),
-        extract_main("stats").alias("text"),
-    )
+    pages = _html_pages(spark, sf_dir)
     # the gate stages re-consume `text` many times (gopher, unigram
     # + bigram explodes, the K-gram position stream); checkpoint the
     # synthesis+extraction regex chain ONCE (t_html_refinery's rule)
-    ext = ext.localCheckpoint(eager=True)
-    exd = ext.filter(F.length("text") > 0).select("doc_id", "source", "lang", "text")
-    gf, nll, cov, caches = _refinery_gates_from(exd)
+    ext = extract_text(pages, "html", "doc_id", "source", "lang").localCheckpoint(eager=True)
+    gf, nll, cov, caches = _refinery_gates_from(ext)
     # production stage order: semantic dedup judges the EXTRACTED
-    # corpus (docs=exd) — a doc whose extraction came up empty cannot
-    # evict a real survivor from the keep-list
-    keep, sem_caches = _semantic_keep_lazy(spark, sf_dir, docs=exd.select("doc_id", "lang"))
+    # corpus — a doc whose extraction came up empty cannot evict a real
+    # survivor from the keep-list
+    keep, sem_caches = _semantic_keep_lazy(spark, sf_dir, docs=ext.select("doc_id", "lang"))
     caches.extend(sem_caches)
     keep = keep.select("doc_id", F.col("keep").alias("sem0"))
     return ext, _refinery_verdicts(gf, nll, cov, keep), caches
@@ -412,10 +390,10 @@ def _refinery_html_parts(spark: SparkSession, sf_dir: str):
 def t_refinery_html_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textpipe import _refinery_stage_agg
 
-    ext, verdicts, caches = _refinery_html_parts(spark, sf_dir)
-    head = ext.agg(
+    _, verdicts, caches = _refinery_html_parts(spark, sf_dir)
+    head = _html_pages(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n0"),
-        F.sum("raw_words").cast("bigint").alias("t0"),
+        F.sum(F.expr(_RAW_WORDS)).cast("bigint").alias("t0"),
     )
     a = _refinery_stage_agg(verdicts)
     out = (
@@ -547,9 +525,8 @@ def t_html_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that runs late is a compliance bug). The fixture plants the meta tags
 # deterministically (doc_id % 13 → noai, else % 17 → noindex; ids
 # divisible by both take the noai arm — CASE order) so both engines
-# synthesize the identical corpus.
-_META_ROBOTS_RE = r'(?is)<meta\s[^>]*name="robots"[^>]*content="([^"]*)"'
-_OPTOUT_SOURCES = ("src3", "src17")
+# synthesize the identical corpus. The Spark-side gate is
+# operators/refinery.optout_gate.
 
 
 def _meta_sql() -> str:
@@ -594,43 +571,19 @@ def _optout_base_sql() -> str:
     )"""
 
 
-def _optout_verdicts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import text as T
-    from ..functions.html import _spark_lit
-
-    d = _fanout(load_tables(spark, sf_dir)["documents"])
-    pages = (
-        d.select("doc_id", "source", T.tokens(F.col("text")).alias("tk"))
-        .withColumn("html", _html_spark())
-        .select(
-            "doc_id",
-            "source",
-            F.expr(f"replace(html, '</head>', {_meta_sql()} || '</head>')").alias(
-                "page"
-            ),
-        )
-    )
-    robots = f"lower(regexp_extract(page, '{_spark_lit(_META_ROBOTS_RE)}', 1))"
-    return pages.select(
+def _planted_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, page): every document rendered through _TEMPLATE
+    with the planted robots meta in its head — the opt-out fixture of
+    this module and of the ingest family (plans/urlpipe)."""
+    return _html_pages(spark, sf_dir).select(
         "doc_id",
         "source",
-        "page",
-        F.expr(f"CASE WHEN position('noai' IN {robots}) > 0 THEN 1 ELSE 0 END").alias(
-            "meta_noai"
-        ),
-        F.expr(
-            f"CASE WHEN position('noindex' IN {robots}) > 0 OR {robots} = 'none'"
-            " THEN 1 ELSE 0 END"
-        ).alias("meta_noindex"),
-        F.col("source").isin(*_OPTOUT_SOURCES).cast("int").alias("src_optout"),
-    ).withColumn(
-        "kept",
-        (
-            (F.col("meta_noai") == 0)
-            & (F.col("meta_noindex") == 0)
-            & (F.col("src_optout") == 0)
-        ).cast("int"),
+        F.expr(f"replace(html, '</head>', {_meta_sql()} || '</head>')").alias("page"),
     )
+
+
+def _optout_verdicts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return optout_gate(_planted_pages(spark, sf_dir))
 
 
 @_q(
@@ -712,52 +665,31 @@ def t_optout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "must use so no extraction cost is spent on opted-out content",
 )
 def t_optout_refinery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textpipe import _gopher_flags
-
     v = _optout_verdicts_spark(spark, sf_dir)
-    # the gate FILTER precedes block_stats in the plan: extraction cost
+    # the gate FILTER precedes extraction in the plan: extraction cost
     # is spent only on compliant pages (the whole point of the ordering)
-    ka = v.filter(F.col("kept") == 1).select("doc_id", "source", "page")
-    kext = ka.withColumn("stats", block_stats("page")).select(
-        "doc_id", extract_main("stats").alias("text")
-    )
-    kx = kext.filter(F.length("text") > 0)
+    ka = v.filter(F.col("kept") == 1)
     # gopher re-consumes `text` several times; checkpoint the
     # extraction once (the shared multi-consumer rule)
-    kx = kx.localCheckpoint(eager=True)
-    g = _gopher_flags(kx.select("doc_id", F.lit("x").alias("source"), "text")).join(
+    kx = extract_text(ka, "page", "doc_id").localCheckpoint(eager=True)
+    g = gopher_flags(kx.select("doc_id", F.lit("x").alias("source"), "text")).join(
         kx.select("doc_id", F.length("text").alias("chars")), "doc_id"
     )
-    p_all = (
-        F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha") * F.col("p_stop") * F.col("p_rep")
-    )
-    s1 = v.agg(
-        F.count(F.lit(1)).alias("a1"), F.sum(F.length("page")).cast("bigint").alias("b1")
-    )
-    s2 = v.filter(F.col("kept") == 1).agg(
-        F.count(F.lit(1)).alias("a2"), F.sum(F.length("page")).cast("bigint").alias("b2")
-    )
-    s3 = kx.agg(
-        F.count(F.lit(1)).alias("a3"), F.sum(F.length("text")).cast("bigint").alias("b3")
-    )
-    s4 = g.agg(
-        F.sum(p_all).cast("bigint").alias("a4"),
-        F.sum(p_all * F.col("chars")).cast("bigint").alias("b4"),
-    )
-    return (
-        s1.crossJoin(s2)
-        .crossJoin(s3)
-        .crossJoin(s4)
-        .selectExpr(
-            "stack(4,"
-            " CAST(1 AS BIGINT), 'raw_html', CAST(a1 AS BIGINT), b1,"
-            " CAST(2 AS BIGINT), 'optout_gate', CAST(a2 AS BIGINT), b2,"
-            " CAST(3 AS BIGINT), 'extracted', CAST(a3 AS BIGINT), b3,"
-            " CAST(4 AS BIGINT), 'gopher_rules', coalesce(a4, CAST(0 AS BIGINT)),"
-            " coalesce(b4, CAST(0 AS BIGINT))"
-            ") AS (stage, stage_name, n_docs, n_chars)"
-        )
-        .orderBy("stage")
+    n, page_chars, p = F.count(F.lit(1)), F.sum(F.length("page")).cast("bigint"), gopher_pass()
+    zero = F.lit(0).cast("bigint")
+    return stage_census(
+        [
+            ("raw_html", v, n, page_chars),
+            ("optout_gate", ka, n, page_chars),
+            ("extracted", kx, n, F.sum(F.length("text")).cast("bigint")),
+            (
+                "gopher_rules",
+                g,
+                F.coalesce(F.sum(p).cast("bigint"), zero),
+                F.coalesce(F.sum(p * F.col("chars")).cast("bigint"), zero),
+            ),
+        ],
+        "n_chars",
     )
 
 
@@ -859,15 +791,9 @@ def t_html_dedup_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         tk.select("doc_id", F.lit("b").alias("site"), _html_spark(_TEMPLATE_B).alias("html"))
     )
     norm = lambda c: F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")  # noqa: E731
-    px = pages.withColumn("stats", block_stats("html")).select(
-        "doc_id",
-        "site",
-        md5_long(norm(F.expr(_page_text("html")))).alias("raw_fp"),
-        extract_main("stats").alias("ext"),
-    )
-    pe = px.filter(F.length("ext") > 0).select(
-        "raw_fp", md5_long(norm(F.col("ext"))).alias("ext_fp")
-    )
+    pe = extract_text(
+        pages, "html", md5_long(norm(F.expr(_page_text("html")))).alias("raw_fp")
+    ).select("raw_fp", md5_long(norm(F.col("text"))).alias("ext_fp"))
     ru, eu, n = F.countDistinct("raw_fp"), F.countDistinct("ext_fp"), F.count(F.lit(1))
     return pe.agg(
         n.cast("bigint").alias("n_pages"),

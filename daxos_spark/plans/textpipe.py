@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_tables
 from ..functions.hashing import md5_long, md5_long_sql, word_shingles
+from ..operators.refinery import _GOPHER_STOP, gopher_flags, gopher_pass
 from .docpipe import _fanout
 from .registry import QuerySpec, checkpoint_release, davg, register, sql_davg, sql_dsum, sql_trunc6, trunc6
 
@@ -2390,27 +2391,9 @@ def t_lsh_band_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Gopher quality-rule gate (Rae et al. 2021, §A1.1) — the published
-# per-rule document filter, reported as a per-source audit table. The
-# synthetic corpus has no newlines or symbol runs, so the line-based
-# rules are omitted and the five meaningful rules are kept, with bounds
-# calibrated to be non-degenerate on this corpus (published bounds in
-# comments):
-#   R1 token count in [25, 80]           (paper: words in [50, 100k])
-#   R2 mean word length in [3.0, 4.5]    (paper: [3, 10])
-#   R3 ≥80% of words contain a letter    (paper: 80%)
-#   R4 ≥2 distinct English stopwords     (paper: ≥2 of 8)
-#   R5 top-bigram token fraction ≤ 0.125 (paper: top-2-gram char
-#                                         fraction ≤ 0.20)
-# Scale: every rule is a per-row JVM expression over the token array —
-# zero shuffles before the per-source aggregate (20 groups). The R5
-# distinct×occurrence scan is O(len²) in tokens per row but map-side;
-# for book-length docs switch to the exploded groupBy form
-# (d_hot_ngrams' shape) — at ≤10k tokens/doc the HOF wins because it
-# never shuffles the gram stream.
-_GOPHER_STOP = "'the', 'a', 'of', 'and', 'to', 'in', 'is', 'that', 'it', 'for'"
-
-
+# Gopher quality-rule gate (Rae et al. 2021, §A1.1), reported as a
+# per-source audit table. The rules and their bounds are defined once in
+# operators/refinery.py (gopher_flags); this is their duckdb twin.
 def _gopher_cte(src: str = "documents") -> str:
     """Per-doc Gopher verdict chain (gs → gr → gflag, no leading WITH):
     gflag carries (doc_id, source, n_tok, p_wc..p_rep). Shared by the
@@ -2466,7 +2449,7 @@ def _gopher_cte(src: str = "documents") -> str:
 )
 def t_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _fanout(load_tables(spark, sf_dir)["documents"])
-    v = _gopher_flags(d)
+    v = gopher_flags(d)
     return (
         v.groupBy("source")
         .agg(
@@ -2476,75 +2459,13 @@ def t_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("p_alpha").alias("pass_alpha"),
             F.sum("p_stop").alias("pass_stopwords"),
             F.sum("p_rep").alias("pass_repetition"),
-            F.sum(
-                F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha") * F.col("p_stop") * F.col("p_rep")
-            ).alias("pass_all"),
+            F.sum(gopher_pass()).alias("pass_all"),
         )
         .withColumn(
             "keep_rate",
             trunc6(F.col("pass_all").cast("double") / F.col("n_docs")),
         )
         .orderBy("source")
-    )
-
-
-def _gopher_flags(d: DataFrame, keep: tuple = ()) -> DataFrame:
-    """Per-document Gopher rule verdicts (doc_id, source, n_tok, p_*):
-    the doc-level relation t_gopher_rules aggregates per source and
-    t_refinery_e2e consumes as its stage-2 gate. ``keep`` names extra
-    input columns carried through unchanged — the streaming composed
-    ingest uses it to avoid a stream-stream self-join (default () keeps
-    the historical projection byte-identical)."""
-    stop = [w.strip(" '") for w in _GOPHER_STOP.split(",")]
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    s = d.select(
-        "doc_id",
-        "source",
-        toks.alias("toks"),
-        F.size(toks).alias("n_tok"),
-        F.length(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", "")).alias("n_chars_ws"),
-        *keep,
-    )
-    # bigram stream rebuilt inline at each use (convention: exploding /
-    # transforming a named heavy array column pays an UnsafeRow copy)
-    grams = F.expr(
-        "transform(sequence(1, greatest(size(toks) - 1, 1)),"
-        " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-    )
-    r = s.select(
-        "doc_id",
-        "source",
-        "n_tok",
-        *keep,
-        (F.col("n_chars_ws").cast("double") / F.col("n_tok")).alias("mwl"),
-        (
-            F.size(F.filter(F.col("toks"), lambda t: t.rlike("[a-z]"))).cast("double")
-            / F.col("n_tok")
-        ).alias("alpha_ratio"),
-        F.size(F.array_distinct(F.filter(F.col("toks"), lambda t: t.isin(stop)))).alias("n_stop"),
-        F.when(F.col("n_tok") < 2, F.lit(0.0))
-        .otherwise(
-            F.array_max(
-                F.transform(
-                    F.array_distinct(grams),
-                    lambda g: F.size(F.filter(grams, lambda x: x == g)),
-                )
-            ).cast("double")
-            * F.lit(2.0)
-            / F.col("n_tok")
-        )
-        .alias("rep_frac"),
-    )
-    return r.select(
-        "doc_id",
-        "source",
-        "n_tok",
-        *keep,
-        F.col("n_tok").between(25, 80).cast("int").alias("p_wc"),
-        ((F.col("mwl") >= 3.0) & (F.col("mwl") <= 4.5)).cast("int").alias("p_mwl"),
-        (F.col("alpha_ratio") >= 0.8).cast("int").alias("p_alpha"),
-        (F.col("n_stop") >= 2).cast("int").alias("p_stop"),
-        (F.col("rep_frac") <= 0.125).cast("int").alias("p_rep"),
     )
 
 
@@ -2663,7 +2584,7 @@ def _uncertainty_sample_finish(feat: DataFrame, b: DataFrame) -> DataFrame:
 #   retention → SemDeDup keep-list,
 # reporting the per-stage survivor funnel (docs + token mass). Each
 # stage consumes the EXACT shared machinery of its standalone query
-# (`_gopher_flags`, `_bigram_scored`, `_ss_position_stream`'s
+# (`gopher_flags`, `_bigram_scored`, `_ss_position_stream`'s
 # canon/coverage chain, `_semdedup_keep_lazy`), so the funnel numbers
 # are the ones the audited gates themselves would produce — this is
 # the job a 100 TB curation run actually executes per ingest.
@@ -2793,14 +2714,7 @@ def _refinery_gates_from(d: DataFrame, two_lane: bool = False):
     on EXTRACTED text (htmlpipe.t_refinery_html_e2e)."""
     caches: list = []
 
-    gf = _gopher_flags(d).select(
-        "doc_id",
-        "n_tok",
-        (
-            F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha")
-            * F.col("p_stop") * F.col("p_rep")
-        ).alias("p_gopher"),
-    )
+    gf = gopher_flags(d).select("doc_id", "n_tok", gopher_pass().alias("p_gopher"))
     scored, bg_caches = _bigram_scored(d)
     caches.extend(bg_caches)
     nll = (

@@ -34,6 +34,15 @@ from ..functions.url import (
     url_rule_steps_spark,
     url_rule_steps_sql,
 )
+from ..operators.refinery import (
+    _META_ROBOTS_RE,
+    extract_text,
+    gopher_flags,
+    gopher_pass,
+    latest_per_url,
+    optout_gate,
+    stage_census,
+)
 from .docpipe import _fanout
 from .registry import QuerySpec, register, sql_trunc6, trunc6
 
@@ -63,27 +72,40 @@ _VARIANTS = (
 )
 
 
-def _snap_sql() -> str:
-    """duckdb CTE body: snaps(doc_id, ts, url)."""
+def _snap_url(string_type: str = "VARCHAR") -> str:
+    """The snapshot URL as a CASE over doc_id (duckdb VARCHAR, Spark
+    STRING casts)."""
     arms = " ".join(
-        f"WHEN {i} THEN '{p}' || CAST((doc_id % {_N_ART}) % {_N_HOST} AS VARCHAR)"
-        f" || '{m}' || CAST(doc_id % {_N_ART} AS VARCHAR) || '{s}'"
+        f"WHEN {i} THEN '{p}' || CAST((doc_id % {_N_ART}) % {_N_HOST} AS {string_type})"
+        f" || '{m}' || CAST(doc_id % {_N_ART} AS {string_type}) || '{s}'"
         for i, (p, m, s) in enumerate(_VARIANTS)
     )
+    return f"CASE doc_id % {len(_VARIANTS)} {arms} END"
+
+
+def _snap_sql() -> str:
+    """duckdb CTE body: snaps(doc_id, ts, url)."""
     return f"""snaps AS (
       SELECT doc_id, {_TS0} + doc_id AS ts,
-             CASE doc_id % {len(_VARIANTS)} {arms} END AS url
+             {_snap_url()} AS url
       FROM documents
     )"""
 
 
-def _snap_spark_url() -> str:
-    arms = " ".join(
-        f"WHEN {i} THEN '{p}' || CAST((doc_id % {_N_ART}) % {_N_HOST} AS STRING)"
-        f" || '{m}' || CAST(doc_id % {_N_ART} AS STRING) || '{s}'"
-        for i, (p, m, s) in enumerate(_VARIANTS)
-    )
-    return f"CASE doc_id % {len(_VARIANTS)} {arms} END"
+def _isnap_sql() -> str:
+    """duckdb CTE chain ibase → isnap(doc_id, source, ts, url, page):
+    the ingest family's snapshot fixture (_ingest_snap_df's twin)."""
+    from .htmlpipe import _html_sql, _meta_sql
+    from .textpipe import _TOKS
+
+    return f"""ibase AS (
+      SELECT doc_id, source, {_TOKS} AS tk, {_TS0} + doc_id AS ts FROM documents
+    ), isnap AS (
+      SELECT doc_id, source, ts,
+             {_snap_url()} AS url,
+             replace({_html_sql()}, '</head>', {_meta_sql()} || '</head>') AS page
+      FROM ibase
+    )"""
 
 
 def _snaps_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,7 +113,7 @@ def _snaps_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         (F.lit(_TS0) + F.col("doc_id")).alias("ts"),
-        F.expr(_snap_spark_url()).alias("url"),
+        F.expr(_snap_url("STRING")).alias("url"),
     )
 
 
@@ -257,23 +279,12 @@ def t_url_dedup_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (five URL variant classes) whose page carries the planted robots
 # meta — both engines synthesize identically.
 def _ingest_oracle() -> str:
-    from .htmlpipe import _html_sql, _meta_sql, _OPTOUT_IN
+    from .htmlpipe import _OPTOUT_IN
     from ..functions.html import sql_block_stats, sql_extract_main
-    from .textpipe import _TOKS as _DTOKS
     from .textpipe import _gopher_cte
 
     return f"""
-    WITH ibase AS (
-      SELECT doc_id, source, {_DTOKS} AS tk, {_TS0} + doc_id AS ts FROM documents
-    ), isnap AS (
-      SELECT doc_id, source, ts,
-             CASE doc_id % {len(_VARIANTS)} {" ".join(
-                 f"WHEN {i} THEN '{p}' || CAST((doc_id % {_N_ART}) % {_N_HOST} AS VARCHAR)"
-                 f" || '{m}' || CAST(doc_id % {_N_ART} AS VARCHAR) || '{s}'"
-                 for i, (p, m, s) in enumerate(_VARIANTS))} END AS url,
-             replace({_html_sql()}, '</head>', {_meta_sql()} || '</head>') AS page
-      FROM ibase
-    ), icanon AS (
+    WITH {_isnap_sql()}, icanon AS (
       SELECT *, {_CANON_SQL} AS curl FROM isnap
     ), ikept AS (
       SELECT MAX_BY(doc_id, ts) AS doc_id FROM icanon GROUP BY curl
@@ -281,7 +292,7 @@ def _ingest_oracle() -> str:
       SELECT c.doc_id, c.source, c.page FROM icanon c JOIN ikept k USING (doc_id)
     ), irob AS (
       SELECT doc_id, source, page,
-             lower(regexp_extract(page, '{_META_RE_SQL}', 1)) AS robots
+             lower(regexp_extract(page, '{_META_ROBOTS_RE}', 1)) AS robots
       FROM isurv
     ), igate AS (
       SELECT doc_id, source, page,
@@ -331,85 +342,52 @@ def _ingest_snap_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared snapshot fixture of the ingest family: each document
     becomes one fetch snapshot (doc_id-arithmetic URL variant, planted
     robots meta in the synthesized page) with its canonical key."""
-    from ..functions import text as T
-    from .htmlpipe import _html_spark, _meta_sql
+    from .htmlpipe import _planted_pages
 
-    d = _fanout(load_tables(spark, sf_dir)["documents"])
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            T.tokens(F.col("text")).alias("tk"),
-            (F.lit(_TS0) + F.col("doc_id")).alias("ts"),
-        )
-        .withColumn("url", F.expr(_snap_spark_url()))
-        .withColumn("html", _html_spark())
-        .select(
-            "doc_id",
-            "source",
-            "ts",
-            "url",
-            F.expr(f"replace(html, '</head>', {_meta_sql()} || '</head>')").alias("page"),
-        )
-        .withColumn("curl", F.expr(_CANON_SPARK))
+    return _planted_pages(spark, sf_dir).select(
+        "doc_id",
+        "source",
+        (F.lit(_TS0) + F.col("doc_id")).alias("ts"),
+        F.expr(_snap_url("STRING")).alias("url"),
+        "page",
+    ).withColumn("curl", F.expr(_CANON_SPARK))
+
+
+def _ingest_funnel(heads: list) -> DataFrame:
+    """The ingest chain behind its snapshot head stages ``heads`` —
+    (stage name, checkpointed frame) in stage order, the last one feeding
+    URL dedup: latest snapshot per URL → opt-out gate → extraction →
+    Gopher, as the per-stage doc + char census."""
+    surv = latest_per_url(heads[-1][1])
+    compliant = optout_gate(surv).filter(F.col("kept") == 1)
+    exd = extract_text(compliant, "page", "doc_id", "source")
+    exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
+    g = gopher_flags(exd).join(exd.select("doc_id", F.length("text").alias("chars")), "doc_id")
+    n, page_chars, p = F.count(F.lit(1)), F.sum(F.length("page")).cast("bigint"), gopher_pass()
+    zero = F.lit(0).cast("bigint")
+    return stage_census(
+        [(name, df, n, page_chars) for name, df in heads]
+        + [
+            ("url_dedup", surv, n, page_chars),
+            ("optout_gate", compliant, n, page_chars),
+            ("extracted", exd, n, F.sum(F.length("text")).cast("bigint")),
+            (
+                "gopher_rules",
+                g,
+                F.coalesce(F.sum(p).cast("bigint"), zero),
+                F.coalesce(F.sum(p * F.col("chars")).cast("bigint"), zero),
+            ),
+        ],
+        "n_chars",
     )
 
 
 def _ingest_e2e_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.html import block_stats, extract_main
-    from .htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
-    from .htmlpipe import _META_ROBOTS_RE as _META_RE
-    from ..functions.html import _spark_lit
-    from .textpipe import _gopher_flags
-
-    snap = _ingest_snap_df(spark, sf_dir)
     # snap feeds the stage-1 census AND the dedup/gate/extract chain;
     # the synthesis is concat-cheap but the canonicalizer is a regex
     # chain — one checkpoint bounds it to one pass
-    snap = snap.localCheckpoint(eager=True)
-    kept = snap.groupBy("curl").agg(F.expr("max_by(doc_id, ts)").alias("doc_id"))
-    surv = snap.join(kept.select("doc_id"), "doc_id", "left_semi")
-    robots = f"lower(regexp_extract(page, '{_spark_lit(_META_RE)}', 1))"
-    compliant = surv.filter(
-        F.expr(
-            f"NOT (position('noai' IN {robots}) > 0"
-            f" OR position('noindex' IN {robots}) > 0 OR {robots} = 'none')"
-        )
-        & ~F.col("source").isin(*_OPT_SRC)
-    ).select("doc_id", "source", "page")
-    ext = compliant.withColumn("stats", block_stats("page")).select(
-        "doc_id", "source", extract_main("stats").alias("text")
-    )
-    exd = ext.filter(F.length("text") > 0)
-    exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
-    g = _gopher_flags(exd).join(
-        exd.select("doc_id", F.length("text").alias("chars")), "doc_id"
-    )
-    p_all = (
-        F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha") * F.col("p_stop") * F.col("p_rep")
-    )
-    s1 = snap.agg(F.count(F.lit(1)).alias("a1"), F.sum(F.length("page")).cast("bigint").alias("b1"))
-    s2 = surv.agg(F.count(F.lit(1)).alias("a2"), F.sum(F.length("page")).cast("bigint").alias("b2"))
-    s3 = compliant.agg(F.count(F.lit(1)).alias("a3"), F.sum(F.length("page")).cast("bigint").alias("b3"))
-    s4 = exd.agg(F.count(F.lit(1)).alias("a4"), F.sum(F.length("text")).cast("bigint").alias("b4"))
-    s5 = g.agg(
-        F.sum(p_all).cast("bigint").alias("a5"),
-        F.sum(p_all * F.col("chars")).cast("bigint").alias("b5"),
-    )
-    return (
-        s1.crossJoin(s2).crossJoin(s3).crossJoin(s4).crossJoin(s5)
-        .selectExpr(
-            "stack(5,"
-            " CAST(1 AS BIGINT), 'raw_snapshots', CAST(a1 AS BIGINT), b1,"
-            " CAST(2 AS BIGINT), 'url_dedup', CAST(a2 AS BIGINT), b2,"
-            " CAST(3 AS BIGINT), 'optout_gate', CAST(a3 AS BIGINT), b3,"
-            " CAST(4 AS BIGINT), 'extracted', CAST(a4 AS BIGINT), b4,"
-            " CAST(5 AS BIGINT), 'gopher_rules', coalesce(a5, CAST(0 AS BIGINT)),"
-            " coalesce(b5, CAST(0 AS BIGINT))"
-            ") AS (stage, stage_name, n_docs, n_chars)"
-        )
-        .orderBy("stage")
-    )
+    snap = _ingest_snap_df(spark, sf_dir).localCheckpoint(eager=True)
+    return _ingest_funnel([("raw_snapshots", snap)])
 
 
 # --------------------------------------------------------------------------
@@ -530,8 +508,7 @@ def t_robots_txt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash stands; per-stage doc + char mass like every composed funnel.
 def _frontier_oracle() -> str:
     from ..functions.html import sql_block_stats, sql_extract_main
-    from .htmlpipe import _html_sql, _meta_sql, _OPTOUT_IN
-    from .textpipe import _TOKS as _DTOKS
+    from .htmlpipe import _OPTOUT_IN
     from .textpipe import _gopher_cte
 
     robots = _robots_txt_sql(
@@ -539,17 +516,7 @@ def _frontier_oracle() -> str:
         " 'example([0-9]+)', 1) AS BIGINT)"
     )
     return f"""
-    WITH ibase AS (
-      SELECT doc_id, source, {_DTOKS} AS tk, {_TS0} + doc_id AS ts FROM documents
-    ), isnap AS (
-      SELECT doc_id, source, ts,
-             CASE doc_id % {len(_VARIANTS)} {" ".join(
-                 f"WHEN {i} THEN '{p}' || CAST((doc_id % {_N_ART}) % {_N_HOST} AS VARCHAR)"
-                 f" || '{m}' || CAST(doc_id % {_N_ART} AS VARCHAR) || '{s}'"
-                 for i, (p, m, s) in enumerate(_VARIANTS))} END AS url,
-             replace({_html_sql()}, '</head>', {_meta_sql()} || '</head>') AS page
-      FROM ibase
-    ), icanon AS (
+    WITH {_isnap_sql()}, icanon AS (
       SELECT *, {_CANON_SQL} AS curl FROM isnap
     ), irtx AS (
       SELECT *, CASE WHEN len(list_filter(
@@ -565,7 +532,7 @@ def _frontier_oracle() -> str:
       SELECT c.doc_id, c.source, c.page FROM irok c JOIN ikept k USING (doc_id)
     ), irob AS (
       SELECT doc_id, source, page,
-             lower(regexp_extract(page, '{_META_RE_SQL}', 1)) AS robots
+             lower(regexp_extract(page, '{_META_ROBOTS_RE}', 1)) AS robots
       FROM isurv
     ), igate AS (
       SELECT doc_id, source, page,
@@ -615,13 +582,9 @@ def _frontier_oracle() -> str:
 
 
 def _frontier_e2e_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.html import _spark_lit, block_stats, extract_main
-    from .htmlpipe import _META_ROBOTS_RE as _META_RE
-    from .htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
-    from .textpipe import _gopher_flags
+    from ..functions.html import _spark_lit
 
-    snap = _ingest_snap_df(spark, sf_dir)
-    snap = snap.localCheckpoint(eager=True)
+    snap = _ingest_snap_df(spark, sf_dir).localCheckpoint(eager=True)
     robots = _robots_txt_sql(
         "CAST(regexp_extract(regexp_extract(curl, '://([^/]+)', 1),"
         " 'example([0-9]+)', 1) AS BIGINT)"
@@ -634,51 +597,7 @@ def _frontier_e2e_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     rok = rok.localCheckpoint(eager=True)  # census + dedup chain
-    kept = rok.groupBy("curl").agg(F.expr("max_by(doc_id, ts)").alias("doc_id"))
-    surv = rok.join(kept.select("doc_id"), "doc_id", "left_semi")
-    meta = f"lower(regexp_extract(page, '{_spark_lit(_META_RE)}', 1))"
-    compliant = surv.filter(
-        F.expr(
-            f"NOT (position('noai' IN {meta}) > 0"
-            f" OR position('noindex' IN {meta}) > 0 OR {meta} = 'none')"
-        )
-        & ~F.col("source").isin(*_OPT_SRC)
-    ).select("doc_id", "source", "page")
-    ext = compliant.withColumn("stats", block_stats("page")).select(
-        "doc_id", "source", extract_main("stats").alias("text")
-    )
-    exd = ext.filter(F.length("text") > 0)
-    exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
-    g = _gopher_flags(exd).join(
-        exd.select("doc_id", F.length("text").alias("chars")), "doc_id"
-    )
-    p_all = (
-        F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha") * F.col("p_stop") * F.col("p_rep")
-    )
-    s1 = snap.agg(F.count(F.lit(1)).alias("a1"), F.sum(F.length("page")).cast("bigint").alias("b1"))
-    s2 = rok.agg(F.count(F.lit(1)).alias("a2"), F.sum(F.length("page")).cast("bigint").alias("b2"))
-    s3 = surv.agg(F.count(F.lit(1)).alias("a3"), F.sum(F.length("page")).cast("bigint").alias("b3"))
-    s4 = compliant.agg(F.count(F.lit(1)).alias("a4"), F.sum(F.length("page")).cast("bigint").alias("b4"))
-    s5 = exd.agg(F.count(F.lit(1)).alias("a5"), F.sum(F.length("text")).cast("bigint").alias("b5"))
-    s6 = g.agg(
-        F.sum(p_all).cast("bigint").alias("a6"),
-        F.sum(p_all * F.col("chars")).cast("bigint").alias("b6"),
-    )
-    return (
-        s1.crossJoin(s2).crossJoin(s3).crossJoin(s4).crossJoin(s5).crossJoin(s6)
-        .selectExpr(
-            "stack(6,"
-            " CAST(1 AS BIGINT), 'raw_snapshots', CAST(a1 AS BIGINT), b1,"
-            " CAST(2 AS BIGINT), 'robots_allowed', CAST(a2 AS BIGINT), b2,"
-            " CAST(3 AS BIGINT), 'url_dedup', CAST(a3 AS BIGINT), b3,"
-            " CAST(4 AS BIGINT), 'optout_gate', CAST(a4 AS BIGINT), b4,"
-            " CAST(5 AS BIGINT), 'extracted', CAST(a5 AS BIGINT), b5,"
-            " CAST(6 AS BIGINT), 'gopher_rules', coalesce(a6, CAST(0 AS BIGINT)),"
-            " coalesce(b6, CAST(0 AS BIGINT))"
-            ") AS (stage, stage_name, n_docs, n_chars)"
-        )
-        .orderBy("stage")
-    )
+    return _ingest_funnel([("raw_snapshots", snap), ("robots_allowed", rok)])
 
 
 # --------------------------------------------------------------------------
@@ -1365,22 +1284,11 @@ _HOST_RE = "://([^/]+)"
 
 def _host_yield_oracle() -> str:
     from ..functions.html import sql_block_stats, sql_extract_main
-    from .htmlpipe import _html_sql, _meta_sql, _OPTOUT_IN
-    from .textpipe import _TOKS as _DTOKS
+    from .htmlpipe import _OPTOUT_IN
     from .textpipe import _gopher_cte
 
     return f"""
-    WITH ibase AS (
-      SELECT doc_id, source, {_DTOKS} AS tk, {_TS0} + doc_id AS ts FROM documents
-    ), isnap AS (
-      SELECT doc_id, source, ts,
-             CASE doc_id % {len(_VARIANTS)} {" ".join(
-                 f"WHEN {i} THEN '{p}' || CAST((doc_id % {_N_ART}) % {_N_HOST} AS VARCHAR)"
-                 f" || '{m}' || CAST(doc_id % {_N_ART} AS VARCHAR) || '{s}'"
-                 for i, (p, m, s) in enumerate(_VARIANTS))} END AS url,
-             replace({_html_sql()}, '</head>', {_meta_sql()} || '</head>') AS page
-      FROM ibase
-    ), icanon AS (
+    WITH {_isnap_sql()}, icanon AS (
       SELECT *, {_CANON_SQL} AS curl,
              regexp_extract({_CANON_SQL}, '{_HOST_RE}', 1) AS host
       FROM isnap
@@ -1396,7 +1304,7 @@ def _host_yield_oracle() -> str:
                     OR source IN ({_OPTOUT_IN})
                   THEN 0 ELSE 1 END AS kept
       FROM (
-        SELECT *, lower(regexp_extract(page, '{_META_RE_SQL}', 1)) AS robots
+        SELECT *, lower(regexp_extract(page, '{_META_ROBOTS_RE}', 1)) AS robots
         FROM isurv
       )
     ), iexd AS (
@@ -1436,43 +1344,15 @@ def _host_yield_oracle() -> str:
 
 
 def _host_yield_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.html import _spark_lit, block_stats, extract_main
-    from .htmlpipe import _META_ROBOTS_RE as _META_RE
-    from .htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
-    from .textpipe import _gopher_flags
-
     snap = _ingest_snap_df(spark, sf_dir).withColumn(
         "host", F.regexp_extract("curl", _HOST_RE, 1)
     )
     snap = snap.localCheckpoint(eager=True)  # synthesis feeds 3 consumers
-    kept_ids = snap.groupBy("curl").agg(F.expr("max_by(doc_id, ts)").alias("doc_id"))
-    surv = snap.join(kept_ids.select("doc_id"), "doc_id", "left_semi")
-    robots = f"lower(regexp_extract(page, '{_spark_lit(_META_RE)}', 1))"
-    gate = surv.withColumn(
-        "kept",
-        (
-            F.expr(
-                f"NOT (position('noai' IN {robots}) > 0"
-                f" OR position('noindex' IN {robots}) > 0 OR {robots} = 'none')"
-            )
-            & ~F.col("source").isin(*_OPT_SRC)
-        ).cast("int"),
-    ).select("doc_id", "source", "page", "host", "kept")
+    gate = optout_gate(latest_per_url(snap)).select("doc_id", "source", "page", "host", "kept")
     gate = gate.localCheckpoint(eager=True)  # extraction + host census
-    exd = (
-        gate.filter("kept = 1")
-        .withColumn("stats", block_stats("page"))
-        .select("doc_id", "source", extract_main("stats").alias("text"))
-        .filter(F.length("text") > 0)
-    )
+    exd = extract_text(gate.filter("kept = 1"), "page", "doc_id", "source")
     exd = exd.localCheckpoint(eager=True)  # gopher multi-consumes text
-    gf = _gopher_flags(exd).select(
-        "doc_id",
-        (
-            F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha")
-            * F.col("p_stop") * F.col("p_rep")
-        ).alias("p"),
-    )
+    gf = gopher_flags(exd).select("doc_id", gopher_pass().alias("p"))
     sflags = (
         gate.select("doc_id", "host", "kept")
         .join(exd.select("doc_id", F.length("text").alias("chars")), "doc_id", "left")
@@ -1515,11 +1395,6 @@ def _host_yield_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_ingest():
-    from ..functions.html import _spark_lit  # noqa: F401
-    from .htmlpipe import _META_ROBOTS_RE
-
-    global _META_RE_SQL
-    _META_RE_SQL = _META_ROBOTS_RE
     register(
         QuerySpec(
             name="t_ingest_e2e",
@@ -1647,5 +1522,4 @@ def _register_ingest():
     )
 
 
-_META_RE_SQL = ""
 _register_ingest()

@@ -17,6 +17,18 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at most 16g. In local mode the
+    driver heap holds every executor; a heap sized past the host's RAM
+    grows until the kernel OOM-kills the JVM once another process needs
+    memory. ``$SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{max(1024, min(16 * 1024, phys // 2 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "daxos_spark",
     master: str | None = None,
@@ -46,7 +58,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _DEFAULT_CPUS))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

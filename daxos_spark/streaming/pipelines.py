@@ -1034,39 +1034,16 @@ def ingest_stream_e2e(
     (curl, verdict, text, gopher_pass) — the stream of corpus
     candidates; every stage is its batch query's exact machinery.
     """
-    from ..functions.html import _spark_lit, block_stats, extract_main
-    from ..plans.htmlpipe import _META_ROBOTS_RE as _META_RE
-    from ..plans.htmlpipe import _OPTOUT_SOURCES as _OPT_SRC
-    from ..plans.textpipe import _gopher_flags
+    from ..operators.refinery import extract_text, gopher_flags, gopher_pass, optout_gate
 
     admitted = ingest_delta_stream(pages, index_latest, url_col, ts_col)
-    robots = f"lower(regexp_extract({page_col}, '{_spark_lit(_META_RE)}', 1))"
-    compliant = admitted.filter(
-        F.expr(
-            f"NOT (position('noai' IN {robots}) > 0"
-            f" OR position('noindex' IN {robots}) > 0 OR {robots} = 'none')"
-        )
-        & ~F.col("source").isin(*_OPT_SRC)
-    )
-    ext = (
-        compliant.withColumn("__stats", block_stats(page_col))
-        .withColumn("text", extract_main("__stats"))
-        .drop("__stats", page_col)
-        .filter(F.length("text") > 0)
-    )
+    compliant = optout_gate(admitted, page_col).filter(F.col("kept") == 1)
+    ext = extract_text(compliant, page_col, "doc_id", "source", "curl", "verdict")
     # NOT a self-join back onto ext (that would be a stream-stream join
     # needing watermark state) — the flag projection carries the
-    # passthrough columns itself via _gopher_flags(keep=...)
-    return _gopher_flags(ext, keep=("curl", "verdict", "text")).select(
-        "doc_id",
-        "source",
-        "curl",
-        "verdict",
-        "text",
-        (
-            F.col("p_wc") * F.col("p_mwl") * F.col("p_alpha")
-            * F.col("p_stop") * F.col("p_rep")
-        ).alias("gopher_pass"),
+    # passthrough columns itself via gopher_flags(keep=...)
+    return gopher_flags(ext, keep=("curl", "verdict", "text")).select(
+        "doc_id", "source", "curl", "verdict", "text", gopher_pass().alias("gopher_pass")
     )
 
 

@@ -122,3 +122,10 @@ def test_cli_train(spark, plink_raw_path, covars_path, tmp_path):
     preds = spark.read.option("header", True).csv(f"{prefix}_ypred.csv")
     assert preds.count() == pre.n_test
     assert set(preds.columns) == {"IID", "y_true", "y_pred", "y_pred_platt_scaled"}
+
+    # predict runs on train's own artifacts: the refit model + its used columns
+    used = pd.read_csv(f"{prefix}_used_cols.csv")
+    assert 0 < len(used)
+    _run(spark, ["predict", "--input", pre.test_gold, "--model", f"{prefix}/model",
+                 "--used-cols", f"{prefix}_used_cols.csv", "--out-prefix", f"{prefix}_p"])
+    assert spark.read.option("header", True).csv(f"{prefix}_p_ypred.csv").count() == pre.n_test

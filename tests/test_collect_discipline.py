@@ -57,7 +57,6 @@ ALLOWED: dict[str, tuple[int, str]] = {
     ),
     "ml/deconfound.py:label_betas": (1, "1-row gramian aggregate"),
     "ml/deconfound.py:standardize_covars": (1, "1-row mean/std aggregate"),
-    "ml/scale.py:fit_platt_relational": (1, "1-row (a,b) Platt coefficients"),
     "ml/explain.py:used_features": (1, "p-length column name list"),
     "ml/explain.py:permutation_importance": (1, "p-length position list"),
     "ml/train.py:_xgb_continue": (

@@ -75,36 +75,3 @@ def test_calibration_identity_holds(spark):
         .collect()[0]
     )
     assert abs(out["mean_cal"] - pdf.k.sum() / pdf.n.sum()) < 1e-12
-
-
-def test_relational_platt_matches_mllib(spark):
-    """fit_platt_relational must agree with the MLlib LBFGS fit
-    (regParam=0, standardization=False) to optimizer tolerance — both
-    solve the same unpenalized logistic MLE (reference scale.py:8-30)."""
-    import pandas as pd
-
-    from daxos_spark.ml.scale import (
-        apply_platt_relational,
-        fit_platt,
-        fit_platt_relational,
-    )
-
-    rows = []
-    for i in range(400):
-        score = (i % 20) / 20.0
-        label = 1.0 if ((i * 7 + 3) % 19) / 19.0 < 0.2 + 0.6 * score else 0.0
-        rows.append({"y_pred": score, "label": label})
-    oof = spark.createDataFrame(pd.DataFrame(rows))
-
-    coef, intercept = fit_platt_relational(oof)
-    m = fit_platt(oof)
-    assert abs(coef - float(m.coefficients[0])) < 1e-4
-    assert abs(intercept - float(m.intercept)) < 1e-4
-
-    out = apply_platt_relational(oof, coef, intercept).collect()
-    # calibrated mean equals base rate at the MLE
-    import numpy as np
-
-    cal = np.mean([r["y_pred_platt_scaled"] for r in out])
-    base = np.mean([r["label"] for r in out])
-    assert abs(cal - base) < 1e-9

@@ -167,7 +167,8 @@ def test_optout_gate_planted_semantics(spark, tmp_path):
     """The robots/opt-out verdicts on a planted corpus: doc_ids
     divisible by 13 carry noai, by 17 noindex (13 wins on both), and
     the per-source opt-out list drops its sources regardless of meta."""
-    from daxos_spark.plans.htmlpipe import _OPTOUT_SOURCES, _optout_verdicts_spark
+    from daxos_spark.operators.refinery import _OPTOUT_SOURCES
+    from daxos_spark.plans.htmlpipe import _optout_verdicts_spark
 
     rows = [
         (0, "src0", "zero is divisible by everything and takes noai"),
@@ -188,6 +189,48 @@ def test_optout_gate_planted_semantics(spark, tmp_path):
     assert got[21] == (0, 0, 0, 1)  # no meta, clean source -> kept
     assert got[25] == (0, 0, 1, 0)  # source opt-out alone drops
     assert got[221] == (1, 0, 1, 0)  # 221 = 13*17: noai arm + source
+
+
+def test_optout_gate_handcrafted_pages(spark):
+    """The opt-out gate columns on handcrafted page bytes the planted
+    fixture never produces (case, multi-directive content, the exact
+    'none' test, other bots' meta tags), row by row against a plain-
+    Python restatement of the rule and against the hand-derived
+    verdict (meta_noai, meta_noindex, src_optout, kept)."""
+    import re
+
+    from daxos_spark.operators.refinery import _META_ROBOTS_RE, _OPTOUT_SOURCES, optout_gate
+
+    head = "<html><head><title>t</title>{}</head><body><p>some text</p></body></html>"
+    cases = [
+        ('<meta name="robots" content="NoAI">', "src0", (1, 0, 0, 0)),
+        ('<META NAME="ROBOTS" CONTENT="NOINDEX">', "src0", (0, 1, 0, 0)),
+        ('<meta name="robots" content="noindex, follow">', "src0", (0, 1, 0, 0)),
+        ('<meta name="robots" content="none">', "src0", (0, 1, 0, 0)),
+        ('<meta name="robots" content="nonesuch">', "src0", (0, 0, 0, 1)),
+        ('<meta name="googlebot" content="noindex">', "src0", (0, 0, 0, 1)),
+        ("", "src0", (0, 0, 0, 1)),
+        ("", _OPTOUT_SOURCES[0], (0, 0, 1, 0)),
+    ]
+    df = spark.createDataFrame(
+        [(i, src, head.format(meta)) for i, (meta, src, _) in enumerate(cases)],
+        "doc_id long, source string, page string",
+    )
+    got = {
+        r["doc_id"]: (r["meta_noai"], r["meta_noindex"], r["src_optout"], r["kept"])
+        for r in optout_gate(df).collect()
+    }
+
+    def rule(page, source):
+        m = re.search(_META_ROBOTS_RE, page)
+        robots = (m.group(1) if m else "").lower()
+        noai = int("noai" in robots)
+        noindex = int("noindex" in robots or robots == "none")
+        optout = int(source in _OPTOUT_SOURCES)
+        return noai, noindex, optout, int(noai == noindex == optout == 0)
+
+    for i, (meta, src, want) in enumerate(cases):
+        assert got[i] == rule(head.format(meta), src) == want, (meta, src, got[i])
 
 
 def test_url_ingest_stream_matches_batch(spark, tmp_path):

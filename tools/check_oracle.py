@@ -57,6 +57,13 @@ def frame_digest(df: pd.DataFrame) -> tuple[int, list[str], str]:
     return len(rows), cols, h.hexdigest()[:16]
 
 
+def _jvm_alive(spark) -> bool:
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:
+        return False
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     vanilla = "--vanilla" in args
@@ -109,21 +116,31 @@ def main() -> int:
 
     n_pass = n_fail = n_rowsonly = 0
     t_all = time.time()
-    for name, fn in sorted(qs.items()):
-        if only and name not in only:
-            continue
+    names = [n for n in sorted(qs) if not only or n in only]
+    for i, name in enumerate(names):
         t0 = time.time()
+        sdf = None
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = qs[name](spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
-            continue
-        finally:
+        try:
             # queries persist() intermediates for their own jobs; the
             # harness clears between queries so leaked caches don't
             # accumulate across the 193-query gate (see bench.py)
             spark.catalog.clearCache()
+        except Exception:
+            pass
+        if not _jvm_alive(spark):
+            # a dead JVM (e.g. OOM-killed) fails every later query the
+            # same way: count them, and still print the summary
+            for rest in names[i + 1 :]:
+                print(f"FAIL {rest}: Spark session is gone")
+            n_fail += len(names) - i - 1
+            break
+        if sdf is None:
+            continue
         dt = time.time() - t0
         if name not in oracles:
             print(f"rows {name}: {len(sdf)} rows ({dt:.1f}s) [rows-only]")

@@ -78,7 +78,7 @@ def main() -> int:
     sum_a = stage_summary(verdicts_a)
     # materialize lane B's input FROM THE SAME checkpointed extraction
     # frame (the staged deployment writes exactly what its extract job
-    # produced); empty extractions are dropped — they are not documents
+    # produced; empty extractions are already dropped from it)
     import shutil
 
     # per-corpus dir, recreated from scratch: stale symlinks from a
@@ -93,7 +93,7 @@ def main() -> int:
         os.symlink(
             os.path.join(sf_dir, f"{t}.parquet"), os.path.join(mat_dir, f"{t}.parquet")
         )
-    ext.filter(F.length("text") > 0).select(
+    ext.select(
         "doc_id", "text", "lang", "source", F.length("text").alias("n_chars")
     ).write.mode("overwrite").parquet(os.path.join(mat_dir, "documents.parquet"))
     for c in caches:
