@@ -64,20 +64,33 @@ def md5_long_lane2(c: Column, seed: int | None = None) -> Column:
 def word_shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column → array<string>.
 
-    Built from sequence/transform/slice — pure Catalyst, no UDF.
+    Tokens are ``split(trim(text), '\\s+')`` (``trim`` strips spaces only,
+    so a leading/trailing tab, newline, ... leaves an empty token); each
+    shingle is n consecutive tokens joined by one space, in order of
+    first occurrence; a text of fewer than n tokens is one shingle of
+    all of them, and a NULL text gives ``[NULL]``.
+
+    One codegen'd regex pass instead of a ``transform`` lambda (which
+    Spark interprets per row): tokens hold no space, so on the
+    space-joined tokens every shingle is the capture of a lookahead of
+    n space-separated runs anchored at the start or right after a space.
+    The lookbehind must be the positive ``(?<= )``: a negative
+    ``(?<![^ ])`` also matches between the two halves of a surrogate
+    pair, where the finder lands after an empty match.
     """
     toks = F.split(F.trim(text), r"\s+")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
+    joined = F.array_join(toks, " ")
+    grams = F.regexp_extract_all(
+        joined, F.lit("(?:^|(?<= ))(?=([^ ]*" + " [^ ]*" * (n - 1) + "))"), F.lit(1)
+    )
     return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
+        F.when(F.size(toks) >= n, grams).otherwise(F.array(joined))
     )
 
 
 def char_shingles(text: Column, n: int = 5) -> Column:
     """Distinct character n-gram shingles → array<string>."""
+    # the interpreted transform lambda stays: no lane on the near-dup path uses it
     k = F.greatest(F.length(text) - F.lit(n - 1), F.lit(1))
     return F.array_distinct(
         F.transform(F.sequence(F.lit(1), k), lambda i: F.substring(text, i, n))
@@ -96,7 +109,16 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
     min over shingles of md5_long(shingle, seed) — classic permutation
     approximation (Broder '97). Fully distributed: per-row array ops.
     """
+    # interpreted lambdas, kept for signature-array outputs; streams use minhash_mins
     return F.array(*[_min_hash(shingles, i) for i in range(num_hashes)])
+
+
+def minhash_mins(shingle: Column, num_hashes: int = 8) -> list[Column]:
+    """The MinHash signature of a (doc, shingle) stream as aggregate
+    columns ``m0..m{num_hashes-1}`` for a doc-keyed ``agg``: the values
+    ``minhash_signature`` gives over each doc's shingle array, computed
+    per row in generated code instead of by a lambda over the array."""
+    return [F.min(md5_long(shingle, seed=i)).alias(f"m{i}") for i in range(num_hashes)]
 
 
 def _bit_votes(hashes: Column, b: int) -> Column:

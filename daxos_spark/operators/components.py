@@ -36,8 +36,13 @@ def connected_components(
     # rewriteConstraints "key not found" internal error under the new
     # bucket-generated pair plans. Same fault-tolerance note as the
     # in-loop checkpoints below.
-    # lazy: the sizing count below is the materializing action (§2.6
-    # job fusion, round 12 — one job instead of checkpoint + count)
+    # eager=False does not defer the caller's work: under AQE,
+    # localCheckpoint builds its RDD from the final adaptive plan, so
+    # every upstream shuffle stage runs at this call — for a lazy edge
+    # frame, the whole edge build (neardup benchmark, seed 101, 4 vCPU:
+    # 27 jobs, 13.7 s here, against 0.3-0.4 s for the sizing count
+    # below). eager=False only saves the separate job an eager
+    # checkpoint spends filling its blocks; the count fills them.
     both = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     ).distinct().localCheckpoint(eager=False)
@@ -52,7 +57,8 @@ def connected_components(
     n_edges = both.count()
     parts = max(1, min(both.rdd.getNumPartitions(), n_edges // 100_000 + 1))
     if parts < both.rdd.getNumPartitions():
-        # lazy: materialized by the initial label-sum job below
+        # the repartition's shuffle runs at this call (AQE, as above);
+        # the initial label-sum job below fills the checkpoint
         both = both.repartition(parts, "u").localCheckpoint(eager=False)
     labels = (
         both.select(F.col("u").alias("node")).distinct().withColumn("lab", F.col("node"))
@@ -113,9 +119,10 @@ def connected_components(
         # rounds on sf0.1's chain-shaped near-dup components. y.lab
         # <= x.lab always (labels are monotone-decreasing node ids),
         # so the jump never regresses.
-        # LAZY checkpoint (§2.6 job fusion, round 12): the convergence
-        # label-sum collect right below is the materializing action, so
-        # each round is ONE job (was two: eager checkpoint + sum).
+        # eager=False (§2.6 job fusion, round 12): the round's shuffle
+        # stages still run at this call (AQE, as above), but the
+        # label-sum collect right below fills the checkpoint, saving
+        # the job an eager checkpoint would add per round.
         new_labels = (
             propagated.alias("x")
             .join(

@@ -21,9 +21,9 @@ from pyspark.sql.window import Window
 from ..catalog import load_tables
 from ..functions import text as T
 from ..functions.hashing import (
-    _min_hash,
     md5_long,
     md5_long_sql,
+    minhash_mins,
     minhash_signature,
     simhash32,
     word_shingles,
@@ -489,28 +489,20 @@ def d_lsh_candidates(
     sh = cap_hot_keys(sh0, BUCKET_CAP)
     # ONE doc-keyed aggregate serves FOUR former consumers of the
     # shingle stream (optimization round 11, guide §2.3/§2.4): the
-    # signatures (map-side HOF min over the array — same 8 md5
-    # evaluations per shingle the old 8-way min aggregate paid, minus
-    # its exchange), the sizes (map-side size()), and both sides of the
+    # signatures (min over the doc's rows — the same 8 md5 evaluations
+    # per shingle, codegen'd instead of lambdas over the collected
+    # array), the sizes (map-side size()), and both sides of the
     # candidate verification (map-side array_intersect over the
     # doc-dim rejoin, replacing the x⋈y shingle equi-join that
     # re-exchanged the full stream twice plus a (da,db) count
     # aggregate). Arrays are per-doc and bounded by doc length — the
     # same bound sorted_tk carries in d_prefix_filter_jaccard. No sort:
-    # only array_min / size / intersect-size consume it, all
-    # order-invariant, so the values are unchanged.
-    arr = sh.groupBy("doc_id").agg(F.collect_list("s").alias("tk"))
-    arr = arr.persist()
-    # seed binding: _min_hash wraps the seed in a one-arg closure. A
-    # two-arg lambda (even with a defaulted second parameter) is treated
-    # by pyspark as (element, index) — the seed would silently bind to
-    # the array-index Column and the 8 lanes would not be the seeded
-    # md5 family the oracle computes (round-12 correctness fix).
-    sig = arr.select(
-        "doc_id",
-        *[_min_hash(F.col("tk"), i).alias(f"m{i}") for i in range(_N_HASH)],
+    # only size / intersect-size consume it, both order-invariant.
+    arr = sh.groupBy("doc_id").agg(
+        F.collect_list("s").alias("tk"), *minhash_mins(F.col("s"), _N_HASH)
     )
-    buckets = _lsh_band_buckets(sig)
+    arr = arr.persist()
+    buckets = _lsh_band_buckets(arr)
     # fused lane: window cap + in-place enumeration (operators/neardup.py).
     # Doc ids are unique within a (band, bkt) group (one bucket per doc
     # per band), so the i<j stream is exactly the band self-join's pairs.
@@ -677,14 +669,15 @@ def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
     join keys on BOTH independent 56-bit lanes of one md5 digest
     (112 bits total), pushing the birthday-collision bound from ~2^28
     to past 2^50 distinct shingles. The digest is computed ONCE per
-    shingle (explode the hex, derive both lanes from the exploded
-    column — codegen does not CSE md5 across sibling expressions, the
+    shingle (the hex in its own projection, both lanes derived from
+    it — codegen does not CSE md5 across sibling expressions, the
     q_poisson_bootstrap lesson) for one extra long per row. At test
     cardinalities both configurations produce identical pair sets, so
     the gated two-lane query shares the single-lane raw-string oracle
     (t_dedup_clusters_lane2)."""
-    # shingles are hashed to 56-bit ids INSIDE the explode select (one
-    # projection): the persisted stream carries (int, small-str, long)
+    # shingles are hashed to 56-bit ids in the projection right after
+    # the explode (a transform lambda over the array would run
+    # interpreted per row): the persisted stream carries (int, small-str, long)
     # instead of a 20-40 B shingle string — ~half the cache bytes, and
     # every downstream shuffle/sort compares fixed-width longs instead
     # of strings (round-6 profile: the edge build dominated
@@ -693,33 +686,20 @@ def _jaccard_edge_pairs(d: DataFrame, two_lane: bool = False):
     # md5_long is collision-free at these cardinalities (56-bit over
     # ~2e5 distinct shingles; the duckdb oracle keeps joining the raw
     # strings, so the hash gate would expose any collision).
+    grams = d.select(
+        "doc_id",
+        "source",
+        F.explode(word_shingles(F.lower(F.trim(F.col("text"))), 3)).alias("g"),
+    )
     if two_lane:
-        sh0 = d.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.transform(
-                    word_shingles(F.lower(F.trim(F.col("text"))), 3),
-                    lambda s: F.md5(s),
-                )
-            ).alias("h"),
-        ).select(
+        sh0 = grams.select("doc_id", "source", F.md5("g").alias("h")).select(
             "doc_id",
             "source",
             F.conv(F.substring("h", 1, 14), 16, 10).cast("bigint").alias("s"),
             F.conv(F.substring("h", 15, 14), 16, 10).cast("bigint").alias("s2"),
         )
     else:
-        sh0 = d.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.transform(
-                    word_shingles(F.lower(F.trim(F.col("text"))), 3),
-                    lambda s: md5_long(s),
-                )
-            ).alias("s"),
-        )
+        sh0 = grams.select("doc_id", "source", md5_long(F.col("g")).alias("s"))
     overlap, caches = shingle_overlap(sh0, ("s", "s2") if two_lane else ("s",))
     return overlap.filter(F.col("j") >= _JACC_THR).select("da", "db"), caches
 

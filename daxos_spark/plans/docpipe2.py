@@ -1006,7 +1006,7 @@ def _cap_census_oracle() -> str:
     "production dedup run co-schedules this to raise",
 )
 def t_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import md5_long, simhash56_sql, simhash_bands, word_shingles
+    from ..functions.hashing import minhash_mins, simhash56_sql, simhash_bands, word_shingles
     from ..functions import text as T
     from .docpipe import _N_HASH, _lsh_band_buckets
 
@@ -1020,9 +1020,7 @@ def t_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DF-capped shingle stream (the census must audit what runs, not a
     # variant of it)
     sh = cap_hot_keys(sh0, BUCKET_CAP)
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(md5_long(F.col("s"), seed=i)).alias(f"m{i}") for i in range(_N_HASH)]
-    )
+    sig = sh.groupBy("doc_id").agg(*minhash_mins(F.col("s"), _N_HASH))
     bkc = (
         _lsh_band_buckets(sig)
         .groupBy("band", "bkt")

@@ -681,7 +681,7 @@ def t_optout_refinery(spark: SparkSession, sf_dir: str) -> DataFrame:
         [
             ("raw_html", v, n, page_chars),
             ("optout_gate", ka, n, page_chars),
-            ("extracted", kx, n, F.sum(F.length("text")).cast("bigint")),
+            ("extracted", kx, n, F.coalesce(F.sum(F.length("text")).cast("bigint"), zero)),
             (
                 "gopher_rules",
                 g,

@@ -370,7 +370,7 @@ def _ingest_funnel(heads: list) -> DataFrame:
         + [
             ("url_dedup", surv, n, page_chars),
             ("optout_gate", compliant, n, page_chars),
-            ("extracted", exd, n, F.sum(F.length("text")).cast("bigint")),
+            ("extracted", exd, n, F.coalesce(F.sum(F.length("text")).cast("bigint"), zero)),
             (
                 "gopher_rules",
                 g,

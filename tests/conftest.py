@@ -27,7 +27,8 @@ def spark():
 def mini_sf_dir(spark, tmp_path, docs_rows, base_dir):
     """A tmp sf_dir whose documents table is the given (doc_id, source,
     text) rows and whose other tables are symlinks into ``base_dir``
-    (load_tables opens all)."""
+    (load_tables opens a table on its first lookup, but a query or its
+    oracle may read any of them)."""
     import pandas as pd
     import pyspark.sql.functions as F
 

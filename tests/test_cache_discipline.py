@@ -6,8 +6,9 @@ with the reason), or release them itself by checkpointing its output
 (registry.checkpoint_release). A new query that leaks a persist() fails
 here before it ever reaches a review. Caching queries have one
 lifecycle, so plan_audit audits the same callable production runs; the
-runtime test below checks that it still sees the pipeline behind the
-final checkpoint."""
+runtime tests below check that it still sees the pipeline behind the
+final checkpoint, and that tools/dump_plan.py --normalize makes two
+dumps of one query comparable."""
 
 from __future__ import annotations
 
@@ -77,8 +78,43 @@ def test_plan_audit_sees_past_the_final_checkpoint(spark):
     spark.catalog.clearCache()
     assert "Scan ExistingRDD" in plans[-1]
     seen = "\n".join(plans[:-1])
-    assert re.search(r"Generate explode\(transform\(array_distinct", seen)
+    assert re.search(r"Generate explode\(array_distinct\(CASE WHEN", seen)
     assert re.search(
         r"HashAggregate\(keys=\[source#\d+, s#\d+L\], functions=\[collect_list", seen
     )
     assert audit_plan("\n".join(plans), "t_dedup_best_keep") == []
+
+
+def test_normalized_dumps_ignore_earlier_queries(spark):
+    """Dumps of one query made after different earlier work in the same
+    process differ in expression ids, lambda-variable numbers and the
+    group order of distinct-aggregate Expand nodes, and normalize to one
+    text. d_minhash_signatures has lambdas; t_html_dedup_recovery has a
+    distinct-aggregate Expand, whose group order follows expression ids,
+    so its dumps are repeated until two orders have been seen."""
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, str(ROOT / "tools"))
+    from dump_plan import dump, normalize
+
+    first = dump(spark, "d_minhash_signatures", SF_DIR)
+    spark.catalog.clearCache()
+    dump(spark, "t_minhash_accuracy", SF_DIR)
+    spark.catalog.clearCache()
+    second = dump(spark, "d_minhash_signatures", SF_DIR)
+    assert re.search(r"lambda x_\d+", first) and first != second
+    assert normalize(first) == normalize(second)
+    assert "lambda x_1#" in normalize(first)
+
+    def expand_args(plan):
+        return [l for l in re.sub(r"#\d+", "#", plan).splitlines() if l.startswith("Arguments: [[")]
+
+    dumps = []
+    for k in range(16):
+        spark.range(1).select(*[F.lit(i).alias(f"c{i}") for i in range(k + 1)]).columns
+        dumps.append(dump(spark, "t_html_dedup_recovery", SF_DIR))
+        spark.catalog.clearCache()
+        if len({tuple(expand_args(d)) for d in dumps}) > 1:
+            break
+    assert len({tuple(expand_args(d)) for d in dumps}) > 1
+    assert len({normalize(d) for d in dumps}) == 1

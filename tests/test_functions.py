@@ -13,6 +13,7 @@ from daxos_spark.functions.hashing import (
     md5_long,
     md5_long_lane2,
     md5_long_sql,
+    minhash_mins,
     minhash_signature,
     simhash32,
     word_shingles,
@@ -62,6 +63,138 @@ def test_shingles(spark):
     ch = df.select(char_shingles(F.col("s"), 5).alias("sh")).collect()
     assert ch[1]["sh"] == ["x y"]
     assert len(ch[0]["sh"]) == 5
+
+
+def _hof_word_shingles(text, n):
+    """The interpreted form word_shingles replaced (sequence/transform/
+    slice): the reference its regex kernel must equal exactly."""
+    toks = F.split(F.trim(text), r"\s+")
+    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), k), lambda i: F.array_join(F.slice(toks, i, n), " ")
+        )
+    )
+
+
+# (text, {n: expected}) — Java's \s is [ \t\n\x0B\f\r]; trim strips
+# spaces only, so a leading/trailing tab leaves an empty token; NBSP and
+# U+2003 are not separators; emoji are surrogate pairs in Java strings.
+_EMOJI = "\U0001F600"
+_FRAK = "\U0001D518"
+_SHINGLE_CASES = [
+    ("a b c a b", {2: ["a b", "b c", "c a"], 3: ["a b c", "b c a", "c a b"],
+                   4: ["a b c a", "b c a b"], 5: ["a b c a b"]}),
+    ("\ta\n\nb\x0bc\x0c\rd ", {2: [" a", "a b", "b c", "c d"], 3: [" a b", "a b c", "b c d"],
+                               4: [" a b c", "a b c d"], 5: [" a b c d"]}),
+    ("a b\t", {2: ["a b", "b "], 3: ["a b "], 4: ["a b "], 5: ["a b "]}),
+    ("  a\tb  ", {n: ["a b"] for n in (2, 3, 4, 5)}),
+    ("x\u00a0y\u2003z w", {n: ["x\u00a0y\u2003z w"] for n in (2, 3, 4, 5)}),
+    (f"{_EMOJI} {_FRAK} {_EMOJI} {_FRAK} {_EMOJI}",
+     {2: [f"{_EMOJI} {_FRAK}", f"{_FRAK} {_EMOJI}"],
+      3: [f"{_EMOJI} {_FRAK} {_EMOJI}", f"{_FRAK} {_EMOJI} {_FRAK}"],
+      4: [f"{_EMOJI} {_FRAK} {_EMOJI} {_FRAK}", f"{_FRAK} {_EMOJI} {_FRAK} {_EMOJI}"],
+      5: [f"{_EMOJI} {_FRAK} {_EMOJI} {_FRAK} {_EMOJI}"]}),
+    (f"{_EMOJI}{_EMOJI} x {_EMOJI}",
+     {2: [f"{_EMOJI}{_EMOJI} x", f"x {_EMOJI}"], 3: [f"{_EMOJI}{_EMOJI} x {_EMOJI}"],
+      4: [f"{_EMOJI}{_EMOJI} x {_EMOJI}"], 5: [f"{_EMOJI}{_EMOJI} x {_EMOJI}"]}),
+    ("\t", {n: [" "] for n in (2, 3, 4, 5)}),
+    ("", {n: [""] for n in (2, 3, 4, 5)}),
+    (None, {n: [None] for n in (2, 3, 4, 5)}),
+    ("solo", {n: ["solo"] for n in (2, 3, 4, 5)}),
+    ("two words", {n: ["two words"] for n in (2, 3, 4, 5)}),
+    ("z z z z z z", {n: [" ".join(["z"] * n)] for n in (2, 3, 4, 5)}),
+]
+
+
+def test_word_shingles_exact(spark):
+    """The regex kernel equals the interpreted HOF form and hand-written
+    arrays, element order included, for n = 2..5 — on the edge cases
+    above and on ~4,000 random mixes of tokens and whitespace runs."""
+    import random
+
+    rng = random.Random(7)
+    words = ["a", "b", "foo", "é", _EMOJI, _FRAK, f"ab{_EMOJI}", "x\u00a0y", "\u2003"]
+    seps = [" ", "  ", "\t", "\n", "\x0b", "\x0c", "\r", "\t\n ", " \r\n"]
+    rand = []
+    for _ in range(4000):
+        t = "".join(rng.choice(words) + rng.choice(seps) for _ in range(rng.randint(0, 9)))
+        if rng.random() < 0.5:
+            t = rng.choice(seps) + t
+        if t and rng.random() < 0.5:
+            t = t[:-1]
+        rand.append(t)
+    df = spark.createDataFrame(
+        list(enumerate([t for t, _ in _SHINGLE_CASES] + rand)), "i int, t string"
+    )
+    for n in (2, 3, 4, 5):
+        cols = df.select(
+            "i",
+            word_shingles(F.col("t"), n).alias("got"),
+            _hof_word_shingles(F.col("t"), n).alias("ref"),
+        )
+        assert cols.filter(~F.col("got").eqNullSafe(F.col("ref"))).count() == 0, n
+        got = {r["i"]: r["got"] for r in cols.filter(F.col("i") < len(_SHINGLE_CASES)).collect()}
+        for i, (text, want) in enumerate(_SHINGLE_CASES):
+            assert got[i] == want[n], (text, n)
+
+
+def test_shingle_path_has_no_lambda(spark, monkeypatch):
+    """word_shingles and both lanes of _jaccard_edge_pairs' shingle
+    stream are generated code: no interpreted lambda on the per-shingle
+    path."""
+    from daxos_spark.plans import docpipe
+
+    df = spark.createDataFrame([(1, "web", "a b c d")], "doc_id long, source string, text string")
+
+    def plan(d):
+        return d._jdf.queryExecution().explainString(
+            d._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("extended")
+        )
+
+    assert "lambda" not in plan(df.select(word_shingles(F.col("text"), 3)))
+    streams = []
+
+    def capture(sh0, keys):
+        streams.append(sh0)
+        return sh0.select(F.col("doc_id").alias("da"), F.col("doc_id").alias("db"),
+                          F.lit(1.0).alias("j")), []
+
+    monkeypatch.setattr(docpipe, "shingle_overlap", capture)
+    for two_lane in (False, True):
+        docpipe._jaccard_edge_pairs(df, two_lane=two_lane)
+    assert len(streams) == 2
+    for sh0 in streams:
+        text = plan(sh0)
+        assert "regexp_extract_all" in text and "md5" in text
+        assert "lambda" not in text
+
+
+def test_minhash_mins_equal_signature(spark):
+    """minhash_mins over the exploded (doc, shingle) stream gives, per
+    doc, exactly the array minhash_signature computes per row."""
+    docs = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat and more"),
+        (3, "completely different content with other tokens"),
+        (4, "short"),
+        (5, "a b a b a b a b"),
+    ]
+    df = spark.createDataFrame(docs, "id int, s string")
+    want = {
+        r["id"]: r["sig"]
+        for r in df.select("id", minhash_signature(word_shingles(F.col("s"), 3), 8).alias("sig"))
+        .collect()
+    }
+    got = {
+        r["id"]: [r[f"m{i}"] for i in range(8)]
+        for r in df.select("id", F.explode(word_shingles(F.col("s"), 3)).alias("g"))
+        .groupBy("id")
+        .agg(*minhash_mins(F.col("g"), 8))
+        .collect()
+    }
+    assert got == want
+    assert len(set(map(tuple, got.values()))) == len(docs)
 
 
 def test_minhash_containment(spark):

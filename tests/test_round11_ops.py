@@ -752,3 +752,36 @@ def test_frontier_e2e_ground_truth(spark):
     assert all(a >= b for a, b in zip(counts, counts[1:]))
     # the frontier gate must actually bite on this fixture
     assert funnel[2][1] < funnel[1][1]
+
+
+def test_extracted_mass_all_optout_corpus(spark, tmp_path):
+    """When no page passes the opt-out gate, the `extracted` stage of
+    t_optout_refinery and of both ingest funnels reports a char mass of
+    0 in Spark as in the oracle (a bare SUM over no rows is NULL). Every
+    row of the three queries equals its registered oracle's."""
+    import os
+
+    import duckdb
+
+    from daxos_spark.catalog import TABLES
+    from daxos_spark.operators.refinery import _OPTOUT_SOURCES
+    from daxos_spark.plans import get_specs
+
+    words = "river stone field cloud forest meadow harbor lantern".split()
+    rows = [
+        (i, _OPTOUT_SOURCES[i % len(_OPTOUT_SOURCES)], " ".join(words[i % 5 :] + words) * 4)
+        for i in range(1, 40)
+    ]
+    sf = mini_sf_dir(spark, tmp_path, rows, SF_DIR)
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf}/{t}.parquet"
+        pat = f"{p}/*.parquet" if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    specs = get_specs()
+    for name in ("t_optout_refinery", "t_ingest_e2e", "t_frontier_e2e"):
+        got = [tuple(r) for r in specs[name].spark(spark, sf).collect()]
+        want = con.execute(specs[name].oracle).fetchall()
+        assert got == want, name
+        extracted = [r for r in got if "extracted" in r]
+        assert len(extracted) == 1 and extracted[0][-2:] == (0, 0), (name, extracted)

@@ -137,3 +137,25 @@ def test_plink_python_datasource(spark, plink_raw_path):
         r = by_iid[f"I{i}"]
         assert r["features"] == [float(v) for v in X[i]]
         assert r["PHENOTYPE"] == float(y[i])  # 1/2 recoded to 0/1
+
+
+def test_load_tables_opens_on_lookup(spark, tmp_path):
+    """load_tables opens a table at its first lookup, once: a directory
+    holding only documents.parquet serves that table, lists all ten
+    names, and fails only when a missing table is looked up."""
+    import pytest
+
+    from daxos_spark.catalog import TABLES, load_tables
+
+    spark.createDataFrame([(1, "a b c")], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    t = load_tables(spark, str(tmp_path))
+    assert list(t) == list(TABLES) and "nation" in t and "nope" not in t
+    assert t["documents"].count() == 1
+    assert t["documents"] is t["documents"]
+    assert load_tables(spark, str(tmp_path)) is t
+    with pytest.raises(KeyError):
+        t["nope"]
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        t["nation"]
