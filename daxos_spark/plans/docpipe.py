@@ -1187,27 +1187,15 @@ def _semantic_oracle() -> str:
     """
 
 
-def _semantic_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    docs: DataFrame | None = None,
-    planes: list | None = None,
-):
+def _semantic_pairs(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None):
     """Spark twin of `_semantic_pairs_cte`: returns (``b`` embedded docs
     with bucket ids, ``s`` blocked-pair similarity verdicts, ``caches``
     the caller must release after materializing — the CALLER_RELEASED
     contract). ``docs`` (doc_id, lang) overrides the document set —
-    the `src` seam of the oracle twin. ``planes`` overrides the
-    hyperplane set (production = lsh_planes() with LSH_BITS): the
-    plane-scaling remedy SCALE.md prescribes for corpus growth is
-    measured through this seam (tools/scale40_probe.py) — each added
-    plane halves expected bucket occupancy, so planes ∝ log(corpus)
-    keeps per-bucket pair mass constant."""
+    the `src` seam of the oracle twin."""
     from ..functions.similarity import int_code, lsh_bucket, lsh_planes
     from ..functions.vectors import to_double
 
-    if planes is None:
-        planes = lsh_planes()
     t = load_tables(spark, sf_dir)
     if docs is None:
         docs = t["documents"].select("doc_id", "lang")
@@ -1222,7 +1210,7 @@ def _semantic_pairs(
     # self-norms once per DOCUMENT before the join — inside the pair
     # select they would re-run the O(dim) interpreted HOF per pair
     # (B× redundant work for a B-pair bucket)
-    b = j.withColumn("bk", lsh_bucket(F.col("c"), planes)).withColumn(
+    b = j.withColumn("bk", lsh_bucket(F.col("c"), lsh_planes())).withColumn(
         "nn", idot(F.col("c"), F.col("c"))
     )
     # b feeds BOTH sides of the pair self-join and (for the keep-list

@@ -355,8 +355,8 @@ def _refinery_html_oracle() -> str:
 def _refinery_html_parts(spark: SparkSession, sf_dir: str):
     """(ext, verdicts, caches) — the composed funnel's non-empty
     extraction frame (doc_id, source, lang, text) and per-doc verdict
-    relation, exposed so the live-10× lane probe
-    (tools/html_lane_probe.py) can digest the survivor SETS, not just
+    relation, exposed so the composed-vs-staged lane proof
+    (tools/scale.py --digest) can digest the survivor SETS, not just
     the stage counts."""
     from .docpipe import _semantic_keep_lazy
     from .textpipe import _refinery_gates_from, _refinery_verdicts

@@ -2759,7 +2759,7 @@ def _refinery_verdicts(gf, nll, cov, keep):
     ``keep`` must carry (doc_id, sem0); docs without a row pass
     vacuously (COALESCE 1) — semantic dedup can only judge embedded
     docs. Shared by the aggregate funnel tail and the lane-equality
-    probe (tools/refinery_lane_probe.py), which needs the SURVIVOR SET
+    proofs (tools/scale.py --digest), which need the SURVIVOR SET
     identities, not just the counts."""
     return (
         gf.join(nll, "doc_id", "left")

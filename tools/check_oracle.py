@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import pathlib
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -55,6 +57,36 @@ def frame_digest(df: pd.DataFrame) -> tuple[int, list[str], str]:
         h.update("\x1f".join(r).encode())
         h.update(b"\x1e")
     return len(rows), cols, h.hexdigest()[:16]
+
+
+def duckdb_mem_mb() -> int:
+    """Half the host's physical memory, at least 1 GB — the share
+    session._default_driver_mem gives the Spark heap. A limit past what
+    the host can give is OOM-killed before it spills. A quarter is too
+    little: at sf0.01 the t_ingest_epochs oracle fails to pin a block
+    under a 4.5 GB limit (it passes at 5 GB, peak RSS 1.2 GB)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return 8192
+    return max(1024, phys // 2 // 2**20)
+
+
+def duckdb_views(sf_dir: str):
+    """A duckdb connection with every catalog table of ``sf_dir`` as a
+    view, RAM bounded by `duckdb_mem_mb` and spilling to a temp dir.
+    Harness dirs hold single parquet FILES, synthesized corpora
+    (tools/scale.py) Spark-written DIRECTORIES."""
+    from daxos_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit='{duckdb_mem_mb()}MB'")
+    con.execute(f"SET temp_directory='{os.path.join(tempfile.gettempdir(), 'duckdb_spill')}'")
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        pat = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    return con
 
 
 def _jvm_alive(spark) -> bool:
@@ -95,24 +127,7 @@ def main() -> int:
         only = keep if not only else (only & keep)
     oracles = entry_mod.oracle_sql()
 
-    con = duckdb.connect()
-    # Bound the oracle's RAM and let it spill: at the synthesized 10×
-    # corpus an unbounded in-memory duckdb grew to ~116 GB on the
-    # refinery oracles and drew the kernel OOM-killer (which takes the
-    # whole gate process with it, Spark results included). 48 GB +
-    # disk spill keeps the box alive; the oracle just runs longer.
-    con.execute("SET memory_limit='48GB'")
-    con.execute("SET temp_directory='/tmp/duckdb_gate_spill'")
-    import os
-
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings".split()
-    ):
-        # harness dirs hold single FILES; synthesized scale-up dirs
-        # (tools/sf1_probe.py) hold Spark-written DIRECTORIES
-        p = f"{sf_dir}/{t}.parquet"
-        pat = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    con = duckdb_views(sf_dir)
 
     n_pass = n_fail = n_rowsonly = 0
     t_all = time.time()
