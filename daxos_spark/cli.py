@@ -135,7 +135,7 @@ def cmd_adjust(spark: SparkSession, args) -> None:
             stats = {k: tuple(v) for k, v in json.load(f).items()}
 
     adjusted, stats, fb, yb = deconfound(
-        ds.fact, covars, standardize=True, stats=stats,
+        ds.fact, covars, stats=stats,
         feature_betas=feature_betas, y_betas=y_betas,
     )
     write_matrix(MatrixDataset(fact=adjusted, cols=ds.cols), args.out)

@@ -41,9 +41,6 @@ literals go through the shared ``_spark_lit`` escaping rule
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .html import _spark_lit
 
 FRAG_RE = r"(?s)#.*"
@@ -108,13 +105,6 @@ def url_canonical_sqlexpr(url_expr: str) -> str:
     for _, build in _steps(_rr_spark, _rx_spark, "$1"):
         out = build(out)
     return out
-
-
-def url_canonical(c: Column | str) -> Column:
-    name = c if isinstance(c, str) else None
-    if name is None:
-        raise TypeError("pass the column NAME (the fragment is SQL-generated)")
-    return F.expr(url_canonical_sqlexpr(name))
 
 
 def url_rule_steps_spark(url_expr: str) -> list[tuple[str, str]]:

@@ -37,19 +37,5 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def axpy(a: Column, x: Column, y: Column) -> Column:
-    """a*x + y element-wise (a scalar Column, x/y array Columns)."""
-    return F.zip_with(to_double(x), to_double(y), lambda xi, yi: a * xi + yi)
-
-
 def vec_sub(x: Column, y: Column) -> Column:
     return F.zip_with(to_double(x), to_double(y), lambda xi, yi: xi - yi)
-
-
-def vec_scale(a: Column, x: Column) -> Column:
-    return F.transform(to_double(x), lambda xi: a * xi)
-
-
-def vec_get(x: Column, i) -> Column:
-    """0-based element access."""
-    return F.element_at(x, i + 1 if isinstance(i, int) else i + F.lit(1))

@@ -7,24 +7,24 @@ BASELINE.md). Closed form instead (SURVEY §2.6 M1):
 
     betas = (CᵀC)⁻¹ CᵀX        C: n×(k+1) design [1|covars], X: n×p
 
-CᵀC is (k+1)² — a handful of sum-of-product aggregates. CᵀX is
-(k+1)×p — one distributed pass: posexplode the features array and
-partially-aggregate sum(val·cᵢ) per position (map-side combine makes
-the shuffle p×n_partitions rows, not n×p). One stage, any p, no Python
-in the row loop. The residual transform X − C·betas is the one genuine
-pandas-UDF site (SURVEY §7.3): numpy matmul per Arrow batch against the
-broadcast (k+1)×p beta matrix.
+The label fit (M2) is the same regression on one more column, so
+``fit_betas`` fits ``[label | features]`` in ONE distributed pass:
+posexplode the columns and, per position, partially aggregate Σ zᵢ·v
+and that position's own gramian Σ zᵢ·zⱼ over the rows where v is
+present (the reference's per-column NaN drop, P7; map-side combine
+makes the shuffle (p+1)×n_partitions rows, not n×p). The driver solves
+the p+1 small (k+1)×(k+1) systems in one batched call. The residual
+X − C·betas is a native ``transform`` against a one-row broadcast beta
+frame — no Python in the row loop.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.tables import covar_columns
 
 
@@ -58,46 +58,44 @@ def standardize_covars(
     return out, stats
 
 
-def compute_beta_matrix(
-    fact: DataFrame, cov_cols: list[str], features_col: str = "features"
-) -> np.ndarray:
-    """M1 closed-form betas, shape (k+1, p); design = [1 | covars]."""
+def fit_betas(
+    fact: DataFrame, cov_cols: list[str], features_col: str = "features", label_col: str = "label"
+) -> tuple[np.ndarray, np.ndarray]:
+    """M1 + M2 closed-form betas on design [1 | covars]: the feature
+    betas, shape (k+1, p), and the label betas, shape (k+1,). Each
+    column is fitted on its own non-null, non-NaN rows."""
     k = len(cov_cols)
-    # both aggregation passes must see the SAME rows: posexplode drops
-    # null/empty feature arrays, so CᵀC must drop them too or the
-    # design matrices silently mismatch
-    fact = fact.filter(
-        F.col(features_col).isNotNull() & (F.size(F.col(features_col)) > 0)
-    )
     zs = [F.lit(1.0), *[F.col(c).cast("double") for c in cov_cols]]
-
-    # CᵀC — (k+1)² tiny aggregates in one pass
-    ctc_aggs = [
-        F.sum(zs[i] * zs[j]).alias(f"g_{i}_{j}") for i in range(k + 1) for j in range(i, k + 1)
-    ]
-    g = fact.agg(*ctc_aggs).collect()[0]
-    ctc = np.zeros((k + 1, k + 1))
-    for i in range(k + 1):
-        for j in range(i, k + 1):
-            ctc[i, j] = ctc[j, i] = g[f"g_{i}_{j}"]
-
-    # CᵀX — posexplode + per-position partial aggregation
-    exploded = fact.select(
-        *[z.alias(f"__z{i}") for i, z in enumerate(zs)],
-        F.posexplode(F.col(features_col)).alias("pos", "__v"),
+    # the label is position 0, so its position never depends on the
+    # feature width; a null features array contributes no feature rows
+    cols = F.concat(
+        F.array(F.col(label_col).cast("double")),
+        F.coalesce(F.col(features_col).cast("array<double>"), F.array().cast("array<double>")),
     )
-    ctx_rows = (
+    # NaN counts as missing; every position stays in the result so the
+    # width is the widest array, and a column with no usable row gets
+    # a NULL (→ NaN) system and so NaN betas
+    exploded = fact.select(
+        *[z.alias(f"__z{i}") for i, z in enumerate(zs)], F.posexplode(cols).alias("pos", "__v")
+    ).withColumn("__v", F.when(~F.isnan("__v"), F.col("__v")))
+    pairs = [(i, j) for i in range(k + 1) for j in range(i, k + 1)]
+    present = F.col("__v").isNotNull()
+    rows = (
         exploded.groupBy("pos")
-        .agg(*[F.sum(F.col(f"__z{i}") * F.col("__v").cast("double")).alias(f"c{i}") for i in range(k + 1)])
+        .agg(
+            *[F.sum(F.col(f"__z{i}") * F.col("__v")).alias(f"c{i}") for i in range(k + 1)],
+            *[F.sum(F.when(present, F.col(f"__z{i}") * F.col(f"__z{j}"))).alias(f"g_{i}_{j}") for i, j in pairs],
+        )
         .collect()
     )
-    p = max(r["pos"] for r in ctx_rows) + 1
-    ctx = np.zeros((k + 1, p))
-    for r in ctx_rows:
-        for i in range(k + 1):
-            ctx[i, r["pos"]] = r[f"c{i}"]
-
-    return np.linalg.solve(ctc, ctx)  # (k+1, p)
+    ctc = np.zeros((len(rows), k + 1, k + 1))
+    cty = np.zeros((len(rows), k + 1))
+    for r in rows:
+        for i, j in pairs:
+            ctc[r["pos"], i, j] = ctc[r["pos"], j, i] = r[f"g_{i}_{j}"]
+        cty[r["pos"]] = [r[f"c{i}"] for i in range(k + 1)]
+    betas = np.linalg.solve(ctc, cty[..., None])[..., 0]  # (p+1, k+1)
+    return betas[1:].T, betas[0]
 
 
 def residualize_features(
@@ -107,51 +105,33 @@ def residualize_features(
     features_col: str = "features",
     out_col: str = "features_adj",
 ) -> DataFrame:
-    """M3 residual transform: features_adj = X − C·betas.
+    """M3 residual transform: features_adj = X − C·betas, element j
+    being x_j − (b0[j] + Σ cᵢ·bᵢ[j]).
 
-    Arrow-batched pandas UDF (the designated slow-path escape hatch):
-    per batch, one numpy matmul (b×(k+1)) @ ((k+1)×p). The beta matrix
-    rides along as a broadcast variable (k·p doubles — the only
-    driver-sized object, per the reference's own design O10/M3 where
-    betas are also dense in memory, deconfound.py:87-102).
+    The (k+1)×p beta matrix rides in a one-row frame broadcast to every
+    task (the only driver-sized object, as in the reference's own design
+    O10/M3 where betas are dense in memory, deconfound.py:87-102). A
+    null dosage gives NaN.
     """
-    spark = fact.sparkSession
-    b_betas = spark.sparkContext.broadcast(betas.astype(np.float64))
-    schema = ", ".join(
-        f"{name} {dtype}" for name, dtype in fact.dtypes
-    ) + f", {out_col} array<float>"
-    k = len(cov_cols)
+    bnames = [f"__b{i}" for i in range(len(betas))]
+    bframe = local_frame(
+        fact.sparkSession,
+        {n: [b] for n, b in zip(bnames, np.asarray(betas, dtype=np.float64).tolist())},
+        ", ".join(f"{n} array<double>" for n in bnames),
+    )
+    cs = [F.lit(1.0), *[F.col(c).cast("double") for c in cov_cols]]
 
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        B = b_betas.value
-        for pdf in batches:
-            X = np.stack(pdf[features_col].to_numpy()).astype(np.float64)
-            C = np.column_stack(
-                [np.ones(len(pdf)), *[pdf[c].to_numpy(dtype=np.float64) for c in cov_cols]]
-            )
-            adj = (X - C @ B).astype(np.float32)
-            out = pdf.copy()
-            out[out_col] = list(adj)
-            yield out
+    def adj(x, j):
+        pred = cs[0] * F.col(bnames[0])[j]
+        for c, n in zip(cs[1:], bnames[1:]):
+            pred = pred + c * F.col(n)[j]
+        return F.coalesce((x.cast("double") - pred).cast("float"), F.lit(float("nan")).cast("float"))
 
-    return fact.mapInPandas(transform, schema=schema)
-
-
-def label_betas(fact: DataFrame, cov_cols: list[str], label_col: str = "label") -> np.ndarray:
-    """M2 linear label-deconfound betas (deconfound.py:54-62), closed
-    form on the same CᵀC with Cᵀy."""
-    k = len(cov_cols)
-    zs = [F.lit(1.0), *[F.col(c).cast("double") for c in cov_cols]]
-    aggs = [
-        F.sum(zs[i] * zs[j]).alias(f"g_{i}_{j}") for i in range(k + 1) for j in range(i, k + 1)
-    ] + [F.sum(zs[i] * F.col(label_col).cast("double")).alias(f"y{i}") for i in range(k + 1)]
-    row = fact.agg(*aggs).collect()[0]
-    ctc = np.zeros((k + 1, k + 1))
-    for i in range(k + 1):
-        for j in range(i, k + 1):
-            ctc[i, j] = ctc[j, i] = row[f"g_{i}_{j}"]
-    cty = np.array([row[f"y{i}"] for i in range(k + 1)])
-    return np.linalg.solve(ctc, cty)
+    return (
+        fact.crossJoin(F.broadcast(bframe))
+        .withColumn(out_col, F.transform(features_col, adj))
+        .drop(*bnames)
+    )
 
 
 def residualize_label(
@@ -171,7 +151,6 @@ def residualize_label(
 def deconfound(
     fact: DataFrame,
     covars: DataFrame,
-    standardize: bool = True,
     stats: dict[str, tuple[float, float]] | None = None,
     feature_betas: np.ndarray | None = None,
     y_betas: np.ndarray | None = None,
@@ -187,11 +166,11 @@ def deconfound(
     and leak test labels into the y-adjustment.
     """
     cov_cols = covar_columns(covars)
-    joined = align_covars(fact, covars)
-    if standardize:
-        joined, stats = standardize_covars(joined, cov_cols, stats)
-    fb = feature_betas if feature_betas is not None else compute_beta_matrix(joined, cov_cols)
-    yb = y_betas if y_betas is not None else label_betas(joined, cov_cols)
-    out = residualize_features(joined, cov_cols, fb)
-    out = residualize_label(out, cov_cols, yb)
-    return out.drop(*cov_cols), stats, fb, yb
+    joined, stats = standardize_covars(align_covars(fact, covars), cov_cols, stats)
+    if (feature_betas is None) != (y_betas is None):
+        raise ValueError("pass both feature_betas and y_betas (the train fit), or neither")
+    if feature_betas is None:
+        feature_betas, y_betas = fit_betas(joined, cov_cols)
+    out = residualize_features(joined, cov_cols, feature_betas)
+    out = residualize_label(out, cov_cols, y_betas)
+    return out.drop(*cov_cols), stats, feature_betas, y_betas

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def with_row_idx(
     df: DataFrame,
@@ -48,16 +50,16 @@ def with_row_idx(
         work.withColumn("__pid", pid).withColumn("__local", F.row_number().over(w)).persist()
     )
 
-    # per-partition counts → cumulative offsets (driver-side, #partitions rows)
-    counts = local.groupBy("__pid").count().orderBy("__pid").collect()
+    # per-partition counts → cumulative offsets (driver-side, #partitions
+    # rows, so they are put in partition order here, not by a Spark sort)
+    counts = local.groupBy("__pid").count().collect()
     offsets, acc = {}, 0
-    for r in counts:
+    for r in sorted(counts, key=lambda r: r["__pid"]):
         offsets[r["__pid"]] = acc
         acc += r["count"]
 
-    sess = df.sparkSession
-    off_df = sess.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "__pid int, __offset long"
+    off_df = local_frame(
+        df.sparkSession, {"__pid": list(offsets), "__offset": list(offsets.values())}, "__pid int, __offset long"
     )
     return (
         local.join(F.broadcast(off_df), "__pid")

@@ -84,11 +84,6 @@ def subset_columns(
     return MatrixDataset(fact=fact, cols=new_cols)
 
 
-def drop_null_label_rows(fact: DataFrame, label_col: str = "label") -> DataFrame:
-    """P6 null-label filter (crossvalidate.py:133-138)."""
-    return fact.filter(F.col(label_col).isNotNull() & ~F.isnan(F.col(label_col)))
-
-
 def head_subsample(fact: DataFrame, n: int) -> DataFrame:
     """P8 head-N subsample (crossvalidate.py:398-404): valid as a
     *random* subsample only because data is pre-shuffled at rest (O2) —

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults chosen for the driver's harness: local[$SPARK_GRAFT_CPUS].
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -69,3 +69,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, columns: dict[str, list], schema: str) -> DataFrame:
+    """A small driver-side table (a dim, an offset map, a beta row) as a
+    ``LocalRelation``, built through Arrow. ``createDataFrame`` of a
+    Python list is a Python-backed RDD instead: every action that scans
+    it starts one Python task per default-parallelism slice (32 tasks,
+    about 2 s per action on 4 vCPU, even for one row)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)

@@ -7,10 +7,12 @@ when binary) and S17 dosage recode (Snakefile:194-226).
 Spark-first shape (SURVEY §1.5): ONE DataFrame
     row_idx:long, fid, iid, pat, mat, sex:float, phenotype:float,
     label:float, features:array<float>
-plus a small ``cols`` dim table (pos:int, snp:string). The reference's
-chunked reader (S2) is unnecessary — the CSV scan is already partitioned
-and streaming; its positional row identity is replaced by row_idx
-(operators/indexing.py).
+plus a small ``cols`` dim table (pos:int, snp:string). The body is one
+``spark.read.text`` scan split into whitespace tokens; the features are
+one ``slice`` of that token array, so the plan has the same size at any
+SNP count. The reference's chunked reader (S2) is unnecessary — the
+text scan is already partitioned and streaming; its positional row
+identity is replaced by row_idx (operators/indexing.py).
 """
 
 from __future__ import annotations
@@ -19,9 +21,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import FloatType, StringType, StructField, StructType
 
 from ..operators.indexing import shuffled_with_row_idx, with_row_idx
+from ..session import local_frame
 
 FAM_COLS = ("FID", "IID", "PAT", "MAT", "SEX", "PHENOTYPE")
 
@@ -45,61 +47,56 @@ def read_plink_colnames(spark: SparkSession, path: str) -> list[str]:
     return first.strip().split()
 
 
-def read_plink_raw(
-    spark: SparkSession,
-    path: str,
-    shuffle_seed: int | None = None,
-    recode_binary_label: bool = True,
-) -> MatrixDataset:
-    """S1+S3: whitespace CSV → fact DataFrame with features array.
+def read_plink_raw(spark: SparkSession, path: str, shuffle_seed: int | None = None) -> MatrixDataset:
+    """S1+S3: whitespace text → fact DataFrame with features array.
+
+    Blank lines and the header are dropped. ``NA`` is a null element
+    (``try_cast``, so ANSI mode does not fail the scan); a row that is
+    not 6 + p fields wide raises ``ValueError``.
 
     shuffle_seed: if set, applies the at-rest global pre-shuffle (X4)
     while assigning row_idx; None keeps file order.
     """
     colnames = read_plink_colnames(spark, path)
     snp_names = colnames[len(FAM_COLS) :]
-    schema = StructType(
-        [StructField(c, StringType() if i < 4 else FloatType(), True) for i, c in enumerate(colnames[:6])]
-        + [StructField(c, FloatType(), True) for c in snp_names]
-    )
-    raw = (
-        spark.read.option("delimiter", " ")
-        .option("header", True)
-        .schema(schema)
-        .csv(path)
-    )
-    fact = raw.select(
-        F.col("FID").alias("fid"),
-        F.col("IID").alias("iid"),
-        F.col("PAT").alias("pat"),
-        F.col("MAT").alias("mat"),
-        F.col("SEX").alias("sex"),
-        F.col("PHENOTYPE").alias("phenotype"),
-        F.array(*[F.col(f"`{s}`") for s in snp_names]).alias("features"),
+    t = F.col("__t")
+    fact = (
+        spark.read.text(path)
+        .select(F.split(F.btrim("value", F.lit(" \t\r")), r"\s+").alias("__t"))
+        .filter((t[0] != "") & (F.slice(t, 1, 6) != F.array(*map(F.lit, colnames[:6]))))
+        .select(
+            *[F.get(t, i).alias(c.lower()) for i, c in enumerate(FAM_COLS[:4])],
+            *[F.get(t, i).try_cast("float").alias(c.lower()) for i, c in enumerate(FAM_COLS[4:], 4)],
+            F.slice(t, 7, len(snp_names)).try_cast("array<float>").alias("features"),
+            F.size(t).alias("__width"),
+        )
     )
 
     # A4 recode guard: 1/2 phenotype → 0/1 label. The reference tests
     # only max==2 (read.py:91-94); here the whole value set must be
     # ⊆ {1,2} so a quantitative phenotype that happens to top out at
-    # 2.0 is never silently shifted (documented strictness delta).
+    # 2.0 is never silently shifted (documented strictness delta). The
+    # same aggregate counts the rows of the wrong width.
+    row = fact.agg(
+        F.max("phenotype").alias("mx"),
+        F.sum((~F.col("phenotype").isin(1.0, 2.0)).cast("int")).alias("n_other"),
+        F.sum((F.col("__width") != len(colnames)).cast("int")).alias("n_bad"),
+    ).collect()[0]
+    if row["n_bad"]:
+        raise ValueError(
+            f"{path}: {row['n_bad']} rows are not {len(colnames)} fields wide (6 FAM + {len(snp_names)} SNPs)"
+        )
     label = F.col("phenotype")
-    if recode_binary_label:
-        row = fact.agg(
-            F.max("phenotype").alias("mx"),
-            F.sum((~F.col("phenotype").isin(1.0, 2.0)).cast("int")).alias("n_other"),
-        ).collect()[0]
-        if row["mx"] is not None and float(row["mx"]) == 2.0 and (row["n_other"] or 0) == 0:
-            label = F.col("phenotype") - F.lit(1.0)
-    fact = fact.withColumn("label", label.cast("float"))
+    if row["mx"] == 2.0 and not row["n_other"]:
+        label = label - F.lit(1.0)
+    fact = fact.drop("__width").withColumn("label", label.cast("float"))
 
     if shuffle_seed is not None:
         fact = shuffled_with_row_idx(fact, seed=shuffle_seed)
     else:
         fact = with_row_idx(fact)
 
-    cols = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(snp_names)], "pos int, snp string"
-    )
+    cols = local_frame(spark, {"pos": list(range(len(snp_names))), "snp": snp_names}, "pos int, snp string")
     return MatrixDataset(fact=fact.select("row_idx", *[c.lower() for c in FAM_COLS], "label", "features"), cols=cols)
 
 

@@ -35,6 +35,11 @@ ALLOWED: dict[str, tuple[int, str]] = {
         "covariate table: n_samples rows x few cols, orders smaller than the "
         "genotype matrix it aligns (reference M3 broadcast-betas design)",
     ),
+    "ml/deconfound.py:residualize_features": (
+        1,
+        "one-row beta frame: (k+1) arrays of p doubles, the driver-side "
+        "beta matrix the reference also holds dense (deconfound.py:87-102)",
+    ),
     "ml/gwas.py:prs_score": (1, "curated score-panel weights (panel-bounded)"),
     "ml/scale.py:newton_logistic_grouped": (1, "1-row (a,b) coefficient aggregate"),
     "operators/indexing.py:with_row_idx": (1, "per-partition offset table (n_partitions rows)"),

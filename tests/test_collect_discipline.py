@@ -45,17 +45,19 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "cli.py:cmd_predict": (1, "p-length column name list"),
     # -- sources: 1-row probes / validation ---------------------------------
     "sources/plink.py:read_plink_colnames": (1, "single header line (limit 1)"),
-    "sources/plink.py:read_plink_raw": (1, "1-row global max/min recode guard"),
+    "sources/plink.py:read_plink_raw": (
+        1, "1-row recode-guard aggregate (max, non-1/2 and wrong-width counts)"
+    ),
     "sources/plink.py:read_matrix": (1, "1-row feature-width probe (limit 1)"),
     "sources/tables.py:read_covars": (1, "1-row uniqueness-validation aggregate"),
     "sources/tables.py:best_hp_row": (1, "1-row arg-best (order+limit 1)"),
     # -- ml: gramian / coefficient collects (reference M-family design) -----
-    "ml/deconfound.py:compute_beta_matrix": (
-        2,
-        "1-row covariate gramian aggregate + p-length per-column beta rows "
-        "(reference deconfound.py broadcasts the same beta matrix)",
+    "ml/deconfound.py:fit_betas": (
+        1,
+        "(p+1)-row per-position moment aggregate (label + p feature "
+        "columns, (k+1)^2 sums each) - reference deconfound.py broadcasts "
+        "the same beta matrix",
     ),
-    "ml/deconfound.py:label_betas": (1, "1-row gramian aggregate"),
     "ml/deconfound.py:standardize_covars": (1, "1-row mean/std aggregate"),
     "ml/explain.py:used_features": (1, "p-length column name list"),
     "ml/explain.py:permutation_importance": (1, "p-length position list"),

@@ -31,6 +31,110 @@ def test_ingest_shapes_and_recode(matrix_ds, plink_raw_path):
     assert row["label"] == float(y[5])
 
 
+def _python_parse(path):
+    """Oracle: the PLINK .raw body parsed in plain Python, keyed by IID."""
+    with open(path) as f:
+        body = [t for t in (line.split() for line in f.readlines()[1:]) if t]
+    f32 = lambda v: None if v == "NA" else float(np.float32(v))  # noqa: E731
+    return {t[1]: (t[0], t[2], t[3], f32(t[4]), f32(t[5]), [f32(v) for v in t[6:]]) for t in body}
+
+
+def _assert_matches_oracle(ds, path):
+    want = _python_parse(path)
+    rows = ds.fact.collect()
+    assert len(rows) == len(want)
+    for r in rows:
+        fid, pat, mat, sex, pheno, feats = want[r["iid"]]
+        assert (r["fid"], r["pat"], r["mat"], r["sex"], r["phenotype"]) == (fid, pat, mat, sex, pheno)
+        assert r["features"] == feats
+        assert r["label"] == pheno - 1.0  # every fixture codes phenotype 1/2
+
+
+def _write_raw(path, header, lines):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text(header + "\n" + "".join(line + "\n" for line in lines))
+    return str(path)
+
+
+def test_ingest_matches_python_parse(matrix_ds, plink_raw_path):
+    _assert_matches_oracle(matrix_ds, plink_raw_path[0])
+
+
+def test_ingest_na_separators_and_blank_lines(spark, tmp_path):
+    """``NA`` is a null element; tabs, runs of spaces and a trailing
+    blank line parse like single spaces."""
+    from daxos_spark.sources.plink import read_plink_raw
+
+    path = _write_raw(
+        tmp_path / "mixed.raw",
+        "FID IID PAT MAT SEX PHENOTYPE rs1 rs2 rs3",
+        [
+            "F0 I0 0 0 1 2 0 NA 2",
+            "F1\tI1\t0\t0\t2\t1\t1\t1\t0.5",
+            "  F2   I2 0  0 1 1 NA  NA 2\t",
+            "",
+            "   ",
+        ],
+    )
+    ds = read_plink_raw(spark, path)
+    assert ds.n_features == 3
+    _assert_matches_oracle(ds, path)
+    got = {r["iid"]: r["features"] for r in ds.fact.collect()}
+    assert got == {"I0": [0.0, None, 2.0], "I1": [1.0, 1.0, 0.5], "I2": [None, None, 2.0]}
+
+
+def test_ingest_wrong_width_row_raises(spark, tmp_path):
+    from daxos_spark.sources.plink import read_plink_raw
+
+    path = _write_raw(
+        tmp_path / "short.raw", "FID IID PAT MAT SEX PHENOTYPE rs1 rs2", ["F0 I0 0 0 1 2 0 1", "F1 I1 0 0 1 2 0"]
+    )
+    with pytest.raises(ValueError, match="1 rows are not 8 fields wide"):
+        read_plink_raw(spark, path)
+
+
+def test_ingest_header_only(spark, tmp_path):
+    from daxos_spark.sources.plink import read_plink_raw
+
+    path = _write_raw(tmp_path / "empty.raw", "FID IID PAT MAT SEX PHENOTYPE rs1 rs2 rs3 rs4", [])
+    ds = read_plink_raw(spark, path)
+    assert ds.fact.count() == 0
+    assert ds.n_features == 4
+
+
+def test_ingest_plan_does_not_grow_with_snp_count(spark, tmp_path):
+    """The analyzed plan is the same at p = 10 and p = 5,000 (modulo
+    expression ids and the literal p): no per-SNP field or column."""
+    import re
+
+    from daxos_spark.sources.plink import read_plink_raw
+
+    plans = []
+    for d, p in (("a", 10), ("b", 5000)):
+        header = "FID IID PAT MAT SEX PHENOTYPE " + " ".join(f"rs{j}" for j in range(p))
+        lines = [f"F{i} I{i} 0 0 1 {1 + i % 2} " + " ".join(str((i + j) % 3) for j in range(p)) for i in range(3)]
+        path = _write_raw(tmp_path / d / "x.raw", header, lines)
+        plan = read_plink_raw(spark, path).fact._jdf.queryExecution().analyzed().toString()
+        plans.append(re.sub(r"\d+", "0", plan.replace(path, "PATH")))
+    assert plans[0] == plans[1]
+    assert len(plans[0]) < 5000
+
+
+def test_genotype_path_small_frames_are_local(matrix_ds):
+    """The cols dim, the row-offset map and the beta row are JVM-local
+    relations: a Python-backed ``createDataFrame`` RDD would start
+    Python tasks on every action that scans it."""
+    from daxos_spark.ml.deconfound import residualize_features
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert plan(matrix_ds.cols).startswith("LocalRelation")
+    fact = matrix_ds.fact.withColumn("C", F.lit(1.0))
+    adj = plan(residualize_features(fact, ["C"], np.zeros((2, matrix_ds.n_features))))
+    assert "LocalRelation" in adj and "LogicalRDD" not in adj
+
+
 def test_row_idx_contiguous_and_shuffled(matrix_ds, plink_raw_path):
     _, X, y, snps = plink_raw_path
     idx = sorted(r["row_idx"] for r in matrix_ds.fact.select("row_idx").collect())
@@ -108,35 +212,6 @@ def test_jsonl_roundtrip(spark, tmp_path):
     got = {r["doc_id"]: r["text"] for r in back.collect()}
     want = {r["doc_id"]: r["text"] for r in d.collect()}
     assert got == want
-
-
-def test_plink_python_datasource(spark, plink_raw_path):
-    """Registered spark.read.format('plink_raw') source: same rows as
-    the production CSV-scan ingest, correct text-split semantics across
-    multiple byte-range partitions."""
-    from daxos_spark.sources.plink_datasource import register_plink_source, snp_names
-
-    path, X, y, snps = plink_raw_path
-    register_plink_source(spark)
-    # split_bytes tiny → many partitions; split ownership must not drop
-    # or double-count boundary lines
-    df = (
-        spark.read.format("plink_raw")
-        .option("path", path)
-        .option("split_bytes", 512)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() > 1
-    rows = df.collect()
-    assert len(rows) == len(X)
-    assert snp_names(path) == snps
-
-    by_iid = {r["IID"]: r for r in rows}
-    assert set(by_iid) == {f"I{i}" for i in range(len(X))}
-    for i in (0, 7, len(X) - 1):
-        r = by_iid[f"I{i}"]
-        assert r["features"] == [float(v) for v in X[i]]
-        assert r["PHENOTYPE"] == float(y[i])  # 1/2 recoded to 0/1
 
 
 def test_load_tables_opens_on_lookup(spark, tmp_path):

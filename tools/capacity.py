@@ -18,7 +18,10 @@ the (k+1)×p beta matrix). ``stages`` = "all" (default), "deconfound"
 property of MLlib tree building, not of this engine's dataflow), or
 "train" (train+score only, reusing the _adj parquet a prior
 stages=deconfound run left behind — the reference's full-data refit
-row, budgeted at ≈640 GB cluster RAM at 28k×215k).
+row, budgeted at ≈640 GB cluster RAM at 28k×215k), or "ingest" (write
+an n×p PLINK ``.raw`` text file, then time ``read_plink_raw``'s plan
+build and a noop write of its fact table — the reference's >3 h
+raw→HDF5 row).
 """
 
 from __future__ import annotations
@@ -39,9 +42,6 @@ def main() -> None:
 
     import pyspark.sql.functions as F
 
-    from daxos_spark.ml.deconfound import compute_beta_matrix, residualize_features
-    from daxos_spark.ml.train import GBTParams, fit_gbt, predict_gbt
-    from daxos_spark.ml.scoring import score_auc
     from daxos_spark.session import get_spark
 
     # Wide-array reads need the vectorized reader's row-batch scaled to
@@ -54,17 +54,20 @@ def main() -> None:
         "capacity",
         extra_conf={
             "spark.sql.parquet.columnarReaderBatchSize": str(batch_rows),
-            # Arrow batches crossing into pandas UDFs get the same
+            # Arrow batches crossing into pandas UDFs (xgboost scoring;
+            # the deconfound stage stays in the JVM) get the same
             # width-scaling: the default 10k rows × p floats is ~2 GB
             # per in-flight batch per worker at p=50k (32 workers →
-            # memory exhaustion), and the gramian partial only needs
-            # enough rows per batch to amortize the BLAS call.
+            # memory exhaustion).
             "spark.sql.execution.arrow.maxRecordsPerBatch": str(batch_rows),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
     t: dict[str, float] = {}
 
+    if stages == "ingest":
+        _run_ingest(spark, out, n, p, t)
+        return
     # ---- synthesize: JVM-side dosage matrix {0,1,2}, planted signal on
     # the last two columns, three covariates — no driver-side data.
     if stages == "train":
@@ -102,11 +105,13 @@ def main() -> None:
 
     fact = spark.read.parquet(out)
 
-    # ---- deconfound: every per-column regression in ONE gramian pass
+    # ---- deconfound: every per-column regression in ONE moment pass
     # (the reference budgeted 10h/300GB for this stage at p=215k)
     if stages != "train":
+        from daxos_spark.ml.deconfound import fit_betas, residualize_features
+
         t0 = time.time()
-        betas = compute_beta_matrix(fact, ["COV0", "COV1", "COV2"])
+        betas, _ = fit_betas(fact, ["COV0", "COV1", "COV2"])
         adj = residualize_features(fact, ["COV0", "COV1", "COV2"], betas)
         adj.write.mode("overwrite").parquet(out + "_adj")
         t["deconfound_write_s"] = round(time.time() - t0, 1)
@@ -158,6 +163,31 @@ def _run_train(spark, out: str, n: int, p: int, t: dict) -> None:
     )
     t["train_score_s"] = round(time.time() - t0, 1)
     _emit(n, p, auc, t)
+
+
+def _run_ingest(spark, out: str, n: int, p: int, t: dict) -> None:
+    """PLINK text at n×p (dosages 0/1/2, every 97th cell ``NA``) →
+    ``read_plink_raw`` plan build, then a noop write of the fact. A
+    first round on a 2×10 file warms the JVM, so the timed round
+    measures what grows with the width, not class loading."""
+    import random
+
+    from daxos_spark.sources.plink import read_plink_raw
+
+    rng = random.Random(0)
+    for rows, cols, raw in ((2, 10, out + "_warm.raw"), (n, p, out + ".raw")):
+        with open(raw, "w") as f:
+            f.write("FID IID PAT MAT SEX PHENOTYPE " + " ".join(f"rs{j}" for j in range(cols)) + "\n")
+            for i in range(rows):
+                cells = ("NA" if (i * cols + j) % 97 == 0 else str(rng.randint(0, 2)) for j in range(cols))
+                f.write(f"F{i} I{i} 0 0 {1 + i % 2} {1 + i % 2} " + " ".join(cells) + "\n")
+        t0 = time.time()
+        ds = read_plink_raw(spark, raw)
+        t["ingest_build_s"] = round(time.time() - t0, 2)
+        t0 = time.time()
+        ds.fact.write.format("noop").mode("overwrite").save()
+        t["ingest_write_s"] = round(time.time() - t0, 2)
+    _emit(n, p, float("nan"), t)
 
 
 def _emit(n: int, p: int, auc: float, t: dict) -> None:
