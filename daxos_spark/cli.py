@@ -93,22 +93,22 @@ def cmd_convert(spark: SparkSession, args) -> None:
 def cmd_subset(spark: SparkSession, args) -> None:
     """subset_hdf5.py: row semi/anti-join by ID list + column projection
     by SNP name, then rechunk (read.py:184-215)."""
+    from dataclasses import replace
+
     from .operators.subset import subset_columns, subset_rows_by_ids
-    from .sources.plink import MatrixDataset, read_matrix, write_matrix
+    from .sources.plink import read_matrix, write_matrix
     from .sources.tables import read_id_list
 
     ds = read_matrix(spark, args.input)
     if args.row_ids:
         ids = read_id_list(spark, args.row_ids)
-        ds = MatrixDataset(
-            fact=subset_rows_by_ids(ds.fact, ids, keep=not args.remove), cols=ds.cols
-        )
+        ds = replace(ds, fact=subset_rows_by_ids(ds.fact, ids, keep=not args.remove))
     if args.col_ids:
         with open(args.col_ids) as f:
             names = [ln.strip() for ln in f if ln.strip()]
         ds = subset_columns(ds, names, match_prefix=args.match_prefix)
     if args.repartition:
-        ds = MatrixDataset(fact=ds.fact.repartition(args.repartition), cols=ds.cols)
+        ds = replace(ds, fact=ds.fact.repartition(args.repartition))
     write_matrix(ds, args.out)
     print(f"wrote {args.out}: {ds.fact.count()} rows x {ds.n_features} features")
 

@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .scoring import score_model
 from .train import predict_gbt
 
@@ -28,9 +29,8 @@ from .train import predict_gbt
 def feature_importances(model, cols: DataFrame) -> DataFrame:
     """T6 (explain.py:46-60): importance table keyed by SNP name."""
     imp = model.featureImportances.toArray()
-    spark = cols.sparkSession
-    imp_df = spark.createDataFrame(
-        [(int(i), float(v)) for i, v in enumerate(imp)], "pos int, gain double"
+    imp_df = local_frame(
+        cols.sparkSession, {"pos": list(range(len(imp))), "gain": imp.tolist()}, "pos int, gain double"
     )
     return cols.join(imp_df, "pos", "left").na.fill({"gain": 0.0}).select(
         F.col("snp").alias("predictors"), "gain"
@@ -80,7 +80,7 @@ def permutation_importance(
         .groupBy("__dst")
         .agg(F.first("__donor_feats").alias("__donor_feats"))
     )
-    rows = []
+    mean_abs = []
     joined = (
         df.join(donor, df["row_idx"] == F.col("__dst"), "left")
         .withColumn("__donor_feats", F.coalesce("__donor_feats", F.col(features_col)))
@@ -98,9 +98,10 @@ def permutation_importance(
         )
         s = score_model(predict_gbt(model, permuted, features_col, label_col), metric, label_col)
         drop = (base - s) if metric.upper() != "RMSE" else (s - base)
-        rows.append((pos, float(drop)))
+        mean_abs.append(float(drop))
     joined.unpersist()
 
-    spark = df.sparkSession
-    drops = spark.createDataFrame(rows, "pos int, shap_mean_abs double")
+    drops = local_frame(
+        df.sparkSession, {"pos": positions, "shap_mean_abs": mean_abs}, "pos int, shap_mean_abs double"
+    )
     return cols.join(drops, "pos").select(F.col("snp").alias("predictors"), "shap_mean_abs")

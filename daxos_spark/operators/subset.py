@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.plink import MatrixDataset
+from ..session import local_frame
+from ..sources.plink import COLS_SCHEMA, MatrixDataset
 
 _EXPR_GATHER_MAX = 1024
 
@@ -34,17 +35,15 @@ def subset_rows_by_ids(fact: DataFrame, ids: DataFrame, keep: bool = True) -> Da
     return fact.join(id_side, fact["iid"] == F.col("__subset_iid"), how)
 
 
-def _positions_for(cols: DataFrame, names: list[str], match_prefix: bool) -> list[int]:
-    """P2 name matching (read.py:210-215): SNP names are `rs<id>_<allele>`;
-    subsetting matches on the prefix before '_' when match_prefix."""
+def _positions_for(name_by_pos: dict[int, str], names: list[str], match_prefix: bool) -> list[int]:
+    """P2 name matching (read.py:210-215) over the collected cols dim:
+    SNP names are `rs<id>_<allele>`; subsetting matches on the prefix
+    before '_' when match_prefix."""
     if match_prefix:
         wanted = {n.split("_")[0] for n in names}
-        rows = cols.withColumn("__pfx", F.split(F.col("snp"), "_")[0]).filter(
-            F.col("__pfx").isin(list(wanted))
-        )
-    else:
-        rows = cols.filter(F.col("snp").isin(names))
-    return [r["pos"] for r in rows.select("pos").orderBy("pos").collect()]
+        return sorted(p for p, snp in name_by_pos.items() if snp.split("_")[0] in wanted)
+    wanted = set(names)
+    return sorted(p for p, snp in name_by_pos.items() if snp in wanted)
 
 
 def subset_columns(
@@ -55,11 +54,11 @@ def subset_columns(
 ) -> MatrixDataset:
     """P2/P3 column projection by SNP name; returns new dataset with
     re-indexed cols dim (positions 0..k-1, original names)."""
-    pos = _positions_for(ds.cols, names, match_prefix)
+    name_by_pos = {r["pos"]: r["snp"] for r in ds.cols.collect()}
+    pos = _positions_for(name_by_pos, names, match_prefix)
     if not pos:
         raise ValueError("no columns matched")
     spark = ds.fact.sparkSession
-    name_by_pos = {r["pos"]: r["snp"] for r in ds.cols.collect()}
 
     if len(pos) <= _EXPR_GATHER_MAX:
         gathered = F.array(*[F.element_at(F.col(features_col), p + 1) for p in pos])
@@ -67,7 +66,7 @@ def subset_columns(
     else:
         # explode → filter positions (broadcast semi-join) → reassemble
         # ordered by original pos. Scales to any k; one shuffle on row_idx.
-        pos_df = F.broadcast(spark.createDataFrame([(p,) for p in pos], "pos int"))
+        pos_df = F.broadcast(local_frame(spark, {"pos": pos}, "pos int"))
         other = [c for c in ds.fact.columns if c != features_col]
         exploded = ds.fact.select(*other, F.posexplode(features_col).alias("pos", "__v"))
         kept = exploded.join(pos_df, "pos", "left_semi")
@@ -78,10 +77,10 @@ def subset_columns(
             .drop("__pv")
         )
 
-    new_cols = spark.createDataFrame(
-        [(i, name_by_pos[p]) for i, p in enumerate(pos)], "pos int, snp string"
+    new_cols = local_frame(
+        spark, {"pos": list(range(len(pos))), "snp": [name_by_pos[p] for p in pos]}, COLS_SCHEMA
     )
-    return MatrixDataset(fact=fact, cols=new_cols)
+    return MatrixDataset(fact=fact, cols=new_cols, width=len(pos))
 
 
 def head_subsample(fact: DataFrame, n: int) -> DataFrame:

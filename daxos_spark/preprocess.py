@@ -21,13 +21,14 @@ shape of the reference's file-per-rule DAG.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .ml.deconfound import deconfound
 from .operators.splits import seeded_id_split
-from .sources.plink import MatrixDataset, read_matrix, read_plink_raw, write_matrix
+from .sources.plink import read_matrix, read_plink_raw, write_matrix
 from .sources.tables import read_covars
 
 
@@ -54,9 +55,9 @@ def run_preprocessing(
     # ---- bronze: ingest + seeded shuffle-at-rest
     ds = read_plink_raw(spark, raw_path, shuffle_seed=seed)
     bronze = f"{out_dir}/bronze"
-    write_matrix(ds, bronze)
+    fact, n_total = _counted(ds.fact)
+    write_matrix(replace(ds, fact=fact), bronze)
     ds = read_matrix(spark, bronze)  # re-read: downstream plans scan parquet
-    n_total = ds.fact.count()
 
     # ---- silver: disjoint seeded ID split
     train, test = seeded_id_split(ds.fact, train_frac=train_frac, seed=seed)
@@ -70,15 +71,24 @@ def run_preprocessing(
 
     train_gold = f"{out_dir}/gold_train"
     test_gold = f"{out_dir}/gold_test"
-    write_matrix(MatrixDataset(train_adj, ds.cols), train_gold)
-    write_matrix(MatrixDataset(test_adj, ds.cols), test_gold)
+    train_adj, n_train = _counted(train_adj)
+    test_adj, n_test = _counted(test_adj)
+    write_matrix(replace(ds, fact=train_adj), train_gold)
+    write_matrix(replace(ds, fact=test_adj), test_gold)
 
     return PreprocessResult(
         bronze=bronze,
         train_gold=train_gold,
         test_gold=test_gold,
-        n_total=n_total,
-        n_train=train_adj.count(),
-        n_test=test_adj.count(),
+        n_total=n_total.get["n"],
+        n_train=n_train.get["n"],
+        n_test=n_test.get["n"],
         n_features=ds.n_features,
     )
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed by the action that writes it,
+    so a layer's size costs no job that recomputes the layer."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs

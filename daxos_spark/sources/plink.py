@@ -26,6 +26,7 @@ from ..operators.indexing import shuffled_with_row_idx, with_row_idx
 from ..session import local_frame
 
 FAM_COLS = ("FID", "IID", "PAT", "MAT", "SEX", "PHENOTYPE")
+COLS_SCHEMA = "pos int, snp string"
 
 
 @dataclass
@@ -35,10 +36,11 @@ class MatrixDataset:
 
     fact: DataFrame
     cols: DataFrame  # (pos:int, snp:string)
+    width: int | None = None  # the cols row count, when the producer knows it
 
     @property
     def n_features(self) -> int:
-        return self.cols.count()
+        return self.cols.count() if self.width is None else self.width
 
 
 def read_plink_colnames(spark: SparkSession, path: str) -> list[str]:
@@ -96,8 +98,12 @@ def read_plink_raw(spark: SparkSession, path: str, shuffle_seed: int | None = No
     else:
         fact = with_row_idx(fact)
 
-    cols = local_frame(spark, {"pos": list(range(len(snp_names))), "snp": snp_names}, "pos int, snp string")
-    return MatrixDataset(fact=fact.select("row_idx", *[c.lower() for c in FAM_COLS], "label", "features"), cols=cols)
+    cols = local_frame(spark, {"pos": list(range(len(snp_names))), "snp": snp_names}, COLS_SCHEMA)
+    return MatrixDataset(
+        fact=fact.select("row_idx", *[c.lower() for c in FAM_COLS], "label", "features"),
+        cols=cols,
+        width=len(snp_names),
+    )
 
 
 def write_matrix(ds: MatrixDataset, path: str, mode: str = "overwrite") -> None:
@@ -109,10 +115,11 @@ def write_matrix(ds: MatrixDataset, path: str, mode: str = "overwrite") -> None:
 def read_matrix(spark: SparkSession, path: str) -> MatrixDataset:
     """S5-S7 combined scan + validation (read.py:99-124)."""
     fact = spark.read.parquet(f"{path}/fact.parquet")
-    cols = spark.read.parquet(f"{path}/cols.parquet")
+    # the cols dim has one fixed schema; inferring it would cost a job
+    cols = spark.read.schema(COLS_SCHEMA).parquet(f"{path}/cols.parquet")
     # cardinality agreement asserts (read.py:103-105) — cheap: one row
     n_feat = cols.count()
     width = fact.select(F.size("features").alias("w")).limit(1).collect()
     if width and width[0]["w"] != n_feat:
         raise ValueError(f"features width {width[0]['w']} != cols table {n_feat}")
-    return MatrixDataset(fact=fact, cols=cols)
+    return MatrixDataset(fact=fact, cols=cols, width=n_feat)

@@ -61,6 +61,12 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "ml/deconfound.py:standardize_covars": (1, "1-row mean/std aggregate"),
     "ml/explain.py:used_features": (1, "p-length column name list"),
     "ml/explain.py:permutation_importance": (1, "p-length position list"),
+    "ml/scale.py:fit_platt": (
+        1,
+        "grouped OOF (score, rows, positives) table: one row per distinct "
+        "score, so at most the CV rows the OOF came from - the reference "
+        "holds the same OOF vector on its driver (daxos/scale.py:8-30)",
+    ),
     "ml/train.py:_xgb_continue": (
         1,
         "documented <8GiB fast-path training-matrix collect, byte-guarded "
@@ -92,8 +98,9 @@ ALLOWED: dict[str, tuple[int, str]] = {
         "join+count changed-label job; labels are monotone so the sum "
         "is a complete convergence witness)",
     ),
-    "operators/subset.py:_positions_for": (1, "p-length kept-position list"),
-    "operators/subset.py:subset_columns": (1, "p-length name-by-position map"),
+    "operators/subset.py:subset_columns": (
+        1, "p-length (pos, snp) dim, collected once; name matching runs on it"
+    ),
     # -- plans: 1-row aggregates / per-round iterate picks -------------------
     "plans/analytics.py:q_bradley_terry": (
         1,

@@ -75,3 +75,20 @@ def test_calibration_identity_holds(spark):
         .collect()[0]
     )
     assert abs(out["mean_cal"] - pdf.k.sum() / pdf.n.sum()) < 1e-12
+
+
+def test_driver_fit_matches_on_expanded_rows(spark):
+    """``fit_platt`` regroups row-level OOF predictions into the same
+    table and lands on the same MLE as the relational core."""
+    from daxos_spark.ml.scale import fit_platt
+
+    pdf, g = _grouped(spark)
+    rows = [
+        (float(x), float(i < k))
+        for x, n, k in pdf.itertuples(index=False)
+        for i in range(int(n))
+    ]
+    model = fit_platt(spark.createDataFrame(rows, "y_pred double, label double"))
+    ref = newton_logistic_grouped(g, iters=8).collect()[0]
+    assert abs(model.coefficients[0] - ref["a"]) < 1e-9
+    assert abs(model.intercept - ref["b"]) < 1e-9
