@@ -120,8 +120,10 @@ def cmd_adjust(spark: SparkSession, args) -> None:
     --fit-out saves the train-fitted scaler stats + betas; --fit-in
     applies them to a test split (the train-scaler-reuse contract,
     scripts/adjust_hdf5_for_covariates.py:25-31)."""
+    from dataclasses import replace
+
     from .ml.deconfound import deconfound
-    from .sources.plink import MatrixDataset, read_matrix, write_matrix
+    from .sources.plink import read_matrix, write_matrix
     from .sources.tables import read_covars
 
     ds = read_matrix(spark, args.input)
@@ -138,7 +140,7 @@ def cmd_adjust(spark: SparkSession, args) -> None:
         ds.fact, covars, stats=stats,
         feature_betas=feature_betas, y_betas=y_betas,
     )
-    write_matrix(MatrixDataset(fact=adjusted, cols=ds.cols), args.out)
+    write_matrix(replace(ds, fact=adjusted), args.out)
     if args.fit_out:
         np.savez(args.fit_out + ".npz", feature_betas=fb, y_betas=yb)
         with open(args.fit_out + ".json", "w") as f:

@@ -80,7 +80,7 @@ def subset_columns(
     new_cols = local_frame(
         spark, {"pos": list(range(len(pos))), "snp": [name_by_pos[p] for p in pos]}, COLS_SCHEMA
     )
-    return MatrixDataset(fact=fact, cols=new_cols, width=len(pos))
+    return MatrixDataset(fact=fact, cols=new_cols, n_features=len(pos))
 
 
 def head_subsample(fact: DataFrame, n: int) -> DataFrame:

@@ -36,11 +36,7 @@ class MatrixDataset:
 
     fact: DataFrame
     cols: DataFrame  # (pos:int, snp:string)
-    width: int | None = None  # the cols row count, when the producer knows it
-
-    @property
-    def n_features(self) -> int:
-        return self.cols.count() if self.width is None else self.width
+    n_features: int  # the cols row count
 
 
 def read_plink_colnames(spark: SparkSession, path: str) -> list[str]:
@@ -102,7 +98,7 @@ def read_plink_raw(spark: SparkSession, path: str, shuffle_seed: int | None = No
     return MatrixDataset(
         fact=fact.select("row_idx", *[c.lower() for c in FAM_COLS], "label", "features"),
         cols=cols,
-        width=len(snp_names),
+        n_features=len(snp_names),
     )
 
 
@@ -122,4 +118,4 @@ def read_matrix(spark: SparkSession, path: str) -> MatrixDataset:
     width = fact.select(F.size("features").alias("w")).limit(1).collect()
     if width and width[0]["w"] != n_feat:
         raise ValueError(f"features width {width[0]['w']} != cols table {n_feat}")
-    return MatrixDataset(fact=fact, cols=cols, width=n_feat)
+    return MatrixDataset(fact=fact, cols=cols, n_features=n_feat)
