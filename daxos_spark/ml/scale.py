@@ -3,12 +3,12 @@ run_cv_and_platt_scale, daxos/utils.py:41-49 yhat).
 
 Fit: unpenalized logistic regression of out-of-fold predictions onto
 the binary label (exactly the reference's
-LogisticRegression(penalty=None) on stacked OOF preds). One aggregate
-reduces the OOF to a (score, rows, positives) table with a row per
-distinct score — never more rows than the CV rows the OOF came from,
-which the reference holds on its driver as one vector — and the driver
-fits (a, b) by Newton's method on that table's exact log-likelihood.
-Apply: one native column, sigmoid(a * y_pred + b).
+LogisticRegression(penalty=None) on stacked OOF preds). The OOF goes
+through ``scoring.score_groups``, the reduction ``score_auc`` reads: a
+(score, rows, positives) table, a row per distinct score, never more
+than the CV rows the OOF came from (the reference holds them on its
+driver). The driver fits (a, b) by Newton's method on that table's
+exact log-likelihood. Apply: one native column, sigmoid(a * y_pred + b).
 
 Measured in a cold ``geno`` pass on 4 vCPU: MLlib's LBFGS
 LogisticRegression took about 3 s and 6 jobs for this 2-parameter fit,
@@ -26,6 +26,8 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .scoring import score_groups
 
 _MAX_ITER = 100
 _TOL = 1e-12
@@ -47,29 +49,13 @@ def fit_platt(oof: DataFrame, label_col: str = "label", pred_col: str = "y_pred"
     one-class OOF gives a = 0 and b = ±inf, a constant score gives
     a = 0 and b = logit(base rate). A null or NaN label, a label other
     than 0/1, or a null or NaN score raises ``ValueError``."""
-    y = F.col(label_col).cast("double")
-    rows = (
-        oof.groupBy(F.col(pred_col).cast("double").alias("x"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(y).alias("k"),
-            F.count_if(y.isNull() | F.isnan(y)).alias("n_null"),
-            F.count_if(~y.isin(0.0, 1.0)).alias("n_other"),
-        )
-        .collect()
-    )
-    if not rows:
+    g = score_groups(oof, label_col, pred_col)
+    if g.null_labels:
+        raise ValueError(f"Platt fit: {g.null_labels} OOF rows have a null or NaN label")
+    g.check_binary("Platt fit", "OOF")
+    if not g.x:
         raise ValueError("Platt fit: the OOF has no rows")
-    n_null = sum(r["n_null"] for r in rows)
-    if n_null:
-        raise ValueError(f"Platt fit: {n_null} OOF rows have a null or NaN label")
-    n_other = sum(r["n_other"] for r in rows)
-    if n_other:
-        raise ValueError(f"Platt fit: {n_other} OOF labels are not 0 or 1")
-    bad_x = sum(r["n"] for r in rows if r["x"] is None or math.isnan(r["x"]))
-    if bad_x:
-        raise ValueError(f"Platt fit: {bad_x} OOF rows have a null or NaN score")
-    x, n, k = (np.array([float(r[c]) for r in rows]) for c in ("x", "n", "k"))
+    x, n, k = (np.array(v, dtype=float) for v in (g.x, g.n, g.k))
     a, b = _newton_grouped(x, n, k)
     return PlattModel(coefficients=(a,), intercept=b)
 

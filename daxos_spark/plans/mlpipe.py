@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..ml.scoring import score_auc
+from ..ml.scoring import auc_of, score_auc, score_groups
 from ..ml.train import GBTParams, fit_gbt, predict_gbt
 from .registry import QuerySpec, checkpoint_release, register
 
@@ -2090,12 +2090,12 @@ def ml_continuation_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     "core of a2_gbt_train_eval's eval stage (A5, reference "
     "crossvalidate.py:130-145), hash-checked where the binned MLlib "
     "evaluator cannot be; scores are md5%1024 so tie blocks are "
-    "exercised for real. pytest ties auc_exact to score_auc on the "
-    "same frame (trapezoid == tie-averaged Mann-Whitney)",
+    "exercised for real. It is score_auc's own arithmetic; pytest ties "
+    "it to MLlib's evaluator on a tied frame (trapezoid == Mann-Whitney)",
 )
 def ml_auc_exact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
-    from ..ml.scoring import auc_exact
+    from ..session import local_frame
 
     e = load_tables(spark, sf_dir)["embeddings"].filter(F.col("vec_id") < 2000)
     scored = e.select(
@@ -2105,6 +2105,8 @@ def ml_auc_exact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1024),
         ).cast("double").alias("y_pred"),
     )
-    return auc_exact(scored).select(
+    g = score_groups(scored)
+    row = {"n_pos": [sum(g.k)], "n_neg": [sum(g.n) - sum(g.k)], "auc": [auc_of(g)]}
+    return local_frame(spark, row, "n_pos bigint, n_neg bigint, auc double").select(
         "n_pos", "n_neg", trunc6(F.col("auc")).alias("auc")
     )

@@ -14,40 +14,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_covars(
-    spark: SparkSession,
-    path: str,
-    sep: str = "\t",
-    validate: bool = True,
-) -> DataFrame:
-    """S8 covariate scan: header row, FID/IID + numeric covariates.
-
+def read_covars(spark: SparkSession, path: str, sep: str = "\t") -> DataFrame:
+    """S8 covariate scan: header row, FID/IID + numeric covariates, read
+    as strings (no inference pass: an ID ``001`` stays ``001``) and the
+    covariates ``try_cast`` to double (an ``NA`` cell is a null).
     Validation mirrors check_covars (split_ids.py:18-28): unique FID,
-    unique IID, no nulls anywhere.
-    """
-    df = (
-        spark.read.option("sep", sep)
-        .option("header", True)
-        .option("inferSchema", True)
-        .csv(path)
-    )
-    df = df.select(
-        F.col("FID").cast("string"),
-        F.col("IID").cast("string"),
-        *[F.col(c).cast("double") for c in df.columns if c not in ("FID", "IID")],
-    )
-    if validate:
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("FID").alias("n_fid"),
-            F.countDistinct("IID").alias("n_iid"),
-            *[F.sum(F.col(c).isNull().cast("int")).alias(f"null_{c}") for c in df.columns],
-        ).collect()[0]
-        if stats["n_fid"] != stats["n"] or stats["n_iid"] != stats["n"]:
-            raise ValueError("covariate FID/IID must be unique (check_covars)")
-        bad = [c for c in df.columns if stats[f"null_{c}"] > 0]
-        if bad:
-            raise ValueError(f"covariate table contains nulls in {bad}")
+    unique IID, no nulls anywhere."""
+    raw = spark.read.option("sep", sep).option("header", True).csv(path)
+    df = raw.select("FID", "IID", *[F.col(c).try_cast("double").alias(c) for c in covar_columns(raw)])
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("FID").alias("n_fid"),
+        F.countDistinct("IID").alias("n_iid"),
+        *[F.sum(F.col(c).isNull().cast("int")).alias(f"null_{c}") for c in df.columns],
+    ).collect()[0]
+    if stats["n_fid"] != stats["n"] or stats["n_iid"] != stats["n"]:
+        raise ValueError("covariate FID/IID must be unique (check_covars)")
+    bad = [c for c in df.columns if stats[f"null_{c}"] > 0]
+    if bad:
+        raise ValueError(f"covariate table contains nulls in {bad}")
     return df
 
 

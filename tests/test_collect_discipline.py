@@ -61,12 +61,14 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "ml/deconfound.py:standardize_covars": (1, "1-row mean/std aggregate"),
     "ml/explain.py:used_features": (1, "p-length column name list"),
     "ml/explain.py:permutation_importance": (1, "p-length position list"),
-    "ml/scale.py:fit_platt": (
+    "ml/scoring.py:score_groups": (
         1,
-        "grouped OOF (score, rows, positives) table: one row per distinct "
-        "score, so at most the CV rows the OOF came from - the reference "
-        "holds the same OOF vector on its driver (daxos/scale.py:8-30)",
+        "grouped (score, rows, positives) table that score_auc, fit_platt "
+        "and ml_auc_exact_audit read: one row per distinct score, so at "
+        "most the rows scored - the reference scores y_true/y_pred on its "
+        "driver (daxos/crossvalidate.py:130-145)",
     ),
+    "ml/scoring.py:_regression_sums": (1, "1-row count / SSE / var_pop aggregate"),
     "ml/train.py:_xgb_continue": (
         1,
         "documented <8GiB fast-path training-matrix collect, byte-guarded "

@@ -88,13 +88,15 @@ def test_simhash_corpus_index_bucket_cap(spark):
 
 
 def test_auc_exact_matches_mllib_evaluator(spark):
-    """auc_exact (integer Mann-Whitney, tie-averaged ranks) == the
-    MLlib evaluator's trapezoid AUC in the no-binning regime — the link
-    that lets the hash-checked audit stand in for score_auc's metric
-    arithmetic. Exercises ties (md5 % 64 over 500 rows)."""
+    """The exact AUC behind ml_auc_exact_audit and score_auc (integer
+    Mann-Whitney, tie-averaged ranks) == MLlib's
+    BinaryClassificationEvaluator trapezoid AUC in its no-binning regime
+    (< 1000 distinct scores). Exercises ties (md5 % 64 over 500 rows)."""
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
     from daxos_spark.catalog import load_tables
     from daxos_spark.functions.hashing import md5_long
-    from daxos_spark.ml.scoring import auc_exact, score_auc
+    from daxos_spark.ml.scoring import auc_of, score_groups
 
     e = load_tables(spark, SF_DIR)["embeddings"].filter(F.col("vec_id") < 500)
     scored = e.select(
@@ -104,9 +106,12 @@ def test_auc_exact_matches_mllib_evaluator(spark):
             F.lit(64),
         ).cast("double").alias("y_pred"),
     ).cache()
-    row = auc_exact(scored).first()
-    assert row["n_pos"] + row["n_neg"] == 500
-    assert abs(row["auc"] - score_auc(scored)) < 1e-9
+    g = score_groups(scored)
+    assert sum(g.n) == 500
+    oracle = BinaryClassificationEvaluator(
+        labelCol="label", rawPredictionCol="y_pred", metricName="areaUnderROC"
+    ).evaluate(scored)
+    assert abs(auc_of(g) - oracle) < 1e-9
     scored.unpersist()
 
 

@@ -174,6 +174,30 @@ def test_covars_read_and_validation(spark, covars_path, tmp_path):
         read_covars(spark, str(bad))
 
 
+def test_covars_keep_ids_as_written(spark, tmp_path):
+    """IDs are strings as written: ``001`` must still match a PLINK iid
+    of ``001`` (schema inference would read it as the integer 1)."""
+    from daxos_spark.sources.tables import read_covars
+
+    path = tmp_path / "cov.tsv"
+    path.write_text("FID\tIID\tCOV1\tCOV2\n001\t001\t0.5\t2\n002\t0020\t-1.25\t3\n")
+    cov = read_covars(spark, str(path))
+    assert [(f.name, f.dataType.simpleString()) for f in cov.schema.fields] == [
+        ("FID", "string"), ("IID", "string"), ("COV1", "double"), ("COV2", "double")
+    ]
+    assert sorted(map(tuple, cov.collect())) == [("001", "001", 0.5, 2.0), ("002", "0020", -1.25, 3.0)]
+
+
+@pytest.mark.parametrize("cell", ["NA", "abc", ""])
+def test_covars_non_numeric_cell_is_a_named_null_error(spark, tmp_path, cell):
+    from daxos_spark.sources.tables import read_covars
+
+    path = tmp_path / "cov.tsv"
+    path.write_text(f"FID\tIID\tCOV1\tCOV2\nf1\ti1\t0.5\t1\nf2\ti2\t{cell}\t2\n")
+    with pytest.raises(ValueError, match=r"contains nulls in \['COV1'\]"):
+        read_covars(spark, str(path))
+
+
 def test_id_list_and_hp_results(spark, tmp_path):
     from daxos_spark.sources.tables import best_hp_row, read_hp_results, read_id_list
 
