@@ -183,6 +183,8 @@ def cmd_refit(spark: SparkSession, args) -> None:
     """refit.py: best-HP full fit → model-driven column pruning →
     refit on the pruned matrix (the fit→prune→refit strategy,
     refit.py:62-90) → model + used_cols.csv + importances.csv."""
+    import pandas as pd
+
     from .ml.explain import feature_importances, used_features
     from .ml.scoring import score_model
     from .ml.train import fit_gbt, predict_gbt, save_model
@@ -207,7 +209,7 @@ def cmd_refit(spark: SparkSession, args) -> None:
     model2 = fit_gbt(pruned.fact, params, args.features_col, args.label_col)
 
     save_model(model2, f"{args.out_prefix}_model")
-    _write_small_csv(pruned.cols.select("snp"), f"{args.out_prefix}_used_cols.csv")
+    pd.DataFrame({"snp": pruned.cols}).to_csv(f"{args.out_prefix}_used_cols.csv", index=False)
     _write_small_csv(
         feature_importances(model2, pruned.cols).orderBy(F.col("gain").desc()),
         f"{args.out_prefix}_importances.csv",
@@ -234,7 +236,7 @@ def cmd_predict(spark: SparkSession, args) -> None:
 
     ds = read_matrix(spark, args.input)
     used = list(pd.read_csv(args.used_cols)["snp"])
-    if [r["snp"] for r in ds.cols.orderBy("pos").collect()] != used:
+    if ds.cols != used:
         ds = subset_columns(ds, used, match_prefix=False, features_col=args.features_col)
 
     classification = not _infer_mode(args.label_col, args.objective).startswith("reg")
@@ -302,10 +304,9 @@ def cmd_boruta(spark: SparkSession, args) -> None:
     from .sources.plink import read_matrix
 
     ds = read_matrix(spark, args.input)
-    names = [r["snp"] for r in ds.cols.orderBy("pos").collect()]
     res = boruta(
         ds.fact,
-        names,
+        ds.cols,
         _params_from(args),
         max_iter=args.max_iter,
         percentile=args.percentile,
@@ -321,7 +322,7 @@ def cmd_boruta(spark: SparkSession, args) -> None:
         **{f: "tentative" for f in res.tentative},
     }
     pd.DataFrame(
-        {"predictors": names, "hits": res.hits, "decision": [decision[f] for f in names]}
+        {"predictors": ds.cols, "hits": res.hits, "decision": [decision[f] for f in ds.cols]}
     ).to_csv(args.out, index=False)
     print(f"accepted {len(res.accepted)}, rejected {len(res.rejected)}, "
           f"tentative {len(res.tentative)} -> {args.out}")

@@ -18,7 +18,7 @@ operators.subset.subset_columns. With xgboost.spark installed, its
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -26,29 +26,26 @@ from .scoring import score_model
 from .train import predict_gbt
 
 
-def feature_importances(model, cols: DataFrame) -> DataFrame:
+def feature_importances(model, cols: list[str]) -> DataFrame:
     """T6 (explain.py:46-60): importance table keyed by SNP name."""
     imp = model.featureImportances.toArray()
-    imp_df = local_frame(
-        cols.sparkSession, {"pos": list(range(len(imp))), "gain": imp.tolist()}, "pos int, gain double"
-    )
-    return cols.join(imp_df, "pos", "left").na.fill({"gain": 0.0}).select(
-        F.col("snp").alias("predictors"), "gain"
+    gain = [float(imp[p]) if p < len(imp) else 0.0 for p in range(len(cols))]
+    return local_frame(
+        SparkSession.active(), {"predictors": cols, "gain": gain}, "predictors string, gain double"
     )
 
 
-def used_features(model, cols: DataFrame) -> list[str]:
+def used_features(model, cols: list[str]) -> list[str]:
     """P3 model-driven pruning input (refit.py:62-74): features the
     booster actually used (nonzero importance)."""
     imp = model.featureImportances.toArray()
-    keep = {int(i) for i in np.nonzero(imp)[0]}
-    return [r["snp"] for r in cols.collect() if r["pos"] in keep]
+    return [cols[p] for p in np.flatnonzero(imp)]
 
 
 def permutation_importance(
     model,
     df: DataFrame,
-    cols: DataFrame,
+    cols: list[str],
     metric: str = "AUC",
     n_features: int | None = None,
     seed: int = 42,
@@ -65,9 +62,7 @@ def permutation_importance(
     """
     base = score_model(predict_gbt(model, df, features_col, label_col), metric, label_col)
     n = df.count()
-    positions = [r["pos"] for r in cols.orderBy("pos").collect()]
-    if n_features is not None:
-        positions = positions[:n_features]
+    names = cols[:n_features]
 
     # seeded-hash donor mapping is not a bijection — dedupe per
     # destination and fall back to the row's own features when no donor
@@ -87,7 +82,7 @@ def permutation_importance(
         .drop("__dst")
         .persist()
     )
-    for pos in positions:
+    for pos in range(len(names)):
         permuted = joined.withColumn(
             features_col,
             F.concat(
@@ -101,7 +96,5 @@ def permutation_importance(
         mean_abs.append(float(drop))
     joined.unpersist()
 
-    drops = local_frame(
-        df.sparkSession, {"pos": positions, "shap_mean_abs": mean_abs}, "pos int, shap_mean_abs double"
-    )
-    return cols.join(drops, "pos").select(F.col("snp").alias("predictors"), "shap_mean_abs")
+    drops = {"predictors": names, "shap_mean_abs": mean_abs}
+    return local_frame(df.sparkSession, drops, "predictors string, shap_mean_abs double")

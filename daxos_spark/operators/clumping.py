@@ -107,7 +107,7 @@ def snp_correlation_matrix(
 def ld_clump_r2(
     sumstats: DataFrame,
     matrix: DataFrame,
-    cols: DataFrame,
+    cols: list[str],
     r2_threshold: float = 0.75,
     window: int = 250_000,
     chrom_col: str = "chrom",
@@ -124,18 +124,18 @@ def ld_clump_r2(
     with that index SNP exceeds ``r2_threshold``.
 
     ``matrix`` is the engine's fact layout (``features array<float>``),
-    ``cols`` the (pos:int, snp:string) dim table mapping array slots to
-    SNP names. r² comes from ``snp_correlation_matrix`` — one
-    distributed Gram pass per chromosome; the greedy scan itself is the
-    intrinsically-sequential part and runs on the driver over
-    p_c-length vectors (same split as the reference, which hands the
-    whole problem to single-node plink).
+    ``cols`` the SNP names of its array slots (``MatrixDataset.cols``:
+    ``cols[i]`` names ``features[i]``). r² comes from
+    ``snp_correlation_matrix`` — one distributed Gram pass per
+    chromosome; the greedy scan itself is the intrinsically-sequential
+    part and runs on the driver over p_c-length vectors (same split as
+    the reference, which hands the whole problem to single-node plink).
     """
     import numpy as np
     import pandas as pd
 
     stats = sumstats.toPandas()
-    slot_of = {r["snp"]: r["pos"] for r in cols.collect()}
+    slot_of = {snp: p for p, snp in enumerate(cols)}
     keep_frames = []
     for chrom, g in stats.groupby(chrom_col):
         g = g.sort_values([p_col, pos_col], kind="mergesort").reset_index(drop=True)

@@ -403,11 +403,8 @@ def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _binary_embeddings(spark, sf_dir, cap=2500).cache()
     train = df.filter(~F.col("is_test"))
     model = fit_gbt(train, GBTParams(eta=0.1, max_depth=3, n_boost_round=5, seed=42))
-    cols = spark.createDataFrame(
-        [(i, f"dim_{i}") for i in range(64)], "pos int, snp string"
-    )
     return (
-        feature_importances(model, cols)
+        feature_importances(model, [f"dim_{i}" for i in range(64)])
         .select("predictors", F.round("gain", 4).alias("gain"))
         .orderBy(F.col("gain").desc(), "predictors")
         .limit(10)
@@ -1375,9 +1372,6 @@ def ml_ld_clump_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda p: F.pmod(F.col("vec_id") + 7 * p, F.lit(3)).cast("double"),
         ).alias("features"),
     )
-    cols = spark.createDataFrame(
-        [(p, f"s{p}") for p in range(64)], "pos int, snp string"
-    )
     sumstats = spark.createDataFrame(
         [
             (int(p % 4), int((p * 9973) % 500000), float((p * 37) % 64), f"s{p}", int(p))
@@ -1388,7 +1382,7 @@ def ml_ld_clump_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = ld_clump_r2(
         sumstats,
         matrix,
-        cols,
+        [f"s{p}" for p in range(64)],
         r2_threshold=_CLR2_THR,
         window=_CLR2_WINDOW,
     )

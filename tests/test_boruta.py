@@ -44,7 +44,7 @@ def test_boruta_accepts_signal_rejects_noise(matrix_ds):
     from daxos_spark.ml.boruta import boruta
     from daxos_spark.ml.train import GBTParams
 
-    names = [r["snp"] for r in matrix_ds.cols.orderBy("pos").collect()]
+    names = matrix_ds.cols
     res = boruta(
         matrix_ds.fact,
         names,

@@ -91,9 +91,7 @@ def test_r2_clump_matches_bruteforce(spark):
         pd.DataFrame({"features": [row.tolist() for row in x]}),
         schema="features array<double>",
     ).repartition(4)
-    cols = spark.createDataFrame(
-        pd.DataFrame({"pos": range(p), "snp": [f"rs{j}" for j in range(p)]})
-    )
+    cols = [f"rs{j}" for j in range(p)]
     got = {
         r["snp"]
         for r in ld_clump_r2(

@@ -41,14 +41,14 @@ ALLOWED: dict[str, tuple[int, str]] = {
         "CSV sink for summary-sized outputs only (CV scores, importances, "
         "clump picks - reference S16 writes the same driver-side tables)",
     ),
-    "cli.py:cmd_boruta": (1, "p-length kept-column name list"),
-    "cli.py:cmd_predict": (1, "p-length column name list"),
     # -- sources: 1-row probes / validation ---------------------------------
     "sources/plink.py:read_plink_colnames": (1, "single header line (limit 1)"),
     "sources/plink.py:read_plink_raw": (
         1, "1-row recode-guard aggregate (max, non-1/2 and wrong-width counts)"
     ),
-    "sources/plink.py:read_matrix": (1, "1-row feature-width probe (limit 1)"),
+    "sources/plink.py:read_matrix": (
+        2, "p-length name dim, the reference's in-memory `cols`; 1-row feature-width probe (limit 1)"
+    ),
     "sources/tables.py:read_covars": (1, "1-row uniqueness-validation aggregate"),
     "sources/tables.py:best_hp_row": (1, "1-row arg-best (order+limit 1)"),
     # -- ml: gramian / coefficient collects (reference M-family design) -----
@@ -59,8 +59,6 @@ ALLOWED: dict[str, tuple[int, str]] = {
         "the same beta matrix",
     ),
     "ml/deconfound.py:standardize_covars": (1, "1-row mean/std aggregate"),
-    "ml/explain.py:used_features": (1, "p-length column name list"),
-    "ml/explain.py:permutation_importance": (1, "p-length position list"),
     "ml/scoring.py:score_groups": (
         1,
         "grouped (score, rows, positives) table that score_auc, fit_platt "
@@ -86,9 +84,9 @@ ALLOWED: dict[str, tuple[int, str]] = {
         "sumstats panel, reference Q2 design)",
     ),
     "operators/clumping.py:ld_clump_r2": (
-        2,
-        "p-length sumstats panel + p-length column-slot map (greedy clump "
-        "order is inherently sequential over p SNPs, never over samples)",
+        1,
+        "p-length sumstats panel (greedy clump order is inherently "
+        "sequential over p SNPs, never over samples)",
     ),
     "operators/indexing.py:with_row_idx": (
         1,
@@ -99,9 +97,6 @@ ALLOWED: dict[str, tuple[int, str]] = {
         "1-row Σlabel convergence aggregate (replaces the per-round "
         "join+count changed-label job; labels are monotone so the sum "
         "is a complete convergence witness)",
-    ),
-    "operators/subset.py:subset_columns": (
-        1, "p-length (pos, snp) dim, collected once; name matching runs on it"
     ),
     # -- plans: 1-row aggregates / per-round iterate picks -------------------
     "plans/analytics.py:q_bradley_terry": (

@@ -272,17 +272,17 @@ def test_platt_separable_oof_stops_finite(spark):
     assert cal[0] < 0.5 < cal[-1]
 
 
-def test_subset_columns_collects_the_dim_once(spark, matrix_ds, tmp_path):
+def test_subset_columns_runs_no_job(spark, matrix_ds, tmp_path):
     from daxos_spark.operators.subset import subset_columns
     from daxos_spark.sources.plink import read_matrix, write_matrix
 
     write_matrix(matrix_ds, str(tmp_path / "ds"))
     ds = read_matrix(spark, str(tmp_path / "ds"))
-    names = [r["snp"] for r in ds.cols.orderBy("pos").collect()]
+    names = ds.cols
     sub, n_jobs = _jobs(spark, lambda: subset_columns(ds, names[3:7], match_prefix=False))
-    assert n_jobs <= 1
+    assert n_jobs == 0
     assert sub.n_features == 4
-    assert [r["snp"] for r in sub.cols.orderBy("pos").collect()] == names[3:7]
+    assert sub.cols == names[3:7]
 
 
 def test_feature_importances_and_pruning(matrix_ds, trained):
@@ -292,11 +292,21 @@ def test_feature_importances_and_pruning(matrix_ds, trained):
     imp = feature_importances(model, matrix_ds.cols)
     assert imp.count() == matrix_ds.n_features
     top = imp.orderBy(F.col("gain").desc()).limit(2).collect()
-    signal = {r["snp"] for r in matrix_ds.cols.filter(F.col("pos") >= 10).collect()}
+    signal = set(matrix_ds.cols[10:])
     assert {r["predictors"] for r in top} == signal  # planted SNPs win
 
     used = used_features(model, matrix_ds.cols)
     assert set(used) >= signal
+
+
+def test_used_features_runs_no_job(spark, matrix_ds, trained):
+    from daxos_spark.ml.explain import used_features
+
+    model, _ = trained
+    used, n_jobs = _jobs(spark, lambda: used_features(model, matrix_ds.cols))
+    assert n_jobs == 0
+    imp = model.featureImportances.toArray()
+    assert used == [s for s, g in zip(matrix_ds.cols, imp) if g != 0.0]
 
 
 def test_permutation_importance_finds_signal(matrix_ds, trained):
@@ -305,7 +315,7 @@ def test_permutation_importance_finds_signal(matrix_ds, trained):
     model, _ = trained
     pi = permutation_importance(model, matrix_ds.fact, matrix_ds.cols, seed=5)
     rows = {r["predictors"]: r["shap_mean_abs"] for r in pi.collect()}
-    signal = [r["snp"] for r in matrix_ds.cols.filter(F.col("pos") >= 10).collect()]
+    signal = matrix_ds.cols[10:]
     noise_max = max(v for k, v in rows.items() if k not in signal)
     assert min(rows[s] for s in signal) > noise_max
 

@@ -121,15 +121,14 @@ def test_ingest_plan_does_not_grow_with_snp_count(spark, tmp_path):
 
 
 def test_genotype_path_small_frames_are_local(matrix_ds):
-    """The cols dim, the row-offset map and the beta row are JVM-local
-    relations: a Python-backed ``createDataFrame`` RDD would start
-    Python tasks on every action that scans it."""
+    """The row-offset map and the beta row are JVM-local relations: a
+    Python-backed ``createDataFrame`` RDD would start Python tasks on
+    every action that scans it."""
     from daxos_spark.ml.deconfound import residualize_features
 
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    assert plan(matrix_ds.cols).startswith("LocalRelation")
     fact = matrix_ds.fact.withColumn("C", F.lit(1.0))
     adj = plan(residualize_features(fact, ["C"], np.zeros((2, matrix_ds.n_features))))
     assert "LocalRelation" in adj and "LogicalRDD" not in adj
@@ -153,9 +152,48 @@ def test_parquet_roundtrip(spark, matrix_ds, tmp_path):
     back = read_matrix(spark, str(tmp_path / "ds"))
     assert back.fact.count() == matrix_ds.fact.count()
     assert back.n_features == matrix_ds.n_features
+    assert back.cols == matrix_ds.cols
     a = matrix_ds.fact.orderBy("row_idx").select("iid", "features").collect()
     b = back.fact.orderBy("row_idx").select("iid", "features").collect()
     assert a == b
+
+
+def test_read_matrix_job_count(spark, matrix_ds, tmp_path):
+    from test_ml import _jobs
+
+    from daxos_spark.sources.plink import read_matrix, write_matrix
+
+    write_matrix(matrix_ds, str(tmp_path / "ds"))
+    back, n_jobs = _jobs(spark, lambda: read_matrix(spark, str(tmp_path / "ds")))
+    assert n_jobs <= 3
+    assert back.cols == matrix_ds.cols
+
+
+@pytest.mark.parametrize(
+    "pos",
+    [[0, 1, 1, 3], [0, 1, 2, 4], [1, 2, 3, 4], [0, 1, None, 3]],
+    ids=["duplicate", "gap", "not-from-0", "null"],
+)
+def test_read_matrix_rejects_a_bad_name_dim(spark, matrix_ds, tmp_path, pos):
+    """The (pos, snp) dim comes from disk: its positions must be exactly
+    0..p-1. Each bad dim here has p rows and a p-wide fact, so only the
+    position check can catch it."""
+    from daxos_spark.sources.plink import COLS_SCHEMA, read_matrix
+
+    path = str(tmp_path / "ds")
+    matrix_ds.fact.withColumn("features", F.slice("features", 1, 4)).write.parquet(f"{path}/fact.parquet")
+    spark.createDataFrame(list(zip(pos, "abcd")), COLS_SCHEMA).write.parquet(f"{path}/cols.parquet")
+    with pytest.raises(ValueError, match=r"cols.parquet: pos is not 0\.\.3"):
+        read_matrix(spark, path)
+
+
+def test_read_matrix_orders_the_name_dim_by_pos(spark, matrix_ds, tmp_path):
+    from daxos_spark.sources.plink import COLS_SCHEMA, read_matrix
+
+    path = str(tmp_path / "ds")
+    matrix_ds.fact.withColumn("features", F.slice("features", 1, 4)).write.parquet(f"{path}/fact.parquet")
+    spark.createDataFrame([(3, "d"), (1, "b"), (0, "a"), (2, "c")], COLS_SCHEMA).write.parquet(f"{path}/cols.parquet")
+    assert read_matrix(spark, path).cols == ["a", "b", "c", "d"]
 
 
 def test_covars_read_and_validation(spark, covars_path, tmp_path):
